@@ -1,9 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import graft.tools.TaskMetrics
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Queries are forced
@@ -13,57 +12,12 @@ import org.apache.spark.sql.SparkSession
   * comparable. */
 object Bench {
 
-  /** Executor-side counters accumulated from task-end events. Round 6's
-    * 1.73× bench regression (23 unchanged queries 2-42× slower under a
-    * load_avg-6.6 window) was unattributable from wall time alone; the
-    * split that answers it is wall vs executor CPU: contention inflates
-    * wall while CPU stays flat, a real code regression moves both.
-    * Task-end events are delivered asynchronously, so per-query deltas
-    * can lag a few ms — diagnostic precision, not accounting. */
-  private final class Counters extends SparkListener {
-    val runMs, cpuNs, gcMs, memSpill, diskSpill = new AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        runMs.addAndGet(m.executorRunTime)
-        cpuNs.addAndGet(m.executorCpuTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snap: Array[Long] =
-      Array(runMs.get, cpuNs.get, gcMs.get, memSpill.get, diskSpill.get)
-  }
-
-  /** The benchmark session configuration — shared with
-    * graft.tools.TimeOne so single-query timings predict full-bench
-    * timings (same extensions, shuffle partitions, AQE, timezone). */
+  /** The benchmark session: [[GraftSession]] plus cached base tables —
+    * a multi-query batch session reuses them, exactly the reference's
+    * CreateSoilMaps loop pattern (SURVEY §3). StageProbe times single
+    * queries in this same session. */
   def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // The 248-query battery carries far more distinct whole-stage
-      // codegen units than the default 100-entry compiled-class cache
-      // (p10 alone plans 104 leg sources): under the default, every
-      // query's units are evicted between reps and TASKS re-compile
-      // them concurrently — StageProbe measured p10's steady-state
-      // stage at 146 cpu-s vs 6.7 with a hit, a random 2-20× per-rep
-      // wall swing that twice masqueraded as noise windows. Static
-      // conf, read once at first codegen; sized to hold the whole
-      // suite's working set (metaspace cost ~a few hundred MB). The
-      // same cache exists per executor at scale — any long-lived
-      // session serving a wide query mix wants this over the default.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // multi-query batch session → reuse cached base tables, exactly the
-    // reference's CreateSoilMaps loop pattern (SURVEY §3)
+    val spark = GraftSession.build(cpus.toInt)
     Tables.enableCache()
     spark
   }
@@ -100,10 +54,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = session(cpus)
-    val counters = new Counters
-    spark.sparkContext.addSparkListener(counters)
+    val spark = session(GraftSession.envCpus.toString)
+    val metrics = new TaskMetrics
+    spark.sparkContext.addSparkListener(metrics)
 
     // Warmup: one pass of the WHOLE suite at the smallest SF (same
     // schemas → identical generated code → janino cache hits; JIT +
@@ -139,17 +92,17 @@ object Bench {
     // per-query wall/task/CPU/GC plus its load average ship alongside,
     // so a noisy record is self-diagnosing from the artifact alone.
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val allRuns: Seq[(Seq[QRec], Double, Array[Long])] = (1 to runs).map { _ =>
+    val allRuns: Seq[(Seq[QRec], Double, TaskMetrics.Sums)] = (1 to runs).map { _ =>
       val la = loadAvg
-      val s0 = counters.snap
+      val s0 = metrics.totals
       val recs = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-        val b = counters.snap
+        metrics.resetStages()
+        val b = metrics.totals
         val (wall, err) = timed(() => runNoop(spark, sfDir, name))
-        val a = counters.snap
-        (name, wall, (a(0) - b(0)) / 1e3, (a(1) - b(1)) / 1e9,
-          (a(2) - b(2)) / 1e3, err)
+        val d = metrics.totals - b
+        (name, wall, d.runMs / 1e3, d.cpuNs / 1e9, d.gcMs / 1e3, err)
       }
-      (recs, la, counters.snap.zip(s0).map { case (a, b) => a - b })
+      (recs, la, metrics.totals - s0)
     }
     val totals = allRuns.map(_._1.map(_._2).sum)
     val results = allRuns(totals.indexOf(totals.min))._1
@@ -194,8 +147,8 @@ object Bench {
         jstr(k) + s":[${r3(w)},${r3(t)},${r3(c)},${r3(g)}]"
       }.mkString("{", ",", "}")
       s"""{"total":${r3(recs.map(_._2).sum)},"load_avg":$la,""" +
-        s""""task_sec":${r3(d(0) / 1e3)},"cpu_sec":${r3(d(1) / 1e9)},""" +
-        s""""gc_sec":${r3(d(2) / 1e3)},"spill_mb":${r3((d(3) + d(4)) / 1e6)},""" +
+        s""""task_sec":${r3(d.runMs / 1e3)},"cpu_sec":${r3(d.cpuNs / 1e9)},""" +
+        s""""gc_sec":${r3(d.gcMs / 1e3)},"spill_mb":${r3(d.spillBytes / 1e6)},""" +
         s""""queries":$rq}"""
     }.mkString("[", ",", "]")
     // cache residency at end of the timed runs: eviction shows up as

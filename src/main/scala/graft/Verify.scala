@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,8 @@ object Verify {
     val nameFilter = args.lift(2).map(_.r)
     def keep(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tolerate the TIMESTAMP(NANOS) events vintage (read as long,
-      // converted in Tables.normalizeTs); harmless for MICROS lakes
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // suite-wide codegen working set > default 100-entry compiled
-      // class cache — see Bench.session for the measured pathology
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cold: base tables are read per query, never cached
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // Per-query failures are recorded in errors.json so a query that is
     // registered but absent from the dump is distinguishable from one

@@ -249,14 +249,6 @@ object Ann {
     probes.select(col("cid").cast("int")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
 
-  /** [[probedCids]] under the two-level probe rule — same bounded
-    * driver collect (≤ |batch|·nprobe ints), no corpus-shaped
-    * broadcast anywhere upstream. */
-  def probedCidsTwoLevel(batch: DataFrame, grouped: DataFrame,
-      gstep: Long, nprobe: Int, gprobe: Int): Seq[Int] =
-    cidsOf(probesTwoLevel(batch.select(col("vid"), col("vec")), grouped,
-      gstep, nprobe, gprobe))
-
   def knnGraph(corpus: DataFrame, centroids: DataFrame, k: Int): DataFrame = {
     val ca = ivfAssign(corpus, centroids)
     val scored = ca.as("a").join(ca.as("b"),

@@ -49,10 +49,6 @@ object Exprs {
   def nullSentinel(rating: Column, sentinel: Double): Column =
     coalesce(rating, lit(sentinel))
 
-  /** bZero / interpnullsaszerooptionflag: treat null ratings as zero
-    * (gSSURGO_CreateSoilMap.py:9747-9748, 5588-5593). */
-  def nullsAsZero(rating: Column): Column = coalesce(rating, lit(0.0))
-
   /** Exact-cents encoding used by the analog oracle queries: a 2-decimal
     * double becomes an integral double so downstream sums are exact in
     * IEEE754 and hash-comparable across engines. Uses the floor form

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
 import graft.Tables
 import graft.analog.OracleSql
 import graft.core.Exprs

@@ -691,9 +691,7 @@ object TrainQueries extends QuerySet {
       |sh AS (SELECT * FROM pshl UNION ALL SELECT * FROM pshs),
       |cnt AS (SELECT pid, count(*) AS n FROM sh GROUP BY pid)""".stripMargin
 
-  private val paraShingleCtes = paraShingleCtesOn(paraCtes)
-
-  /** [[paraShingleCtes]] over the PLANTED corpus (d10/d11 oracles). */
+  /** [[paraShingleCtesOn]] over the PLANTED corpus (d10/d11 oracles). */
   private val paraShingleCtesPlanted =
     paraShingleCtesOn(paraCtesOn(s"$plantCte,\n${pdCtesOn("dpl")}"))
 
@@ -714,7 +712,6 @@ object TrainQueries extends QuerySet {
        |          FROM cm JOIN cnt na ON id_a = na.pid JOIN cnt nb ON id_b = nb.pid
        |          WHERE CAST(c AS DOUBLE)/(na.n + nb.n - c) >= 0.6)""".stripMargin
 
-  private val paraPairsSql = paraPairsSqlOn(paraShingleCtes)
   private val paraPairsPlantedSql = paraPairsSqlOn(paraShingleCtesPlanted)
 
   /** mm04's planted WAV container: mono 8 kHz, three samples
@@ -4433,8 +4430,6 @@ object TrainQueries extends QuerySet {
     // index must equal n11's batch output — SAME oracle.
     Q("st06_index_add_stream",
       (s, dir) => {
-        import org.apache.spark.sql.DataFrame
-        import graft.ann.{Ann, Pq}
         import graft.streaming.Ingest
         // session-keyed root (the lshPairs convention): a dir-only path
         // lets a concurrent bench+verify process pair delete-and-rebuild
@@ -5262,7 +5257,6 @@ object TrainQueries extends QuerySet {
     // index-merge time — st06's job — and d09 gates that shape).
     Q("st11_stream_neardup",
       (s, dir) => {
-        import org.apache.spark.sql.DataFrame
         import graft.streaming.Ingest
         // session-keyed root — same rationale as st06/lshPairs
         val tmp = graft.io.TmpRoots.cleanupOnExit(

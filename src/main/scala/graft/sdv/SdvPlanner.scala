@@ -43,9 +43,10 @@ class SdvPlanner(
     * plan (measured on the 6-leg p09 sweep: five duplicate scan+join
     * map stages at ~2-3 cpu-s each). Off by default: a single
     * CreateSoilMap query consumes the join once, where materialization
-    * is pure overhead. */
+    * is pure overhead. Atomic per cutoff: concurrent plan() calls
+    * checkpoint a cutoff once, the rest block on that fill. */
   private val baseMemo =
-    scala.collection.concurrent.TrieMap.empty[Int, DataFrame]
+    new java.util.concurrent.ConcurrentHashMap[Int, DataFrame]
 
   /** child → (parent, join key) from the FK catalog. */
   private val parentOf: Map[String, (String, String)] =
@@ -132,16 +133,11 @@ class SdvPlanner(
     // and recomputed per leg (four lineitem scans measured on p09's
     // six-leg sweep); one blocking materialization is exactly what the
     // memo promises.
-    // getOrElseUpdate's by-name arg is non-atomic under concurrent
-    // plan() calls (two threads could each checkpoint and leak the
-    // loser's blocks); planners are driver-side and single-threaded
-    // today — guard creation if that ever changes.
-    var comp =
+    val comp =
       if (shareBase)
-        baseMemo.getOrElseUpdate(req.cutOff,
-          org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(compJoin))
+        baseMemo.computeIfAbsent(req.cutOff,
+          _ => org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(compJoin))
       else compJoin
-
 
     var joined: DataFrame = att.attributetablename match {
       case "component" => comp

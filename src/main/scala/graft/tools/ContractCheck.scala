@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Planted-fixture contract gate for the sf1 execute-only battery rows
@@ -212,11 +212,7 @@ object ContractCheck {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val jsonOut = args.lift(1).getOrElse(s"$outDir/contracts.json")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     val results = contracts.toSeq.sortBy(_._1).flatMap { case (name, check) =>
       val path = s"$outDir/$name"
       if (!Files.exists(Paths.get(path))) None

@@ -1,86 +1,41 @@
 package graft.tools
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-
-/** Per-stage timing main: like [[TimeOne]] but prints one line per
-  * completed stage — task-run / executor-CPU / GC / fetch-wait /
-  * shuffle bytes / spill — so a wall-vs-cpu gap can be attributed to a
-  * specific exchange or scan instead of guessed at (guide §7.1's stage
-  * page, reconstructed from listener events for the UI-less bench
-  * environment). Args: query names; SPARK_GRAFT_REPS reps each (default
-  * 2; stages print for the LAST rep only, steady state). */
+/** Single-query timing main in graft.Bench's exact session. Args: query
+  * names; each runs `SPARK_GRAFT_REPS` times (default 2 — the first rep
+  * pays JIT/planning). Every rep prints its totals (wall / task-run /
+  * CPU / GC / tasks / shuffle bytes); the LAST rep (every rep under
+  * `SPARK_GRAFT_PROBE_ALL=1`, to diff a slow rep against a fast one)
+  * then prints one line per stage — task-run / CPU / GC / fetch-wait /
+  * input / shuffle / spill — so a wall-vs-cpu gap is attributed to a
+  * specific exchange or scan (guide §7.1's stage page, rebuilt from
+  * listener events for the UI-less bench environment). */
 object StageProbe {
-
-  private final case class StageAgg(
-      var name: String = "",
-      var taskMs: Long = 0, var cpuNs: Long = 0, var gcMs: Long = 0,
-      var fetchWaitMs: Long = 0, var shRead: Long = 0, var shWrite: Long = 0,
-      var spill: Long = 0, var input: Long = 0, var nTasks: Int = 0,
-      var maxTaskMs: Long = 0)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = graft.Bench.session(cpus)
-    val stages = mutable.Map.empty[Int, StageAgg]
-    @volatile var record = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = if (record) {
-        val m = te.taskMetrics
-        if (m != null) {
-          // keyed by stageId only: a retried stage attempt's tasks sum
-          // into the same aggregate (fine for a local diagnostics tool —
-          // retries are absent in local mode, and a retry inflating its
-          // stage's totals is itself a signal worth seeing)
-          val a = stages.synchronized(stages.getOrElseUpdate(te.stageId, StageAgg()))
-          a.synchronized {
-            a.taskMs += m.executorRunTime; a.cpuNs += m.executorCpuTime
-            a.gcMs += m.jvmGCTime
-            a.fetchWaitMs += m.shuffleReadMetrics.fetchWaitTime
-            a.shRead += m.shuffleReadMetrics.totalBytesRead
-            a.shWrite += m.shuffleWriteMetrics.bytesWritten
-            a.spill += m.memoryBytesSpilled + m.diskBytesSpilled
-            a.input += m.inputMetrics.bytesRead
-            a.nTasks += 1
-            a.maxTaskMs = math.max(a.maxTaskMs, m.executorRunTime)
-          }
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        if (record) stages.synchronized {
-          // the call-site stage name is useless under AQE (every stage
-          // submits from the same CompletableFuture thread) — name the
-          // stage by its RDDs' operator SCOPES instead (WholeStageCodegen
-          // ids match the numbered plan; Exchange/Sort/etc. name the rest)
-          val ops = sc.stageInfo.rddInfos.flatMap(_.scope)
-            .map(_.name).distinct.mkString(",")
-          stages.get(sc.stageInfo.stageId).foreach(_.name =
-            (if (ops.nonEmpty) ops
-             else sc.stageInfo.name.takeWhile(_ != '\n')).take(110))
-        }
-    })
-    // SPARK_GRAFT_PROBE_ALL=1: per-rep stage tables (bimodal reps —
-    // diff a slow rep's stages against a fast one's)
     val probeAll = sys.env.get("SPARK_GRAFT_PROBE_ALL").contains("1")
+    val spark = graft.Bench.session(graft.GraftSession.envCpus.toString)
+    val metrics = new TaskMetrics
+    spark.sparkContext.addSparkListener(metrics)
     for (name <- args; r <- 1 to reps) {
-      if (r == reps || probeAll) { stages.synchronized(stages.clear()); record = true }
+      metrics.resetStages()
+      val b = metrics.totals
       val t0 = System.nanoTime()
       graft.Bench.runNoop(spark, sfDir, name)
       val w = (System.nanoTime() - t0) / 1e9
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      if (r == reps || probeAll) {
-        record = false
-        println(f"[stageprobe] $name rep$r wall=$w%.2f s  (stages by task-time desc)")
-        val snap = stages.synchronized(stages.toSeq)
-        for ((id, a) <- snap.sortBy(-_._2.taskMs))
-          println(f"  stage $id%5d task=${a.taskMs / 1e3}%7.2f cpu=${a.cpuNs / 1e9}%7.2f" +
+      val d = metrics.totals - b
+      println(f"[stageprobe] $name rep$r: $w%.2f s" +
+        f" task=${d.runMs / 1e3}%.2f cpu=${d.cpuNs / 1e9}%.2f gc=${d.gcMs / 1e3}%.2f" +
+        f" tasks=${d.tasks}%d" +
+        f" shuffle_rw_mb=[${d.shuffleReadBytes / 1e6}%.1f,${d.shuffleWriteBytes / 1e6}%.1f]")
+      if (r == reps || probeAll)
+        for ((id, stage, a) <- metrics.stageTable)
+          println(f"  stage $id%5d task=${a.runMs / 1e3}%7.2f cpu=${a.cpuNs / 1e9}%7.2f" +
             f" gc=${a.gcMs / 1e3}%5.2f fetch=${a.fetchWaitMs / 1e3}%5.2f" +
-            f" in=${a.input / 1e6}%7.1f shr=${a.shRead / 1e6}%6.1f shw=${a.shWrite / 1e6}%6.1f" +
-            f" spill=${a.spill / 1e6}%6.1f n=${a.nTasks}%4d maxTask=${a.maxTaskMs / 1e3}%6.2f  ${a.name}%s")
-      } else println(f"[stageprobe] $name rep$r wall=${w}%.2f s (warm)")
+            f" in=${a.inputBytes / 1e6}%7.1f shr=${a.shuffleReadBytes / 1e6}%6.1f" +
+            f" shw=${a.shuffleWriteBytes / 1e6}%6.1f spill=${a.spillBytes / 1e6}%6.1f" +
+            f" n=${a.tasks}%4d maxTask=${a.maxTaskMs / 1e3}%6.2f  $stage%s")
     }
     spark.stop()
   }

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Constraint-clean lazy local checkpoint (package escape, the
   * PointInPolygon convention).
@@ -29,7 +30,9 @@ object CleanCheckpoint {
 
   /** Block residency for the checkpointed partitions, settable per
     * session via `spark.graft.checkpoint.storageLevel` (any
-    * `StorageLevel.fromString` name). Default MEMORY_AND_DISK — the
+    * `StorageLevel.fromString` name but NONE, which would leave a
+    * lineage-truncated checkpoint with no blocks behind it; a bad value
+    * fails naming the key). Default MEMORY_AND_DISK — the
     * right local/batch-session choice. AT SCALE the caller must weigh
     * the contract: localCheckpoint truncates lineage and the blocks
     * live UNREPLICATED on executors, so one lost executor fails the
@@ -39,10 +42,16 @@ object CleanCheckpoint {
     * land the frame in the lake (parquet round-trip — the durable
     * equivalent this helper's plan shape mimics). ScaleSpec pins the
     * conf plumbing. */
-  private def level(df: DataFrame) =
-    org.apache.spark.storage.StorageLevel.fromString(
-      df.sparkSession.conf.get("spark.graft.checkpoint.storageLevel",
-        "MEMORY_AND_DISK"))
+  private def level(df: DataFrame): StorageLevel = {
+    val key = "spark.graft.checkpoint.storageLevel"
+    val name = df.sparkSession.conf.get(key, "MEMORY_AND_DISK")
+    val lvl = try StorageLevel.fromString(name) catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"$key: ${e.getMessage}", e)
+    }
+    require(lvl != StorageLevel.NONE, s"$key=NONE keeps no blocks behind a truncated lineage")
+    lvl
+  }
 
   def lazyClean(df: DataFrame): DataFrame = clean(df, eager = false)
 

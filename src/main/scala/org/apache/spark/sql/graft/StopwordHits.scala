@@ -5,7 +5,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{lit, typedLit}
+import org.apache.spark.sql.functions.typedLit
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, StringType}
 
 /** Occurrences of any `stops` element in the `tokens` array, as a

@@ -1379,8 +1379,9 @@ class ScaleSpec extends AnyFunSuite {
     // be able to pick a residency that survives executor loss
     // (MEMORY_AND_DISK_2 / DISK_ONLY_2) — localCheckpoint truncates
     // lineage, so the default unreplicated blocks are a single point of
-    // failure there. Pin: the conf reaches the checkpointed RDD, and
-    // the default stays MEMORY_AND_DISK.
+    // failure there. Pin: the conf reaches the checkpointed RDD, the
+    // default stays MEMORY_AND_DISK, a typo fails naming the key, and
+    // NONE (a truncated lineage with no blocks behind it) is rejected.
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.storage.StorageLevel
     val s = StructType(Seq(StructField("k", LongType)))
@@ -1397,6 +1398,13 @@ class ScaleSpec extends AnyFunSuite {
       val disk = org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(base)
       assert(levelOf(disk) === StorageLevel.DISK_ONLY)
       assert(keysOf(disk) === (1L to 100L).toSet)
+      for (bad <- Seq("MEMORY_AND_DISC", "NONE")) {
+        spark.conf.set("spark.graft.checkpoint.storageLevel", bad)
+        val e = intercept[IllegalArgumentException](
+          org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(base))
+        assert(e.getMessage.contains("spark.graft.checkpoint.storageLevel"), e.getMessage)
+        assert(e.getMessage.contains(bad), e.getMessage)
+      }
     } finally spark.conf.unset("spark.graft.checkpoint.storageLevel")
   }
 

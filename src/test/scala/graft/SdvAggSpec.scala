@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Exprs
 import graft.sdv.SdvAgg
 
 /** Micro-fixtures pinning the exact reference aggregation semantics
@@ -85,7 +84,7 @@ class SdvAggSpec extends AnyFunSuite {
     assert(got.getDouble(1) === 13.3333)
     assert(got.getDouble(2) === 75.0)
     // bZero: caller fills nulls → (50*10+25*20+25*0)/100 = 10
-    val z = d.withColumn("rating", Exprs.nullsAsZero(col("rating")))
+    val z = d.withColumn("rating", coalesce(col("rating"), lit(0.0)))
     assert(SdvAgg.weightedAverage(z).collect()(0).getDouble(1) === 10.0)
   }
 

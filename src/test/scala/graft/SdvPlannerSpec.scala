@@ -231,6 +231,29 @@ class SdvPlannerSpec extends AnyFunSuite {
     assert(got === Seq(Seq("100001", 0.9, 60.0))) // only c1 ≥ 50
   }
 
+  test("shareBase memo is atomic: two threads planning one cutoff checkpoint it once") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val att = SdvAttribute("Dwellings", "cointerp", "interphr", "rating",
+      "Float", "Weighted Average", nasisrulename = Some("ENG - Dwellings"),
+      complevelattribflag = 1)
+    val shared = new SdvPlanner(tables,
+      domains = Map("limits" -> limitedDomain), shareBase = true)
+    val before = spark.sparkContext.getPersistentRDDs.keys.toSet
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val plans = (1 to 2).map(_ => Future {
+      go.await()
+      shared.plan(att, SdvRequest(cutOff = 50))
+    })
+    go.countDown()
+    val outs = plans.map(Await.result(_, 2.minutes))
+    // ids, not a count: the ContextCleaner may drop older RDDs meanwhile
+    val added = spark.sparkContext.getPersistentRDDs.keys.toSet -- before
+    assert(added.size === 1, s"persisted RDDs added: $added")
+    outs.foreach(o => assert(rowsOf(o) === Seq(Seq("100001", 0.9, 60.0))))
+  }
+
   test("p10 fuzz sweep: 104 flag combinations, every leg non-vacuous") {
     import org.apache.spark.sql.functions.{col, countDistinct}
     assert(queries.SweepQueries.legCount === 104)
