@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.core.Ranked
 
@@ -379,17 +380,16 @@ object Ann {
   def graphInsertProbed(assigned: DataFrame, edges: DataFrame,
       probesRaw: DataFrame, k: Int): (DataFrame, DataFrame) = {
     // every checkpoint in the maintenance chain is CONSTRAINT-CLEAN
-    // (CleanCheckpoint): the batch is typically a filtered view of the
-    // corpus, and an ordinary checkpoint's captured originConstraints
-    // then poison the repair plan's unions — see CleanCheckpoint's
-    // scaladoc for the 4.1.2 failure mode. EAGER (r18): probes feeds
+    // (Materialize.checkpoint): the batch is typically a filtered view
+    // of the corpus, and captured origin constraints would poison the
+    // repair plan's unions — see Materialize's scaladoc for the 4.1.2
+    // failure mode. EAGER (r18): probes feeds
     // three independent subtrees (batch assignment, the forward join's
     // broadcast build, the prune set) and newEdges three more (reverse
     // flip, the candidate union, the touched set) — concurrent stages
     // raced the lazy fills and re-ran the repair lineage per consumer
     // (n22 bench CPU 3.9 → 4.8 under the r18 static chains until this).
-    val cpoint = org.apache.spark.sql.graft.CleanCheckpoint.eagerClean _
-    val probes = cpoint(probesRaw)
+    val probes = Materialize.checkpoint(probesRaw, eager = true)
     // the batch joins the index at its top-1 bucket (ivfAssign's argmax
     // is the pr=1 probe: same quantized cosine, same cid tiebreak)
     val batchAssigned = probes.filter(col("pr") === 1)
@@ -400,7 +400,7 @@ object Ann {
     // assignment streams through unshuffled
     val nw = Window.partitionBy(col("vid"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val newEdges = cpoint(
+    val newEdges = Materialize.checkpoint(
       broadcast(probes.select(col("vid"), col("vec"), col("cid"))).as("a")
         .join(assignedAll.as("b"),
           col("a.cid") === col("b.cid") && col("a.vid") =!= col("b.vid"))
@@ -409,7 +409,7 @@ object Ann {
             Vectors.cosine(col("a.vec"), col("b.vec")), 6).as("cosine"))
         .withColumn("rank", row_number().over(nw).cast("long"))
         .filter(col("rank") <= k)
-        .select(col("vid"), col("neighbor_id"), col("cosine")))
+        .select(col("vid"), col("neighbor_id"), col("cosine")), eager = true)
     // reverse fixup: forward edges flip into candidates for their
     // targets; touched ≤ batch·k vertices re-rank old ∪ reverse ∪ (for
     // batch targets) forward, deduped — distinct() collapses the a↔b
@@ -421,9 +421,9 @@ object Ann {
     // the (batch-bounded) union lands at a leaf before the re-rank
     // window — one materialization, and no optimizer rule ever
     // interrogates the union through the window above it
-    val candUpd = cpoint(
+    val candUpd = Materialize.checkpoint(
       oldSlim.join(broadcast(touched), Seq("vid"), "left_semi")
-        .unionByName(newEdges).unionByName(rc).distinct())
+        .unionByName(newEdges).unionByName(rc).distinct(), eager = true)
     val ranked = candUpd
       .withColumn("rank", row_number().over(nw).cast("long"))
       .filter(col("rank") <= k)
@@ -670,8 +670,8 @@ object Ann {
       buckets: Int = defaultLakeBuckets): DataFrame = {
     val qv = queries.select(col("qid").as("vid"), col("qvec").as("vec"))
     // one probe frame feeds the prune set AND the scorer (the n24 note)
-    val probesQ = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(
-      probesTwoLevel(qv, grouped, gstep, nprobe, gprobe))
+    val probesQ = Materialize.checkpoint(
+      probesTwoLevel(qv, grouped, gstep, nprobe, gprobe), eager = false)
     val probed = cidsOf(probesQ)
     val corpusAssigned = lakePrune(
         spark.read.parquet(s"$root/assigned"), probed, buckets)
@@ -756,11 +756,10 @@ object Ann {
       // the path this frame will overwrite, and the second write would
       // otherwise re-evaluate the first one's inputs against the
       // already-rewritten lake
-      repaired.unionByName(remainder)
+      Materialize.checkpoint(repaired.unionByName(remainder)
         .withColumn("pcid", pmod(col("cid"), lit(buckets.toLong)).cast("int"))
         .repartition(col("pcid"))
-        .sortWithinPartitions(col("cid"), col("vid"))
-        .localCheckpoint(eager = true)
+        .sortWithinPartitions(col("cid"), col("vid")), eager = true)
     }
     // materialize BOTH outputs before writing EITHER: the edges frame
     // joins assignedRepaired, whose lineage scans root/assigned
@@ -813,9 +812,8 @@ object Ann {
     // while 3 seeds cleared it; this is the flat-graph stand-in for
     // HNSW's upper-layer long-range entries ([[hnswSearch]] is the
     // real two-layer form)
-    val seed = ivfSearch(queries, corpus, centroids, k = seedK)
-      .select(col("qid"), col("neighbor_id").as("vid"))
-      .localCheckpoint(eager = false)
+    val seed = Materialize.checkpoint(ivfSearch(queries, corpus, centroids, k = seedK)
+      .select(col("qid"), col("neighbor_id").as("vid")), eager = false)
     val visited = beamWalk(qv, cv, seed, edges, beam, hops)
     rerankVisited(qv, cv, visited, k)
   }
@@ -834,8 +832,7 @@ object Ann {
       edges: DataFrame, beam: Int, hops: Int): DataFrame = {
     // the edge list is probed once per hop — checkpoint lazily so the
     // Σ|bucket|² scoring subtree runs once, not `hops` times
-    val e = edges.select(col("vid"), col("neighbor_id"))
-      .localCheckpoint(eager = false)
+    val e = Materialize.checkpoint(edges.select(col("vid"), col("neighbor_id")), eager = false)
     var visited = seed
     var frontier = seed
     for (_ <- 1 to hops) {
@@ -857,15 +854,14 @@ object Ann {
       val fresh = cand.join(broadcast(visited), Seq("qid", "vid"), "left_anti")
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("cos6").desc, col("vid").asc)
-      frontier = cv.join(broadcast(fresh), Seq("vid"))
+      frontier = Materialize.checkpoint(cv.join(broadcast(fresh), Seq("vid"))
         .join(broadcast(qv), Seq("qid"))
         .select(col("qid"), col("vid"),
           graft.core.Exprs.roundHalfUp(
             Vectors.cosine(col("qvec"), col("vec")), 6).as("cos6"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= beam)
-        .select(col("qid"), col("vid"))
-        .localCheckpoint(eager = false)
+        .select(col("qid"), col("vid")), eager = false)
       visited = visited.unionByName(frontier)
     }
     visited
@@ -897,14 +893,13 @@ object Ann {
     val sw = Window.partitionBy(col("qid"))
       .orderBy(col("cos6").desc, col("vid").asc)
     // bounded-side broadcasts, corpus streams (see beamWalk)
-    cv.join(broadcast(visited), Seq("vid")).join(broadcast(qv), Seq("qid"))
+    Materialize.checkpoint(cv.join(broadcast(visited), Seq("vid")).join(broadcast(qv), Seq("qid"))
       .select(col("qid"), col("vid"),
         graft.core.Exprs.roundHalfUp(
           Vectors.cosine(col("qvec"), col("vec")), 6).as("cos6"))
       .withColumn("rn", row_number().over(sw))
       .filter(col("rn") <= seedK)
-      .select(col("qid"), col("vid"))
-      .localCheckpoint(eager = false)
+      .select(col("qid"), col("vid")), eager = false)
   }
 
   /** The HNSW tower's level geometry: cumulative strides S₁..S_L such
@@ -974,8 +969,8 @@ object Ann {
     // hop 0: the whole top level, broadcast — ≤ cap rows by towerSteps'
     // construction, regardless of corpus size
     val topV = cv.filter(col("vid") % steps.last === 0).select(col("vid"))
-    var seeds = qv.select(col("qid")).crossJoin(broadcast(topV))
-      .localCheckpoint(eager = false)
+    var seeds = Materialize.checkpoint(
+      qv.select(col("qid")).crossJoin(broadcast(topV)), eager = false)
     // descend levels L-1 .. 1 with the same bounded beam walk as
     // layer 0 (a strict greedy-1 descent measured badly stuck between
     // clusters — a bucketed kNN upper graph has only SHORT links, not

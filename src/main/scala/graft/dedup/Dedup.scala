@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.ann.Vectors
 import graft.text.TextAnalysis
@@ -169,7 +170,7 @@ object Dedup {
     // the three consumers' stages run concurrently and raced a lazy
     // fill, re-running the banding pipeline anyway.
     verifyJaccard(docs,
-      org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(cand),
+      Materialize.checkpoint(cand, eager = true),
       idCol, textCol, shingleN, threshold)
   }
 
@@ -251,7 +252,7 @@ object Dedup {
     // only, banding-bounded — orders below the corpus at any scale)
     // cuts the verify side to a leaf probe.
     verifyJaccard(all,
-      org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(cand),
+      Materialize.checkpoint(cand, eager = false),
       idCol, textCol, shingleN, threshold)
   }
 
@@ -561,13 +562,12 @@ object Dedup {
       // match-join sides — checkpoint lazily so the tokenize/explode
       // subtree runs once, not 4-5× (the pqChain convention; at
       // pipeline scale this IS the persisted window index)
-      val win = win0.localCheckpoint(eager = false)
+      val win = Materialize.checkpoint(win0, eager = false)
       // the capped set feeds both self-join sides downstream —
       // checkpoint it too so the anti-join runs once
-      win.join(
+      Materialize.checkpoint(win.join(
         broadcast(hotWindowReport(win, maxDf).select(col("h"), col("s"))),
-        Seq("h", "s"), "left_anti")
-        .localCheckpoint(eager = false)
+        Seq("h", "s"), "left_anti"), eager = false)
     }
 
   /** Distinct hashed w-token window rows (did, s, h) — the persistable
@@ -904,7 +904,7 @@ object Dedup {
     // deliberate: checkpoint blocks are executor-local — an executor
     // loss mid-job fails the job instead of recomputing (same contract
     // as dupClusters; acceptable for a single-stage materialization).
-    val lanes = simhashLanesDf(docs, idCol, textCol).localCheckpoint(eager = false)
+    val lanes = Materialize.checkpoint(simhashLanesDf(docs, idCol, textCol), eager = false)
     val cuts = lanes.agg(
       avg(col("b0")).as("c0"), (1 until 64).map(i => avg(col(s"b$i")).as(s"c$i")): _*)
     val withSim = lanes.crossJoin(broadcast(cuts))
@@ -925,7 +925,7 @@ object Dedup {
     // the cand subtree here carries the lane/cut/banding chain, which
     // verifyJaccard would otherwise replicate three times
     verifyJaccard(docs,
-      org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(cand),
+      Materialize.checkpoint(cand, eager = false),
       idCol, textCol, shingleN, threshold)
   }
 
@@ -978,19 +978,6 @@ object Dedup {
         graft.core.Exprs.roundHalfUp(contBa, 4).as("cont_ba"))
   }
 
-  /** The session's shuffle-partition count as a long, for the CC
-    * loop-sizing math. `raw` is the string the session carries for
-    * spark.sql.shuffle.partitions; a non-numeric value (e.g. "auto"
-    * under some resource managers) falls back to the RESOLVED
-    * SQLConf number so the loop sizes itself instead of aborting
-    * with NumberFormatException before the finally can restore the
-    * conf (r14 advice). */
-  private def sessionShuffleParts(spark: org.apache.spark.sql.SparkSession,
-      raw: String): Long =
-    scala.util.Try(raw.toLong).getOrElse(
-      scala.util.Try(
-        spark.sessionState.conf.numShufflePartitions.toLong).getOrElse(200L))
-
   /** Duplicate-cluster assignment: connected components over near-dup
     * pairs via iterative min-label propagation — the standard
     * large-graph CC shape (one shuffle join per round, converges in
@@ -1005,20 +992,17 @@ object Dedup {
     // the candidate-pair pipeline feeding `pairs` materializes HERE
     // (first action on the cache) — before AQE is toggled off, so its
     // big shuffles keep adaptive skew/coalesce handling
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id")).localCheckpoint(true)
+    var labels = Materialize.checkpoint(sym.select(col("src").as("id")).distinct()
+      .withColumn("cluster", col("id")), eager = true)
     // the per-round jobs are component-sized (near-dup clusters are
     // tiny vs the corpus); AQE re-plans every one of the 3-4 jobs per
     // round and the re-planning latency dominates the actual work —
     // measured 2.3× on the whole operator. Toggle it off for the loop
-    // only, and restore whatever the session had.
+    // only, and restore whatever the session had. `sym` is released on
+    // the way out: every label frame is a materialized checkpoint, and
+    // a cache left behind would serve the next call over the same pairs.
     val spark = pairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(aqeKey, "true")
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = spark.conf.get(spKey)
-    spark.conf.set(aqeKey, "false")
-    try {
+    try Materialize.scoped(spark, aqe = Some(false)) {
       // convergence check without a per-round join: labels only ever
       // DECREASE under min-propagation, so Σcluster strictly decreases
       // iff any label changed — one shuffle-free partial-agg scan of
@@ -1064,37 +1048,30 @@ object Dedup {
       // on the driver from the convergence seed, so size partitions to
       // the graph (~500k labels/partition, floor 8) and restore after;
       // a genuinely huge pair graph keeps the session's parallelism.
-      // prevSp is whatever string the session carries — parse via the
-      // resolved SQLConf value so a non-numeric setting can't abort
-      // the loop before the finally restores it (r14 advice).
-      val loopParts = math.max(8L,
-        math.min(sessionShuffleParts(spark, prevSp), n0 / 500000L + 1L))
-      spark.conf.set(spKey, loopParts.toString)
-      var prevSum = sum0
-      var changed = true
-      var i = 0
-      while (changed && i < maxIter) {
-        val prop = sym.join(labels, sym("dst") === labels("id"))
-          .select(col("src").as("id"), col("cluster"))
-        // LAZY checkpoint: the labelSum action right below materializes
-        // it as a side effect — one blocking job per round instead of
-        // two (eager checkpoint + agg). Round latency, not data volume,
-        // dominates here (components are tiny), so halving the
-        // sequential job count is the win.
-        val next = labels.unionByName(prop)
-          .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-          .localCheckpoint(false)
-        val sumNow = labelSum(next)
-        changed = sumNow.compareTo(prevSum) != 0
-        prevSum = sumNow
-        labels = next
-        i += 1
+      Materialize.scoped(spark,
+          n => math.max(8L, math.min(n.toLong, n0 / 500000L + 1L)).toInt) {
+        var prevSum = sum0
+        var changed = true
+        var i = 0
+        while (changed && i < maxIter) {
+          val prop = sym.join(labels, sym("dst") === labels("id"))
+            .select(col("src").as("id"), col("cluster"))
+          // LAZY checkpoint: the labelSum action right below materializes
+          // it as a side effect — one blocking job per round instead of
+          // two (eager checkpoint + agg). Round latency, not data volume,
+          // dominates here (components are tiny), so halving the
+          // sequential job count is the win.
+          val next = Materialize.checkpoint(labels.unionByName(prop)
+            .groupBy(col("id")).agg(min(col("cluster")).as("cluster")), eager = false)
+          val sumNow = labelSum(next)
+          changed = sumNow.compareTo(prevSum) != 0
+          prevSum = sumNow
+          labels = next
+          i += 1
+        }
+        labels
       }
-      labels
-    } finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(spKey, prevSp)
-    }
+    } finally sym.unpersist()
   }
 
   /** Connected components via alternating LARGE-STAR / SMALL-STAR
@@ -1136,95 +1113,88 @@ object Dedup {
     // canonical u > v, self-loops dropped; materializes BEFORE the AQE
     // toggle so the candidate pipeline feeding `pairs` keeps adaptive
     // handling (the dupClusters convention)
-    var edges = pairs.select(
+    var edges = Materialize.checkpoint(pairs.select(
         greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(aqeKey, "true")
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = spark.conf.get(spKey)
-    spark.conf.set(aqeKey, "false")
-    try {
+      .filter(col("u") =!= col("v")).distinct(), eager = true)
+    Materialize.scoped(spark, aqe = Some(false)) {
       // the dupClusters loop-sizing lesson: each round is 2-3 shuffles
       // over the edge set with AQE off — at the session's fact-table
       // partition count the per-task overhead dominates (measured 114
       // task-seconds of ~50 ms tasks on a few-hundred-edge graph);
       // size the loop to the graph and restore after
-      var prevCount = edges.count()
-      spark.conf.set(spKey, math.max(8L,
-        math.min(sessionShuffleParts(spark, prevSp),
-          prevCount / 500000L + 1L)).toString)
-      var rounds = 0
-      var stable = false
-      while (!stable && rounds < maxIter) {
-        // Each round is ONE action: both star ops are window minima
-        // (not groupBy+self-join — a join would consume its left side
-        // through multiple branches and re-evaluate the round's
-        // lineage per branch), the small-star's two emissions ride one
-        // explode, and the fixpoint check is a single aggregate over
-        // the new set left-joined to the old. Round latency — plan +
-        // job, not data — dominates at every scale where CC matters,
-        // and the 3-actions-per-round draft measured ~0.9 s/round of
-        // pure planning/launch on a 70-edge graph.
-        // large-star over the symmetric view: (y > x) re-attaches to
-        // m = min(Γ(x) ∪ {x}); output stays canonical because m ≤ x < y
-        val sym = edges.select(col("u").as("x"), col("v").as("y"))
-          .unionByName(edges.select(col("v").as("x"), col("u").as("y")))
-        val wL = Window.partitionBy(col("x"))
-        // no distinct here (r18): the small-star min below is
-        // duplicate-insensitive and ss re-distincts, so the dedup
-        // exchange+aggregate this carried every round bought nothing —
-        // duplicate (u,v) rows (bounded by the symmetric degree) ride
-        // one more exchange instead. Set semantics per round unchanged.
-        val ls = sym
-          .withColumn("m", least(min(col("y")).over(wL), col("x")))
-          .filter(col("y") > col("x"))
-          .select(col("y").as("u"), col("m").as("v"))
-        // small-star over the canonical list: u and its smaller
-        // neighbors attach to min(N<(u)); all outputs (·, m) canonical
-        val wS = Window.partitionBy(col("u"))
-        val ss = ls
-          .withColumn("m", min(col("v")).over(wS))
-          .select(explode(array(
-            struct(col("v").as("u"), col("m").as("v")),
-            struct(col("u"), col("m").as("v")))).as("e"))
-          .select(col("e.u").as("u"), col("e.v").as("v"))
-          .filter(col("u") =!= col("v"))
-          .distinct().localCheckpoint(false)
-        // exact fixpoint in the same action: new-set size (old size is
-        // carried, not recomputed) and overlap with the old set — both
-        // distinct, so nNew == nOld == prevCount ⇔ set equality
-        val chk = ss.join(
-            edges.select(col("u"), col("v"), lit(1).as("old_e")),
-            Seq("u", "v"), "left")
-          .agg(count(lit(1)).as("n"), count(col("old_e")).as("o")).head()
-        stable = chk.getLong(0) == prevCount && chk.getLong(1) == chk.getLong(0)
-        prevCount = chk.getLong(0)
-        edges = ss
-        rounds += 1
+      val n0 = edges.count()
+      Materialize.scoped(spark,
+          n => math.max(8L, math.min(n.toLong, n0 / 500000L + 1L)).toInt) {
+        var prevCount = n0
+        var rounds = 0
+        var stable = false
+        while (!stable && rounds < maxIter) {
+          // Each round is ONE action: both star ops are window minima
+          // (not groupBy+self-join — a join would consume its left side
+          // through multiple branches and re-evaluate the round's
+          // lineage per branch), the small-star's two emissions ride one
+          // explode, and the fixpoint check is a single aggregate over
+          // the new set left-joined to the old. Round latency — plan +
+          // job, not data — dominates at every scale where CC matters,
+          // and the 3-actions-per-round draft measured ~0.9 s/round of
+          // pure planning/launch on a 70-edge graph.
+          // large-star over the symmetric view: (y > x) re-attaches to
+          // m = min(Γ(x) ∪ {x}); output stays canonical because m ≤ x < y
+          val sym = edges.select(col("u").as("x"), col("v").as("y"))
+            .unionByName(edges.select(col("v").as("x"), col("u").as("y")))
+          val wL = Window.partitionBy(col("x"))
+          // no distinct here (r18): the small-star min below is
+          // duplicate-insensitive and ss re-distincts, so the dedup
+          // exchange+aggregate this carried every round bought nothing —
+          // duplicate (u,v) rows (bounded by the symmetric degree) ride
+          // one more exchange instead. Set semantics per round unchanged.
+          val ls = sym
+            .withColumn("m", least(min(col("y")).over(wL), col("x")))
+            .filter(col("y") > col("x"))
+            .select(col("y").as("u"), col("m").as("v"))
+          // small-star over the canonical list: u and its smaller
+          // neighbors attach to min(N<(u)); all outputs (·, m) canonical
+          val wS = Window.partitionBy(col("u"))
+          val ss = Materialize.checkpoint(ls
+            .withColumn("m", min(col("v")).over(wS))
+            .select(explode(array(
+              struct(col("v").as("u"), col("m").as("v")),
+              struct(col("u"), col("m").as("v")))).as("e"))
+            .select(col("e.u").as("u"), col("e.v").as("v"))
+            .filter(col("u") =!= col("v"))
+            .distinct(), eager = false)
+          // exact fixpoint in the same action: new-set size (old size is
+          // carried, not recomputed) and overlap with the old set — both
+          // distinct, so nNew == nOld == prevCount ⇔ set equality
+          val chk = ss.join(
+              edges.select(col("u"), col("v"), lit(1).as("old_e")),
+              Seq("u", "v"), "left")
+            .agg(count(lit(1)).as("n"), count(col("old_e")).as("o")).head()
+          stable = chk.getLong(0) == prevCount && chk.getLong(1) == chk.getLong(0)
+          prevCount = chk.getLong(0)
+          edges = ss
+          rounds += 1
+        }
+        // fail-loud contract (r14 advice): a maxIter exit without the
+        // fixpoint means the labels below may not be component minima —
+        // silently returning them would hand a caller wrong clusters
+        // with no signal (dupClustersStar discards the round count).
+        // ~log² n rounds suffice for ANY graph, so tripping this at
+        // maxIter=32 indicates a bug, not a big input.
+        require(stable,
+          s"dupClustersStar: no fixpoint after $maxIter rounds " +
+            s"(edge set still changing, |E|=$prevCount) — labels would " +
+            "not be component minima; raise maxIter only with evidence")
+        // converged star forest: every u points at its component min;
+        // roots (v-side only) label themselves
+        val uLab = edges.groupBy(col("u")).agg(min(col("v")).as("cluster"))
+          .select(col("u").as("id"), col("cluster"))
+        val roots = edges.select(col("v")).distinct()
+          .join(edges.select(col("u").as("v")).distinct(), Seq("v"), "left_anti")
+          .select(col("v").as("id"), col("v").as("cluster"))
+        (uLab.unionByName(roots), rounds)
       }
-      // fail-loud contract (r14 advice): a maxIter exit without the
-      // fixpoint means the labels below may not be component minima —
-      // silently returning them would hand a caller wrong clusters
-      // with no signal (dupClustersStar discards the round count).
-      // ~log² n rounds suffice for ANY graph, so tripping this at
-      // maxIter=32 indicates a bug, not a big input.
-      require(stable,
-        s"dupClustersStar: no fixpoint after $maxIter rounds " +
-          s"(edge set still changing, |E|=$prevCount) — labels would " +
-          "not be component minima; raise maxIter only with evidence")
-      // converged star forest: every u points at its component min;
-      // roots (v-side only) label themselves
-      val uLab = edges.groupBy(col("u")).agg(min(col("v")).as("cluster"))
-        .select(col("u").as("id"), col("cluster"))
-      val roots = edges.select(col("v")).distinct()
-        .join(edges.select(col("u").as("v")).distinct(), Seq("v"), "left_anti")
-        .select(col("v").as("id"), col("v").as("cluster"))
-      (uLab.unionByName(roots), rounds)
-    } finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(spKey, prevSp)
     }
   }
 
@@ -1250,9 +1220,10 @@ object Dedup {
     // edges materialize HERE (first action on the checkpoint) — before
     // AQE is toggled off, so the candidate-pair pipeline feeding
     // `pairs` keeps adaptive handling for its big shuffles
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(true)
+    val edges = Materialize.checkpoint(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      eager = true)
     // the per-iteration jobs are graph-sized (tiny next to the corpus
     // work that produced the pairs); as in dupClusters, AQE's re-plan
     // latency per micro-stage dominates the actual work — measured
@@ -1260,10 +1231,6 @@ object Dedup {
     // as eagerly-checkpointed tiny jobs with AQE off, restoring the
     // session's setting after.
     val spark = pairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.get(aqeKey, "true")
-    val prevParts = spark.conf.get(partKey, "32")
     // size the loop's shuffles to the GRAPH, not the session CPU
     // count (the st07 stream-state lesson): a near-dup graph is tiny
     // next to the corpus that produced it, and 6 micro-jobs × 32+
@@ -1271,29 +1238,25 @@ object Dedup {
     // partition; the session's own setting stays the ceiling so a
     // genuinely large graph keeps its parallelism.
     val nEdges = edges.count()
-    val parts = math.max(1L, math.min(prevParts.toLong,
-      (nEdges + 499999L) / 500000L)).toString
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(partKey, parts)
-    try {
-      val e = edges.coalesce(parts.toInt)
-      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint(true)
+    Materialize.scoped(spark,
+        n => math.max(1L, math.min(n.toLong, (nEdges + 499999L) / 500000L)).toInt,
+        aqe = Some(false)) {
+      // the scope's partition count (AQE is off, so no coalescing
+      // initial count stands in for it)
+      val e = edges.coalesce(spark.sessionState.conf.numShufflePartitions)
+      val deg = Materialize.checkpoint(
+        e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), eager = true)
       var rank = deg.select(col("src").as("id"), lit(1000000L).as("pr"))
       for (_ <- 1 to iters) {
-        rank = e.join(deg, "src")
+        rank = Materialize.checkpoint(e.join(deg, "src")
           .join(rank, col("src") === col("id"))
           .select(col("dst"), expr("pr div outdeg").as("c"))
           .groupBy(col("dst")).agg(sum(col("c")).as("s"))
           .select(col("dst").as("id"),
-            (lit(150000L) + expr("85 * s div 100")).as("pr"))
-          .localCheckpoint(true)
+            (lit(150000L) + expr("85 * s div 100")).as("pr")), eager = true)
       }
       rank.join(deg, col("id") === col("src"))
         .select(col("id").as("doc_id"), col("outdeg"), col("pr").as("rank"))
-    } finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(partKey, prevParts)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.mm
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Multimodal-column plumbing (training-data mandate): image/audio/video
   * travel as opaque `binary` columns with typed metadata; decode /
@@ -455,18 +456,18 @@ object Multimodal {
     // re-evaluates the text hash pass (r18 StageProbe: four full
     // dhashBands scans). At true corpus scale this frame is corpus×8
     // rows; swap the checkpoint for a parquet round-trip there (the
-    // CleanCheckpoint scaladoc note) — this operator's battery input
-    // is bounded by construction (mm13's doc_id < 5000 stressor).
-    val ex = org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(
+    // Materialize scaladoc note) — this operator's battery input is
+    // bounded by construction (mm13's doc_id < 5000 stressor).
+    val ex = Materialize.checkpoint(
       hashed.select(col("did"), col("bands"),
-        posexplode(col("bands")).as(Seq("band", "bv"))))
+        posexplode(col("bands")).as(Seq("band", "bv"))), eager = true)
     // hot census — consumed by both the anti and inner splits, so it
     // lands once (constraint-clean: the splits' union is downstream).
     // df rides along: the inner join below hands every hot row its
     // bucket's df, which is what the per-value fragment count reads.
-    val hot = org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(
+    val hot = Materialize.checkpoint(
       ex.groupBy(col("band"), col("bv")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > hotDf))
+        .filter(col("df") > hotDf), eager = true)
     val cold = ex.join(broadcast(hot), Seq("band", "bv"), "left_anti")
     val hotRows = ex.join(broadcast(hot), Seq("band", "bv"))
     val hamming = (0 until 8)
@@ -663,10 +664,9 @@ object Multimodal {
       maxHamming: Int = 3, bits: Int = 8, spf: Int = 4): DataFrame = {
     require(maxHamming <= 3,
       s"audioNearDupPairs: maxHamming=$maxHamming breaks the 4-band pigeonhole")
-    val hashed = audioBandsDecode(
+    val hashed = Materialize.checkpoint(audioBandsDecode(
       docs.filter(length(col(textCol)) >= 4 * (bits + 1) * spf * 2),
-      idCol, textCol, bits, spf)
-      .localCheckpoint(true)
+      idCol, textCol, bits, spf), eager = true)
     val ex = hashed.select(col("did"), col("bands"),
       posexplode(col("bands")).as(Seq("band", "bv")))
     // hamming computed + thresholded map-side before the pair-distinct

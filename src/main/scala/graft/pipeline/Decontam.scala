@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
@@ -172,7 +173,7 @@ object Decontam {
     // banding-bounded (≤ |eval| × bucket occupancy), so the checkpoint
     // is tiny.
     val report = Dedup.verifyJaccard(all,
-      org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(cand),
+      Materialize.checkpoint(cand, eager = true),
       idCol, textCol, shingleN, threshold)
       .groupBy(col("id_a").as(idCol))
       .agg(max(col("jaccard")).as("max_jaccard"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.Tables
 import graft.events.EventOps
@@ -240,10 +241,7 @@ object EventQueries extends QuerySet {
         // by watermark+interval, so fewer/bigger stores is strictly
         // better; a production deployment sizes this to state volume,
         // not to the batch session's CPU count.
-        val spKey = "spark.sql.shuffle.partitions"
-        val prevSp = s.conf.get(spKey)
-        s.conf.set(spKey, "4")
-        try {
+        Materialize.scoped(s, _ => 4) {
           ev.filter(col("ts") < cut1).coalesce(4)
             .write.mode("append").parquet(s"$tmp/drop")
           run()
@@ -253,7 +251,7 @@ object EventQueries extends QuerySet {
           ev.filter(col("ts") >= cut2).coalesce(4)
             .write.mode("append").parquet(s"$tmp/drop")
           run()
-        } finally s.conf.set(spKey, prevSp)
+        }
         s.read.parquet(s"$tmp/out")
       },
       Some(intervalJoinSql)),
@@ -310,10 +308,7 @@ object EventQueries extends QuerySet {
         }
         // state stores sized to state volume, not session CPUs (the
         // st07 measurement: ~23 s → ~8 s at small store counts)
-        val spKey = "spark.sql.shuffle.partitions"
-        val prevSp = s.conf.get(spKey)
-        s.conf.set(spKey, "4")
-        try {
+        Materialize.scoped(s, _ => 4) {
           ev.filter(col("ts") < cut).coalesce(4)
             .write.mode("append").parquet(s"$tmp/drop")
           run()
@@ -334,7 +329,7 @@ object EventQueries extends QuerySet {
               timestamp_micros(col("us")).as("ts"), col("value_cents"))
             .coalesce(1).write.mode("append").parquet(s"$tmp/drop")
           run()
-        } finally s.conf.set(spKey, prevSp)
+        }
         s.read.parquet(s"$tmp/out").filter(col("user_id") >= 0L)
       },
       Some("""WITH e AS (SELECT event_id, user_id, event_type,
@@ -843,16 +838,6 @@ object EventQueries extends QuerySet {
           ev.filter(f).coalesce(1).write.parquet(s"$tmp/drop/$name")
         land(us.between(cut - 2 * hr, cut), "w1")
         val schema = ev.schema
-        // state-store sizing, the st07 lesson: the streaming agg's
-        // state partition count is fixed at first start by
-        // spark.sql.shuffle.partitions and reused from the checkpoint;
-        // at 32 each of the 2 runs commits 32 stores per batch and the
-        // store churn dominates — state here is a few thousand
-        // (window, type) groups, so 8 bigger stores are strictly
-        // better. Production sizes this to state volume, not CPUs.
-        val spKey = "spark.sql.shuffle.partitions"
-        val prevSp = s.conf.get(spKey)
-        s.conf.set(spKey, "8")
         def run(): Long = {
           val q = s.readStream.schema(schema).parquet(s"$tmp/drop/*")
             .withWatermark("ts", "1 hour")
@@ -870,13 +855,19 @@ object EventQueries extends QuerySet {
           q.recentProgress.toSeq.flatMap(_.stateOperators)
             .map(_.numRowsDroppedByWatermark).sum
         }
-        val dropped =
-          try {
-            run()
-            land(us <= cut - 3 * hr, "w2stale")
-            land(us > cut, "w2fresh")
-            run()
-          } finally s.conf.set(spKey, prevSp)
+        // state-store sizing, the st07 lesson: the streaming agg's
+        // state partition count is fixed at first start by
+        // spark.sql.shuffle.partitions and reused from the checkpoint;
+        // at 32 each of the 2 runs commits 32 stores per batch and the
+        // store churn dominates — state here is a few thousand
+        // (window, type) groups, so 8 bigger stores are strictly
+        // better. Production sizes this to state volume, not CPUs.
+        val dropped = Materialize.scoped(s, _ => 8) {
+          run()
+          land(us <= cut - 3 * hr, "w2stale")
+          land(us > cut, "w2fresh")
+          run()
+        }
         // final state = last emitted update per key (update mode emits
         // the key's cumulative count each time it changes; batch ids
         // are monotone across the checkpoint-shared runs)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.Tables
 import graft.analog.Analog._
@@ -568,7 +569,7 @@ object ExtraQueries extends QuerySet {
     Q("v14_valu_wide",
       (s, dir) => buildValu(
         Tables.load(s, dir, "customer").select(col("c_custkey").as("mukey")),
-        valuHz(s, dir).localCheckpoint(false)),
+        Materialize.checkpoint(valuHz(s, dir), eager = false)),
       Some(valuWideOracle)),
 
     // V14-incremental (SURVEY §1.5): per-SSA Valu1 refresh. Change
@@ -616,17 +617,14 @@ object ExtraQueries extends QuerySet {
         // are scheduler overhead, not parallelism; 8 matches the slice
         // size (the st07/st08 sizing lesson applied to the batch ops
         // inside foreachBatch). Values are partitioning-invariant.
-        val spKey = "spark.sql.shuffle.partitions"
-        val prevSp = s.conf.get(spKey)
-        s.conf.set(spKey, "8")
-        try {
+        Materialize.scoped(s, _ => 8) {
           signal.filter(col("areasymbol").isin("SSA0", "SSA1", "SSA2"))
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.refreshValu(s, s"$tmp/drop", signal.schema, s"$tmp/lake", buildFor)
           signal.filter(col("areasymbol").isin("SSA1", "SSA3"))
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.refreshValu(s, s"$tmp/drop", signal.schema, s"$tmp/lake", buildFor)
-        } finally s.conf.set(spKey, prevSp)
+        }
         graft.io.Lake.read(s, s"$tmp/lake", "valu1").drop("areasymbol")
       },
       Some(valuWideOracle)))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.Tables
 import graft.io.Cdc
@@ -161,8 +162,8 @@ object SampleQueries extends QuerySet {
         graft.streaming.Ingest.initSnapshot(oldSnap, s"$tmp/lake")
         // checkpoint the full-outer diff once — both wave writes read
         // the materialized change set instead of re-running the join
-        val ch = Cdc.changes(oldSnap, newSnap, "c_custkey", Seq("bal_cents"))
-          .localCheckpoint(true)
+        val ch = Materialize.checkpoint(
+          Cdc.changes(oldSnap, newSnap, "c_custkey", Seq("bal_cents")), eager = true)
         ch.filter(col("c_custkey") % 2 === 0)
           .write.mode("append").parquet(s"$tmp/drop")
         graft.streaming.Ingest.streamCdcApply(s, s"$tmp/drop", ch.schema,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.Tables
 import graft.ann.Ann
@@ -257,12 +258,12 @@ object TrainQueries extends QuerySet {
   private def pqChain(s: org.apache.spark.sql.SparkSession, dir: String,
       trainFilter: org.apache.spark.sql.Column = lit(true)) = {
     import graft.ann.Pq
-    val sd = Pq.subDims(Tables.load(s, dir, "embeddings"),
-      "vec_id", "embedding", ds = 16).localCheckpoint(eager = false)
+    val sd = Materialize.checkpoint(Pq.subDims(Tables.load(s, dir, "embeddings"),
+      "vec_id", "embedding", ds = 16), eager = false)
     val sdt = sd.filter(trainFilter)
     val cb0 = sdt.filter(col("vid") < 16)
       .select(col("sub"), col("vid").as("cid"), col("dim"), col("v").as("cv"))
-    val cb1 = Pq.retrain(sdt, cb0).localCheckpoint(eager = false)
+    val cb1 = Materialize.checkpoint(Pq.retrain(sdt, cb0), eager = false)
     (sd, cb1)
   }
 
@@ -803,13 +804,13 @@ object TrainQueries extends QuerySet {
     // the persisted index artifacts land as CONSTRAINT-CLEAN leaves
     // (base/batches are filtered views of one corpus — ordinary
     // checkpoints' originConstraints poison the repair unions; see
-    // CleanCheckpoint)
-    val cpoint = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean _
-    val assigned0 = cpoint(Ann.ivfAssign(base, cents))
-    val g0 = cpoint(Ann.knnGraphMultiProbe(base, cents, k = 12, nprobe = 2))
+    // Materialize)
+    val assigned0 = Materialize.checkpoint(Ann.ivfAssign(base, cents), eager = false)
+    val g0 = Materialize.checkpoint(
+      Ann.knnGraphMultiProbe(base, cents, k = 12, nprobe = 2), eager = false)
     val (a1, g1) = Ann.graphInsert(assigned0, g0, b1, cents, k = 12, nprobe = 2)
-    val (_, g2) = Ann.graphInsert(cpoint(a1), cpoint(g1), b2, cents,
-      k = 12, nprobe = 2)
+    val (_, g2) = Ann.graphInsert(Materialize.checkpoint(a1, eager = false),
+      Materialize.checkpoint(g1, eager = false), b2, cents, k = 12, nprobe = 2)
     (qs, corpus, cents, g2)
   }
 
@@ -821,8 +822,8 @@ object TrainQueries extends QuerySet {
   private def twoLevel(cents: org.apache.spark.sql.DataFrame,
       ncent: Long): (org.apache.spark.sql.DataFrame, Long) = {
     val gstep = Ann.superStride(ncent)
-    (org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(
-      Ann.centroidGroups(cents, gstep)), gstep)
+    (Materialize.checkpoint(
+      Ann.centroidGroups(cents, gstep), eager = false), gstep)
   }
 
   private val n24LakeMemo = scala.collection.concurrent.TrieMap
@@ -950,14 +951,15 @@ object TrainQueries extends QuerySet {
         Ann.adaptiveCentroidCount(upperN, targetBucket = 8))
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val upperBase = base.filter(col("vid") % steps.head === 0)
-    val cpoint = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean _
     val lvl0 = Ann.LevelIndex(
-      cpoint(Ann.ivfAssign(base, cents)),
-      cpoint(Ann.knnGraphMultiProbe(base, cents, k = 12, nprobe = 2)),
+      Materialize.checkpoint(Ann.ivfAssign(base, cents), eager = false),
+      Materialize.checkpoint(
+        Ann.knnGraphMultiProbe(base, cents, k = 12, nprobe = 2), eager = false),
       cents, stride = 1L, k = 12, nprobe = 2)
     val lvl1 = Ann.LevelIndex(
-      cpoint(Ann.ivfAssign(upperBase, centsU)),
-      cpoint(Ann.knnGraphMultiProbe(upperBase, centsU, k = 8, nprobe = 4)),
+      Materialize.checkpoint(Ann.ivfAssign(upperBase, centsU), eager = false),
+      Materialize.checkpoint(
+        Ann.knnGraphMultiProbe(upperBase, centsU, k = 8, nprobe = 4), eager = false),
       centsU, stride = steps.head, k = 8, nprobe = 4)
     (qs, corpus, steps, Ann.towerInsert(Seq(lvl0, lvl1), batch))
   }
@@ -1357,8 +1359,8 @@ object TrainQueries extends QuerySet {
             element_at(col("__t"), col("__i") + 1)).as("bg"))
         // "bn", not "n": the quantile chain reserves c/cum/n (loud
         // require in Stats.cumCounts — this query is why it exists)
-        val counts = bg.groupBy(col("bg")).agg(count(lit(1)).as("bn"))
-          .localCheckpoint(eager = false)
+        val counts = Materialize.checkpoint(
+          bg.groupBy(col("bg")).agg(count(lit(1)).as("bn")), eager = false)
         val cut = graft.core.Stats.groupedQuantiles(
           counts.withColumn("__g", lit(1)), "__g", "bn", Seq(25 -> "cut"))
           .select(col("cut"))
@@ -2363,12 +2365,12 @@ object TrainQueries extends QuerySet {
         val docs = Tables.load(s, dir, "documents").filter(col("doc_id") < 1000)
         val surv = Curation.curate(docs) // (doc_id, lang, quality)
         val red = docs.select(col("doc_id"), TextAnalysis.redact(col("text")).as("rtext"))
-        val prep = Sampling.split(
+        val prep = Materialize.checkpoint(Sampling.split(
           surv.join(red, Seq("doc_id"))
             .select(col("doc_id"), col("lang"), col("quality"),
               TextAnalysis.tokenCount(col("rtext")).cast("long").as("n_tokens"),
               col("rtext")),
-          "doc_id").localCheckpoint(false)
+          "doc_id"), eager = false)
         val packed = Sampling.packBins(prep.filter(col("split") === "train"),
           "doc_id", "rtext", budget = 4096)
           .select(col("doc_id"), col("prefix"), col("bin"))
@@ -2571,10 +2573,10 @@ object TrainQueries extends QuerySet {
     // localCheckpoints (measured at sf1: >37 GB of spill and an OOM
     // uninlined, 10 s materialized).
     Q("n19_graph_ann",
-      // static construction (StaticPlan.sized): the walk builds ~10
+      // static construction (Materialize.sized): the walk builds ~10
       // lazy checkpoints whose exchanges AQE would otherwise
       // materialize as sequential blocking jobs at construction time
-      (s, dir) => graft.core.StaticPlan.sized(s,
+      (s, dir) => Materialize.sized(s,
           Tables.rowCount(s, dir, "embeddings")) {
         val e = Tables.load(s, dir, "embeddings")
         val qs = e.filter(col("vec_id") < 10)
@@ -2588,12 +2590,10 @@ object TrainQueries extends QuerySet {
         val cents = e.filter(col("vec_id") < ncent)
           .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
         val edges = Ann.knnGraphMultiProbe(corpus, cents, k = 6, nprobe = 2)
-        // truth feeds BOTH recall accountings — checkpoint lazily so
-        // the query×corpus scoring runs once (the pqChain convention)
         // eager: truth feeds BOTH recall gates; concurrent consumer
         // stages raced a lazy fill and re-ran the brute-force pass
-        val truth = Ann.bruteForceTopK(qs, corpus, k = 5)
-          .localCheckpoint(eager = true)
+        val truth = Materialize.checkpoint(
+          Ann.bruteForceTopK(qs, corpus, k = 5), eager = true)
         val g = Ann.recallAtK(truth,
           Ann.graphSearch(qs, corpus, cents, edges, k = 5, beam = 8,
             hops = 3, seedK = 5), k = 5)
@@ -2738,7 +2738,7 @@ object TrainQueries extends QuerySet {
     Q("n20_hnsw_ann",
       // static construction — see n19 (the tower chain is the deepest:
       // two graph builds + two walks' worth of lazy checkpoints)
-      (s, dir) => graft.core.StaticPlan.sized(s,
+      (s, dir) => Materialize.sized(s,
           Tables.rowCount(s, dir, "embeddings")) {
         val e = Tables.load(s, dir, "embeddings")
         val n = Tables.rowCount(s, dir, "embeddings")
@@ -2751,8 +2751,8 @@ object TrainQueries extends QuerySet {
         // one k=12 graph build serves both walks: rank ≤ 6 of the same
         // engine-portable ranking IS the n19 edge list
         // eager: both walks consume the one k=12 build (see truth note)
-        val edges12 = Ann.knnGraphMultiProbe(corpus, cents, k = 12, nprobe = 2)
-          .localCheckpoint(eager = true)
+        val edges12 = Materialize.checkpoint(
+          Ann.knnGraphMultiProbe(corpus, cents, k = 12, nprobe = 2), eager = true)
         val edges6 = edges12.filter(col("rank") <= 6)
         val steps = Ann.towerSteps(n, levels = 2)
         val upper = corpus.filter(col("vid") % steps.head === 0)
@@ -2768,8 +2768,8 @@ object TrainQueries extends QuerySet {
         val upperEdges = Ann.knnGraphMultiProbe(upper, centsU, k = 8, nprobe = 4)
         // eager: truth feeds BOTH recall gates; concurrent consumer
         // stages raced a lazy fill and re-ran the brute-force pass
-        val truth = Ann.bruteForceTopK(qs, corpus, k = 5)
-          .localCheckpoint(eager = true)
+        val truth = Materialize.checkpoint(
+          Ann.bruteForceTopK(qs, corpus, k = 5), eager = true)
         val h = Ann.recallAtK(truth,
           Ann.hnswSearch(qs, corpus, Seq(upperEdges), steps, edges12,
             k = 5, beam = 8, hops = 5, upperHops = 3, upperBeam = 3,
@@ -2910,14 +2910,14 @@ object TrainQueries extends QuerySet {
     // operator. Verify still runs THIS full gated form.
     Q("n22_graph_insert",
       // static construction — see n19 (chain + rebuild + two walks)
-      (s, dir) => graft.core.StaticPlan.sized(s,
+      (s, dir) => Materialize.sized(s,
           Tables.rowCount(s, dir, "embeddings")) {
         val (qs, corpus, cents, g2) = n22MaintainedChain(s, dir)
         val rebuilt = Ann.knnGraphMultiProbe(corpus, cents, k = 12, nprobe = 2)
         // eager: truth feeds BOTH recall gates; concurrent consumer
         // stages raced a lazy fill and re-ran the brute-force pass
-        val truth = Ann.bruteForceTopK(qs, corpus, k = 5)
-          .localCheckpoint(eager = true)
+        val truth = Materialize.checkpoint(
+          Ann.bruteForceTopK(qs, corpus, k = 5), eager = true)
         val ri = Ann.recallAtK(truth,
           Ann.graphSearch(qs, corpus, cents, g2, k = 5, beam = 8,
             hops = 3, seedK = 5), k = 5)
@@ -3036,7 +3036,7 @@ object TrainQueries extends QuerySet {
     // ~45-stage chain is local-mode stage-latency, wall ≈ task/1.2.
     Q("n23_tower_insert",
       // static construction — see n19 (two tower builds + two walks)
-      (s, dir) => graft.core.StaticPlan.sized(s,
+      (s, dir) => Materialize.sized(s,
           Tables.rowCount(s, dir, "embeddings")) {
         val (qs, corpus, steps, maintained) = n23MaintainedChain(s, dir)
         val e = Tables.load(s, dir, "embeddings")
@@ -3052,8 +3052,8 @@ object TrainQueries extends QuerySet {
           corpus.filter(col("vid") % steps.head === 0), centsU, k = 8, nprobe = 4)
         // eager: truth feeds BOTH recall gates; concurrent consumer
         // stages raced a lazy fill and re-ran the brute-force pass
-        val truth = Ann.bruteForceTopK(qs, corpus, k = 5)
-          .localCheckpoint(eager = true)
+        val truth = Materialize.checkpoint(
+          Ann.bruteForceTopK(qs, corpus, k = 5), eager = true)
         val ri = Ann.recallAtK(truth,
           Ann.hnswSearch(qs, corpus, Seq(maintained(1).edges), steps,
             maintained(0).edges, k = 5, beam = 8, hops = 3, upperHops = 3,
@@ -3233,9 +3233,9 @@ object TrainQueries extends QuerySet {
         // ONE probe frame feeds both the prune set and the repair —
         // re-deriving the two-level chain per consumer doubles its
         // window stages per run (cheap at 10^9, visible at sf0.1)
-        val probes = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(
+        val probes = Materialize.checkpoint(
           Ann.probesTwoLevel(batch.select(col("vid"), col("vec")),
-            grouped, gstep, nprobe = 2, gprobe = 2))
+            grouped, gstep, nprobe = 2, gprobe = 2), eager = false)
         val probed = Ann.cidsOf(probes)
         val (aP, gP) = Ann.indexLakeProbedSlice(s, root, probed)
         val (a1, g1) = Ann.graphInsertProbed(aP, gP, probes, k = 12)
@@ -3316,14 +3316,13 @@ object TrainQueries extends QuerySet {
         val (grouped, gstep) = Ann.quantizerRead(s, s"$root/level0")
         val (groupedU, gstepU) = Ann.quantizerRead(s, s"$root/level1")
         val sliver = batch.filter(col("vid") % steps.head === 0)
-        val cpoint = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean _
         // one probe frame per level feeds prune + repair (the n24 note)
-        val probes0 = cpoint(Ann.probesTwoLevel(
+        val probes0 = Materialize.checkpoint(Ann.probesTwoLevel(
           batch.select(col("vid"), col("vec")), grouped, gstep,
-          nprobe = 2, gprobe = 2))
-        val probes1 = cpoint(Ann.probesTwoLevel(
+          nprobe = 2, gprobe = 2), eager = false)
+        val probes1 = Materialize.checkpoint(Ann.probesTwoLevel(
           sliver.select(col("vid"), col("vec")), groupedU, gstepU,
-          nprobe = 4, gprobe = 2))
+          nprobe = 4, gprobe = 2), eager = false)
         val probed0 = Ann.cidsOf(probes0)
         val probed1 = Ann.cidsOf(probes1)
         val (a0, g0) = Ann.indexLakeProbedSlice(s, s"$root/level0", probed0)
@@ -3476,9 +3475,9 @@ object TrainQueries extends QuerySet {
         // the run copy carries the base lake's persisted quantizer;
         // read it rather than recompute (the n24 note)
         val (grouped, gstep) = Ann.quantizerRead(s, root)
-        val probes = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(
+        val probes = Materialize.checkpoint(
           Ann.probesTwoLevel(batch.select(col("vid"), col("vec")),
-            grouped, gstep, nprobe = 2, gprobe = 2))
+            grouped, gstep, nprobe = 2, gprobe = 2), eager = false)
         val probed = Ann.cidsOf(probes)
         val (aP, gP) = Ann.indexLakeProbedSlice(s, root, probed, buckets = 8)
         val (a1, g1) = Ann.graphInsertProbed(aP, gP, probes, k = 12)
@@ -4292,12 +4291,12 @@ object TrainQueries extends QuerySet {
         val centSub = sd.filter(col("vid") < 8)
           .select(col("vid").as("bucket"), col("sub"), col("dim"),
             col("v").as("cv"))
-        val rsd = Pq.residualSubDims(sd, buckets, centSub)
-          .localCheckpoint(eager = false)
+        val rsd = Materialize.checkpoint(
+          Pq.residualSubDims(sd, buckets, centSub), eager = false)
         val cb0 = rsd.filter(col("vid") >= 8 && col("vid") < 24)
           .select(col("sub"), col("vid").as("cid"), col("dim"), col("v").as("cv"))
         val rs = rsd.select("vid", "sub", "dim", "v")
-        val cb1 = Pq.retrain(rs, cb0).localCheckpoint(eager = false)
+        val cb1 = Materialize.checkpoint(Pq.retrain(rs, cb0), eager = false)
         val codes = Pq.assign(rs, cb1).select("vid", "sub", "cid")
           .join(buckets, "vid")
         val qBuckets = buckets.filter(col("vid") < 10)
@@ -4446,17 +4445,14 @@ object TrainQueries extends QuerySet {
         // per-batch encode joins are batch-sized (hundreds of vectors)
         // — 8 shuffle tasks match the volume (the st07/st08 sizing
         // lesson); values are partitioning-invariant
-        val spKey = "spark.sql.shuffle.partitions"
-        val prevSp = s.conf.get(spKey)
-        s.conf.set(spKey, "8")
-        try {
+        Materialize.scoped(s, _ => 8) {
           newV.filter(pmod(col("vec_id"), lit(2)) === 0)
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.encodeAppend(s, s"$tmp/drop", newV.schema, s"$tmp/index", encode)
           newV.filter(pmod(col("vec_id"), lit(2)) === 1)
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.encodeAppend(s, s"$tmp/drop", newV.schema, s"$tmp/index", encode)
-        } finally s.conf.set(spKey, prevSp)
+        }
         s.read.parquet(s"$tmp/index/rows")
       },
       Some(indexAddOracle)),
@@ -4819,9 +4815,8 @@ object TrainQueries extends QuerySet {
             concat(substring(col("text"), 1, 40), lit("~"),
               expr("substring(text, 42)")).as("text"))
         val dd = base.unionByName(copies).unionByName(wobble)
-        val groups = dd.groupBy(col("text"))
-          .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_dups"))
-          .localCheckpoint(eager = false)
+        val groups = Materialize.checkpoint(dd.groupBy(col("text"))
+          .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_dups")), eager = false)
         val pairs = Multimodal.phashNearDupPairs(
           groups.select(col("doc_id"), col("text")), "doc_id", "text",
           maxHamming = 7, bits = bits)
@@ -4928,11 +4923,11 @@ object TrainQueries extends QuerySet {
         // does NOT help — filters push through exchanges). A leaf
         // plant leaves the base side's single-level CASE, which has
         // always compiled.
-        val planted = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(
+        val planted = Materialize.checkpoint(
           base.filter(col("doc_id") < 20)
             .select((col("doc_id") + 2000000).as("doc_id"),
               concat(substring(col("text"), 1, 40), lit("~"),
-                expr("substring(text, 42)")).as("text")))
+                expr("substring(text, 42)")).as("text")), eager = false)
         // TRIANGLE-ONLY pair (r15 advice): the wobble plants share six
         // untouched cold bands with their source, so the cold
         // self-join alone reproduces them and a hot-branch regression
@@ -5280,10 +5275,7 @@ object TrainQueries extends QuerySet {
         val admit = st11Admit(idx, oldSh)
         // per-batch volumes are wave-sized — 8 shuffle tasks match (the
         // st06/st07 sizing lesson); pair values partitioning-invariant
-        val spKey = "spark.sql.shuffle.partitions"
-        val prevSp = s.conf.get(spKey)
-        s.conf.set(spKey, "8")
-        try {
+        Materialize.scoped(s, _ => 8) {
           arriving.filter(pmod(col("doc_id"), lit(2)) === 0)
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.encodeAppend(s, s"$tmp/drop", arriving.schema,
@@ -5292,7 +5284,7 @@ object TrainQueries extends QuerySet {
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.encodeAppend(s, s"$tmp/drop", arriving.schema,
             s"$tmp/pairs", admit)
-        } finally s.conf.set(spKey, prevSp)
+        }
         s.read.parquet(s"$tmp/pairs/rows")
       },
       Some(jaccard3Sql.replace(
@@ -5391,13 +5383,13 @@ object TrainQueries extends QuerySet {
   override def benchPlans
       : Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
     Map(
-      "n22_graph_insert" -> ((s, dir) => graft.core.StaticPlan.sized(s,
+      "n22_graph_insert" -> ((s, dir) => Materialize.sized(s,
           Tables.rowCount(s, dir, "embeddings")) {
         val (qs, corpus, cents, g2) = n22MaintainedChain(s, dir)
         Ann.graphSearch(qs, corpus, cents, g2, k = 5, beam = 8,
           hops = 3, seedK = 5)
       }),
-      "n23_tower_insert" -> ((s, dir) => graft.core.StaticPlan.sized(s,
+      "n23_tower_insert" -> ((s, dir) => Materialize.sized(s,
           Tables.rowCount(s, dir, "embeddings")) {
         val (qs, corpus, steps, maintained) = n23MaintainedChain(s, dir)
         Ann.hnswSearch(qs, corpus, Seq(maintained(1).edges), steps,

@@ -2,6 +2,7 @@ package graft.sdv
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.core.Exprs
 import graft.schema.SdvAttribute
@@ -136,7 +137,7 @@ class SdvPlanner(
     val comp =
       if (shareBase)
         baseMemo.computeIfAbsent(req.cutOff,
-          _ => org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(compJoin))
+          _ => Materialize.checkpoint(compJoin, eager = true))
       else compJoin
 
     var joined: DataFrame = att.attributetablename match {

@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Byte-pair-encoding tokenizer TRAINING over a corpus — the
   * vocabulary-learning step of a pretraining pipeline (Sennrich et al.
@@ -76,8 +77,8 @@ object BpeTrain {
     * the form table re-checkpoints per round to keep lineage flat.
     * Stops early if no pair remains (fully merged vocab). */
   def train(words: DataFrame, rounds: Int): Seq[Merge] = {
-    var forms = words.select(charSeq(col("w")).as("seq"), col("n"))
-      .localCheckpoint(eager = false)
+    var forms = Materialize.checkpoint(
+      words.select(charSeq(col("w")).as("seq"), col("n")), eager = false)
     val out = ArrayBuffer.empty[Merge]
     var round = 1
     var done = false
@@ -89,9 +90,8 @@ object BpeTrain {
       else {
         val (l, r, pn) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         out += Merge(round, l, r, l + r, pn)
-        forms = forms
-          .select(applyMerge(col("seq"), l, r).as("seq"), col("n"))
-          .localCheckpoint(eager = false)
+        forms = Materialize.checkpoint(
+          forms.select(applyMerge(col("seq"), l, r).as("seq"), col("n")), eager = false)
         round += 1
       }
     }

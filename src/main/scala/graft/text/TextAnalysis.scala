@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (builder mandate; not present in the reference, which is tabular
@@ -165,9 +166,10 @@ object TextAnalysis {
     // unmaterialized, the corpus tokenize+aggregate (the dominant cost)
     // runs twice (plan-verified). Lazy localCheckpoint computes it once
     // at first action; same tradeoff as the simhash lanes.
-    val tf = docs.select(col(idCol), explode(tokens(col(textCol))).as("term"))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+    val tf = Materialize.checkpoint(
+      docs.select(col(idCol), explode(tokens(col(textCol))).as("term"))
+        .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")),
+      eager = false)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_total"))
     val w = Window.partitionBy(col(idCol)).orderBy(col("score").desc, col("term").asc)
@@ -277,14 +279,16 @@ object TextAnalysis {
     // target-flag conditional count) — separate rawC/tgtC aggregates
     // re-derived the tokenize/explode subtree a third time and paid a
     // second count join (measured ~1.5× on the 100× corpus)
-    val cnt = feats.groupBy(col("f")).agg(count(lit(1)).as("nr"),
-        sum(when(col("is_t"), 1L).otherwise(0L)).as("nt"))
-      // persisted because TWO consumers read it (the totals broadcast
-      // and the score join) — without the cache each re-derives the
-      // tokenize/explode/agg subtree, i.e. a whole extra corpus scan
-      // (the r8 0.78→1.61 s regression). The cache is vocab-sized
-      // (Zipf — orders smaller than the corpus), so it holds at scale.
-      .persist()
+    // checkpointed because TWO consumers read it (the totals broadcast
+    // and the score join) — unmaterialized, each re-derives the
+    // tokenize/explode/agg subtree, i.e. a whole extra corpus scan (the
+    // r8 0.78→1.61 s regression). The blocks are vocab-sized (Zipf —
+    // orders smaller than the corpus), so they hold at scale; unlike a
+    // Dataset cache they leave no session-wide entry behind.
+    val cnt = Materialize.checkpoint(
+      feats.groupBy(col("f")).agg(count(lit(1)).as("nr"),
+        sum(when(col("is_t"), 1L).otherwise(0L)).as("nt")),
+      eager = false)
     // distribution totals N_r / N_t — one broadcast one-row aggregate
     // over the vocab-sized count table (never a second corpus scan)
     val tot = cnt.agg(sum(col("nr")).as("tnr"), sum(col("nt")).as("tnt"))
@@ -333,9 +337,10 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     import spark.implicits._
-    val tf = docs.select(col(idCol), explode(tokens(col(textCol))).as("term"))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false) // feeds df-agg AND the score join
+    val tf = Materialize.checkpoint( // feeds df-agg AND the score join
+      docs.select(col(idCol), explode(tokens(col(textCol))).as("term"))
+        .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")),
+      eager = false)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_total"))
     val qt = queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }

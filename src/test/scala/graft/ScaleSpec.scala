@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1173,8 +1174,8 @@ class ScaleSpec extends AnyFunSuite {
     val (aF, gF) = (Ann.ivfAssign(base, cents),
       Ann.knnGraphMultiProbe(base, cents, k = 4, nprobe = 2))
     val (aR, gR) = Ann.graphInsert(
-      org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(aF),
-      org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(gF),
+      Materialize.checkpoint(aF, eager = false),
+      Materialize.checkpoint(gF, eager = false),
       batch, cents, k = 4, nprobe = 2)
     assert(rowsOf(appliedA.select(col("vid"), col("cid")).orderBy("vid")) ===
       rowsOf(aR.select(col("vid"), col("cid")).orderBy("vid")),
@@ -1215,8 +1216,8 @@ class ScaleSpec extends AnyFunSuite {
     // checkpointed like every production caller (TrainQueries.twoLevel)
     // — the quantizer artifact is a persisted leaf, so the candidate
     // plan's ONLY cross join is vecs × supers
-    val grouped = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(
-      Ann.centroidGroups(cents, gstep))
+    val grouped = Materialize.checkpoint(
+      Ann.centroidGroups(cents, gstep), eager = false)
     val gRows = grouped.select(col("cid"), col("gid")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gRows.size === ncent &&
@@ -1288,8 +1289,8 @@ class ScaleSpec extends AnyFunSuite {
         StructField("vec", ArrayType(FloatType)))),
       (0L until 40L).map(i => Row(i, vecOf(i, 29))))
     val gstep = Ann.superStride(ncent)
-    val grouped = org.apache.spark.sql.graft.CleanCheckpoint.lazyClean(
-      Ann.centroidGroups(cents, gstep))
+    val grouped = Materialize.checkpoint(
+      Ann.centroidGroups(cents, gstep), eager = false)
     val tmp = java.nio.file.Files.createTempDirectory("graft_quant_lake").toString
     Ann.indexLakeWrite(Ann.ivfAssignTwoLevel(corpus, grouped, gstep, 2),
       Ann.knnGraphTwoLevel(corpus, grouped, gstep, k = 4, nprobe = 2,
@@ -1374,14 +1375,15 @@ class ScaleSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
-  test("CleanCheckpoint honors spark.graft.checkpoint.storageLevel (scale contract)") {
+  test("Materialize.checkpoint honors spark.graft.checkpoint.storageLevel") {
     // At 100 TB a cluster session materializing a fact-sized frame must
     // be able to pick a residency that survives executor loss
     // (MEMORY_AND_DISK_2 / DISK_ONLY_2) — localCheckpoint truncates
     // lineage, so the default unreplicated blocks are a single point of
-    // failure there. Pin: the conf reaches the checkpointed RDD, the
-    // default stays MEMORY_AND_DISK, a typo fails naming the key, and
-    // NONE (a truncated lineage with no blocks behind it) is rejected.
+    // failure there. Pin, for an eager AND a lazy checkpoint: the conf
+    // reaches the checkpointed RDD, the default stays MEMORY_AND_DISK, a
+    // typo fails naming the key, and NONE (a truncated lineage with no
+    // blocks behind it) is rejected.
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.storage.StorageLevel
     val s = StructType(Seq(StructField("k", LongType)))
@@ -1390,22 +1392,23 @@ class ScaleSpec extends AnyFunSuite {
       d.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.getStorageLevel
     def keysOf(d: org.apache.spark.sql.DataFrame): Set[Long] =
       d.collect().map(_.getLong(0)).toSet
-    val dflt = org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(base)
-    assert(levelOf(dflt) === StorageLevel.MEMORY_AND_DISK)
-    assert(keysOf(dflt) === (1L to 100L).toSet)
-    spark.conf.set("spark.graft.checkpoint.storageLevel", "DISK_ONLY")
-    try {
-      val disk = org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(base)
-      assert(levelOf(disk) === StorageLevel.DISK_ONLY)
-      assert(keysOf(disk) === (1L to 100L).toSet)
-      for (bad <- Seq("MEMORY_AND_DISC", "NONE")) {
-        spark.conf.set("spark.graft.checkpoint.storageLevel", bad)
-        val e = intercept[IllegalArgumentException](
-          org.apache.spark.sql.graft.CleanCheckpoint.eagerClean(base))
-        assert(e.getMessage.contains("spark.graft.checkpoint.storageLevel"), e.getMessage)
-        assert(e.getMessage.contains(bad), e.getMessage)
-      }
-    } finally spark.conf.unset("spark.graft.checkpoint.storageLevel")
+    for (eager <- Seq(true, false)) {
+      val dflt = Materialize.checkpoint(base, eager)
+      assert(levelOf(dflt) === StorageLevel.MEMORY_AND_DISK, s"eager=$eager")
+      assert(keysOf(dflt) === (1L to 100L).toSet)
+      spark.conf.set("spark.graft.checkpoint.storageLevel", "DISK_ONLY")
+      try {
+        val disk = Materialize.checkpoint(base, eager)
+        assert(levelOf(disk) === StorageLevel.DISK_ONLY, s"eager=$eager")
+        assert(keysOf(disk) === (1L to 100L).toSet)
+        for (bad <- Seq("MEMORY_AND_DISC", "NONE")) {
+          spark.conf.set("spark.graft.checkpoint.storageLevel", bad)
+          val e = intercept[IllegalArgumentException](Materialize.checkpoint(base, eager))
+          assert(e.getMessage.contains("spark.graft.checkpoint.storageLevel"), e.getMessage)
+          assert(e.getMessage.contains(bad), e.getMessage)
+        }
+      } finally spark.conf.unset("spark.graft.checkpoint.storageLevel")
+    }
   }
 
   test("V6+V7: corestriction depth caps the horizon-rule root zone") {
