@@ -18,7 +18,7 @@ object Bench {
     * queries in this same session. */
   def session(cpus: String): SparkSession = {
     val spark = GraftSession.build(cpus.toInt)
-    Tables.enableCache()
+    GraftSession.state(spark).cacheTables = true
     spark
   }
 
@@ -71,11 +71,12 @@ object Bench {
       SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
         try runNoop(spark, warmDir, name) catch { case _: Throwable => () }
       }
-      // Release the warmup's state before timing: its cached tables and
-      // checkpoint/broadcast blocks otherwise bleed eviction + async
-      // ContextCleaner work into the first timed queries (measured: the
-      // early a-family inflated 2→8-16 s with warmup residue live).
-      Tables.clearCache(warmDir)
+      // Release the warmup's state before timing: its cached tables,
+      // landings and checkpoint/broadcast blocks otherwise bleed
+      // eviction + async ContextCleaner work into the first timed
+      // queries (measured: the early a-family inflated 2→8-16 s with
+      // warmup residue live).
+      GraftSession.forget(spark, warmDir)
       spark.catalog.clearCache()
       System.gc()
       Thread.sleep(2000)
@@ -91,7 +92,7 @@ object Bench {
     // window — the number that tracks code, not neighbors; EVERY run's
     // per-query wall/task/CPU/GC plus its load average ship alongside,
     // so a noisy record is self-diagnosing from the artifact alone.
-    val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
+    val runs = GraftSession.envInt("SPARK_GRAFT_BENCH_RUNS", 3)
     val allRuns: Seq[(Seq[QRec], Double, TaskMetrics.Sums)] = (1 to runs).map { _ =>
       val la = loadAvg
       val s0 = metrics.totals

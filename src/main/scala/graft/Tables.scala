@@ -9,34 +9,17 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** After [[enableCache]], base tables are cached once per session —
-    * the multi-query batch-session pattern the reference itself uses
+  /** In a context whose state has `cacheTables` set ([[Bench.session]]
+    * sets it), base tables are cached once per context — the
+    * multi-query batch-session pattern the reference itself uses
     * (gSSURGO_CreateSoilMaps loops CreateSoilMap over one database;
-    * SURVEY §3 "cache candidate"). Off by default: single-query runs and
-    * correctness dumps should measure the cold path. */
-  @volatile private var cacheTables: Boolean = false
-  private val cached = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** Turn on base-table caching for a multi-query session (Bench). */
-  def enableCache(): Unit = cacheTables = true
-
-  /** Unpersist and forget every table cached under `dir` (all dirs when
-    * empty) — lets a warmup phase at one SF release its storage before
-    * a timed phase at another. Also evicts the matching [[rowCount]]
-    * memos: a vintage dir rewritten in-process (or a long-lived driver
-    * re-pointed at regenerated data) must not serve stale counts to
-    * the adaptive-parameter call sites (r13 advice). */
-  def clearCache(dir: String = ""): Unit = {
-    cached.keys.toSeq.filter(k => dir.isEmpty || k._1 == dir).foreach { k =>
-      cached.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    counts.keys.toSeq.filter(k => dir.isEmpty || k._1 == dir)
-      .foreach(counts.remove)
-  }
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (cacheTables)
-      cached.getOrElseUpdate((dir, name), {
+    * SURVEY §3 "cache candidate"); [[GraftSession.forget]] unpersists
+    * a dir's tables. Off by default: single-query runs and correctness
+    * dumps should measure the cold path. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val state = GraftSession.state(spark)
+    if (state.cacheTables)
+      state.memo(s"table/$name", dir) {
         val raw = spark.read.parquet(s"$dir/$name.parquet")
         // Cache-fill LAYOUT (r18): the test lake ships one row group per
         // table, so the scan - and therefore the cached RDD every query
@@ -60,11 +43,9 @@ object Tables {
           .getOrElse(1)
         val scanParts = raw.queryExecution.toRdd.getNumPartitions
         (if (target > scanParts) raw.repartition(target) else raw).cache()
-      })
+      }
     else spark.read.parquet(s"$dir/$name.parquet")
-
-  private val counts =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  }
 
   /** Row count per (vintage dir, table) — the per-vintage corpus-
     * statistics artifact (the reference's `mdstattabs` row-count
@@ -72,15 +53,18 @@ object Tables {
     * layer steps) need only the integer n, and paying a full table
     * scan per QUERY to pick an integer is a 100 TB anti-pattern: the
     * r12 battery ran several full `documents`/`embeddings` passes for
-    * exactly this. Resolution order: session memo → parquet FOOTER
-    * metadata (row counts live in the footer, so the read is O(KB)
-    * regardless of table size — the ingest-time stats table a real
-    * lake would carry) → a counted scan only if the footer path fails.
+    * exactly this. Resolution order: context memo (dropped by
+    * [[GraftSession.forget]], so a vintage dir rewritten in-process
+    * re-counts) → parquet FOOTER metadata (row counts live in the
+    * footer, so the read is O(KB) regardless of table size — the
+    * ingest-time stats table a real lake would carry) → a counted scan
+    * only if the footer path fails.
     * Net: zero data-scan count jobs per battery run. */
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
-    counts.getOrElseUpdate((dir, name),
+    GraftSession.memo(spark, s"rows/$name", dir) {
       footerRowCount(spark, s"$dir/$name.parquet")
-        .getOrElse(load(spark, dir, name).count()))
+        .getOrElse(load(spark, dir, name).count())
+    }
 
   private def footerRowCount(spark: SparkSession, path: String): Option[Long] =
     try {

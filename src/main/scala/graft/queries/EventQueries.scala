@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Materialize
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.events.EventOps
 
 /** Temporal event operators: as-of join and rolling range windows.
@@ -201,11 +201,7 @@ object EventQueries extends QuerySet {
     Q("st07_stream_interval_join",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        // session-keyed root (the lshPairs convention) — concurrent
-        // processes must not clobber each other's checkpoint/drop
-        val tmp = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_st07_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val tmp = GraftSession.scratch(s, "st07", dir)
         val p = new org.apache.hadoop.fs.Path(tmp)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
@@ -276,9 +272,7 @@ object EventQueries extends QuerySet {
     Q("st10_stream_outer_join",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        val tmp = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_st10_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val tmp = GraftSession.scratch(s, "st10", dir)
         val p = new org.apache.hadoop.fs.Path(tmp)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
@@ -824,9 +818,7 @@ object EventQueries extends QuerySet {
     Q("st08_watermark_drop",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        val tmp = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_st08_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val tmp = GraftSession.scratch(s, "st08", dir)
         val p = new org.apache.hadoop.fs.Path(tmp)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val ev = Tables.events(s, dir).select(col("ts"), col("event_type"))

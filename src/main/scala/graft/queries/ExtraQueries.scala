@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Materialize
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.analog.Analog._
 import graft.core.Exprs
 import graft.sdv.SdvAgg
@@ -580,12 +580,7 @@ object ExtraQueries extends QuerySet {
     Q("st04_valu_incremental",
       (s, dir) => {
         import org.apache.spark.sql.DataFrame
-        // session-keyed root (the lshPairs convention): a dir-only path
-        // lets a concurrent bench+verify process pair delete each
-        // other's checkpoint/lake mid-run
-        val tmp = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_st04_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val tmp = GraftSession.scratch(s, "st04", dir)
         // fresh run — a stale checkpoint would replay nothing and a
         // stale lake could mask a code change
         val p = new org.apache.hadoop.fs.Path(tmp)
@@ -629,27 +624,20 @@ object ExtraQueries extends QuerySet {
       },
       Some(valuWideOracle)))
 
-  /** j19's bucketed-table landing, once per (session, dir): a 3-rep
+  /** j19's bucketed-table landing, once per (context, dir): a 3-rep
     * bench (plus warmup) otherwise re-writes both tables every
     * invocation — write time polluting the join measurement — and two
     * concurrent invocations would race on DROP/CREATE of the shared
     * catalog names. The landed layout is immutable for a given dir, so
-    * the memoized names stay valid for the session's lifetime; the
-    * fixed per-dir path overwrites rather than accumulating. */
-  private val bucketMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), (String, String)]
-
+    * the memoized names stay valid for the context's lifetime; the
+    * fixed per-dir path overwrites rather than accumulating. Table
+    * names carry the dir only: the catalog belongs to the context. */
   private def landBuckets(s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) =
-    bucketMemo.getOrElseUpdate((s, dir), {
-      // session-keyed path AND table names (the lshPairs convention):
-      // a concurrent process re-landing the same dir would overwrite
-      // these files under this session's still-registered tables
-      val suffix = dir.replaceAll("[^A-Za-z0-9]", "_") +
-        s"_${System.identityHashCode(s)}"
-      val base = graft.io.TmpRoots.cleanupOnExit(s"/tmp/graft_bkt_$suffix")
+    GraftSession.memo(s, "buckets", dir) {
+      val base = GraftSession.scratch(s, "bkt", dir)
       def land(df: org.apache.spark.sql.DataFrame, name: String, key: String): String = {
-        val t = s"bkt_${name}_$suffix"
+        val t = s"bkt_${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
         s.sql(s"DROP TABLE IF EXISTS $t")
         df.write.mode("overwrite").bucketBy(8, key).sortBy(key)
           .option("path", s"$base/$name").format("parquet").saveAsTable(t)
@@ -659,7 +647,7 @@ object ExtraQueries extends QuerySet {
           .select(col("o_orderkey"), col("o_orderpriority")), "orders", "o_orderkey"),
         land(Tables.load(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_extendedprice")), "lineitem", "l_orderkey"))
-    })
+    }
 
   /** V14 analog horizon rows: om rides the rating, db3i/fragvol are
     * key-derived (integral doubles — exact sums, see Analog scaladoc). */

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.geo.Geo
 
 /** Real-geometry upgrades for the spatial operators previously modeled
@@ -31,19 +31,17 @@ object GeoQueries extends QuerySet {
     * unchanged; at sf1 (n = 150000) it yields 4000, holding per-point
     * candidate fan flat. bitlen is the t33 integer idiom
     * (length(bin(x)), with bin(0) = "0" ⇒ length 1), so the SQL twin
-    * replays it exactly. Memoized per (session, dir) so the side is a
+    * replays it exactly. Memoized per (context, dir) so the side is a
     * plan LITERAL — no per-query broadcast stage; the one-row count
     * is a bounded driver action (the dimension-collect convention). */
-  private val sideMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Long]
   private def domainSide(s: org.apache.spark.sql.SparkSession,
       dir: String): Long =
-    sideMemo.getOrElseUpdate((System.identityHashCode(s), dir), {
+    GraftSession.memo(s, "domainSide", dir) {
       val ratio = Tables.rowCount(s, dir, "customer") / 15000L
       val bitlen =
         if (ratio == 0L) 1 else 64 - java.lang.Long.numberOfLeadingZeros(ratio)
       1000L * (1L << (bitlen / 2))
-    })
+    }
 
   /** Shared synthesis (SQL twin of the column expressions below):
     * box (x0,y0)-(x0+w,y0+h), trapezoid (x0,y0),(x0+w,y0),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.analog.Analog._
 import graft.analog.OracleSql
 import graft.core.Exprs
@@ -33,11 +33,7 @@ object MiscQueries extends QuerySet {
           .toDF("r_regionkey", "r_name")
         val region = Tables.load(s, dir, "region")
           .select(col("r_regionkey"), col("r_name")).unionByName(planted)
-        // session-keyed landing (the lshPairs convention): a concurrent
-        // process overwriting the CSV mid-read would corrupt the gate
-        val tmp = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_s01_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val tmp = GraftSession.scratch(s, "s01", dir)
         PipeCsv.write(region, tmp)
         PipeCsv.read(s, tmp, region.schema)
       },
@@ -56,9 +52,7 @@ object MiscQueries extends QuerySet {
     Q("s04_wss_canned_zip",
       (s, dir) => {
         import java.util.zip.{ZipEntry, ZipOutputStream}
-        val root = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_s04_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val root = GraftSession.scratch(s, "s04", dir)
         val p = new org.apache.hadoop.fs.Path(root)
         val conf = s.sparkContext.hadoopConfiguration
         p.getFileSystem(conf).delete(p, true)
@@ -114,9 +108,7 @@ object MiscQueries extends QuerySet {
       (s, dir) => {
         import graft.sdv.SdvPlanner
         import graft.schema.SdvCatalog
-        val root = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_s02_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val root = GraftSession.scratch(s, "s02", dir)
         val area = "NE109"
         val fk = s.createDataFrame(
           SdvPlanner.defaultFks.map { case (p, c, k) => (p, c, k, k) })

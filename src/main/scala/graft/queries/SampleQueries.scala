@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Materialize
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.io.Cdc
 import graft.pipeline.{Profile, Sampling}
 import graft.text.TextAnalysis
@@ -153,9 +153,7 @@ object SampleQueries extends QuerySet {
     // as s15, now through the streaming machinery.
     Q("st09_stream_cdc_apply",
       (s, dir) => {
-        val tmp = graft.io.TmpRoots.cleanupOnExit(
-          "/tmp/graft_st09_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-          s"_${System.identityHashCode(s)}")
+        val tmp = GraftSession.scratch(s, "st09", dir)
         val p = new org.apache.hadoop.fs.Path(tmp)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         val (oldSnap, newSnap) = snapshotPair(s, dir)
@@ -378,24 +376,15 @@ object SampleQueries extends QuerySet {
            |FROM z GROUP BY 1""".stripMargin
       }))
 
-  /** s13's fragmented landing + its compaction, once per (session,
+  /** s13's fragmented landing + its compaction, once per (context,
     * dir): the fragmented form is 64 round-robin files (an explicit
     * repartition count — AQE never coalesces it), the compacted form
     * is ceil(rows/25k) files. Both are pure functions of the source
-    * table, so re-landing per bench rep buys nothing. The on-disk
-    * path carries the session identity too — a dir-only path would
-    * let a second session's overwrite race a first session's lazy
-    * reads of the same landing (the memo key alone can't prevent it:
-    * each session misses independently). */
-  private val fragMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
+    * table, so re-landing per bench rep buys nothing. */
   private def landFragmented(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    fragMemo.getOrElseUpdate((s, dir), {
-      val base = graft.io.TmpRoots.cleanupOnExit(
-        "/tmp/graft_cmp_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + java.lang.Integer.toHexString(System.identityHashCode(s)))
+    GraftSession.memo(s, "fragmented", dir) {
+      val base = GraftSession.scratch(s, "cmp", dir)
       val l = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
       l.repartition(64).write.mode("overwrite").parquet(s"$base/frag")
@@ -403,51 +392,40 @@ object SampleQueries extends QuerySet {
       val nFiles = ((frag.count() + 24999L) / 25000L).toInt
       frag.repartition(nFiles).write.mode("overwrite").parquet(s"$base/compact")
       base
-    })
+    }
 
 
   /** Hive-partitioned events landing (day=YYYY-MM-DD directories),
-    * once per (session, dir) — the s13/j19 memoized-landing pattern
+    * once per (context, dir) — the s13/j19 memoized-landing pattern
     * for the third layout primitive (partitioning; j19 gates
     * bucketing, s14 Z-order). Day count is calendar-bounded (~30), so
     * each partition dir gets one right-sized file via a pre-shuffle
     * on the partition key. */
-  private val partMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   private def landPartitioned(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    partMemo.getOrElseUpdate((s, dir), {
-      val base = graft.io.TmpRoots.cleanupOnExit(
-        "/tmp/graft_part_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + java.lang.Integer.toHexString(System.identityHashCode(s)))
+    GraftSession.memo(s, "partitioned", dir) {
+      val base = GraftSession.scratch(s, "part", dir)
       graft.Tables.events(s, dir)
         .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("value"))
         .repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(base)
       base
-    })
+    }
 
   /** s19/s20's cross-format landings (ORC + JSONL copies of
-    * documents), once per (session, dir) — the s13 memoized-landing
-    * pattern, path carrying the session identity so concurrent
-    * sessions can't overwrite each other's lazy reads. */
-  private val fmtMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
+    * documents), once per (context, dir) — the s13 memoized-landing
+    * pattern. */
   private def landFormats(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    fmtMemo.getOrElseUpdate((s, dir), {
-      val base = graft.io.TmpRoots.cleanupOnExit(
-        "/tmp/graft_fmt_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + java.lang.Integer.toHexString(System.identityHashCode(s)))
+    GraftSession.memo(s, "formats", dir) {
+      val base = GraftSession.scratch(s, "fmt", dir)
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
       d.write.mode("overwrite").orc(s"$base/orc")
       d.write.mode("overwrite").json(s"$base/jsonl")
       base
-    })
+    }
 
   /** The s09/s15/st09 snapshot pair — ONE definition of the CDC
     * change-set recipe (%13 deletes, %7 balance bumps, %17 shifted-key
@@ -469,23 +447,15 @@ object SampleQueries extends QuerySet {
     (oldSnap, newSnap)
   }
 
-  /** s10's two writer vintages, landed once per (session, dir) at a
+  /** s10's two writer vintages, landed once per (context, dir) at a
     * fixed per-dir path: a fresh createTempDirectory per invocation
     * leaked a new events copy every bench rep; the vintages are a pure
     * deterministic function of the source table, so re-landing buys
     * nothing and the overwrite keeps the path single-copy. */
-  private val vintageMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   private def landVintages(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    vintageMemo.getOrElseUpdate((s, dir), {
-      // session identity in the path (the landPartitioned convention):
-      // a dir-only path lets a second session/process overwrite the
-      // parquet while this session's memoized reader is mid-scan
-      val base = graft.io.TmpRoots.cleanupOnExit(
-        "/tmp/graft_evo_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-        "_" + java.lang.Integer.toHexString(System.identityHashCode(s)))
+    GraftSession.memo(s, "vintages", dir) {
+      val base = GraftSession.scratch(s, "evo", dir)
       val e = Tables.events(s, dir)
       e.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("user_id"),
@@ -496,7 +466,7 @@ object SampleQueries extends QuerySet {
           col("value"), col("props"))
         .write.mode("overwrite").parquet(s"$base/v2")
       base
-    })
+    }
 
   /** st09's per-batch transform (the streaming MERGE body —
     * Cdc.applyChanges of the full change set into the old snapshot) on

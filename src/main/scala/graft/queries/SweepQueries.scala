@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.analog.OracleSql
 import graft.core.Exprs
 import graft.schema.SdvAttribute
@@ -95,14 +95,11 @@ object SweepQueries extends QuerySet {
 
   // ---- Spark side ----------------------------------------------------
 
-  /** The 104 leg plans are deterministic per (session, dir); memoize so
+  /** The 104 leg plans are deterministic per (context, dir); memoize so
     * a multi-rep bench pays the per-leg physical planning once (the
     * leg RDDs are immutable and re-executable). */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def sweep(s: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((s, dir), buildSweep(s, dir))
+    GraftSession.memo(s, "sweep", dir)(buildSweep(s, dir))
 
   private def buildSweep(s: SparkSession, dir: String): DataFrame = {
     val l = Tables.load(s, dir, "lineitem").filter(col("l_orderkey") % 11 === 0)

@@ -12,7 +12,7 @@ package graft.tools
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val reps = graft.GraftSession.envInt("SPARK_GRAFT_REPS", 2)
     val probeAll = sys.env.get("SPARK_GRAFT_PROBE_ALL").contains("1")
     val spark = graft.Bench.session(graft.GraftSession.envCpus.toString)
     val metrics = new TaskMetrics

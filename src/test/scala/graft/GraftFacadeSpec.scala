@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,7 +16,7 @@ class GraftFacadeSpec extends AnyFunSuite {
   import TestSpark._
 
   test("pipe-text drop → loadSurvey → merged soil maps") {
-    val root = Files.createTempDirectory("graft_wss").toString
+    val root = tempDir("graft_wss").toString
     // land a minimal survey: mapunit + component as |-text
     val mu = df(SsurgoSchema.mapunit, Seq(
       Row("100001", "AaB", "Alpha silt loam", "L1"),

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every entry point builds its session through [[GraftSession]]: a
   * second builder chain is how the confs drifted apart before. Every
   * checkpoint and every AQE / shuffle-partition scope goes through
-  * `org.apache.spark.sql.graft.Materialize`, for the same reason. */
+  * `org.apache.spark.sql.graft.Materialize`, and every memo and scratch
+  * root through [[GraftSession]]'s state, for the same reason. */
 class GraftSessionSpec extends AnyFunSuite {
 
   private def scalaSources(root: String): Seq[Path] =
@@ -26,22 +27,35 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(strays.isEmpty, s"builders outside the factory: ${strays.mkString(", ")}")
   }
 
-  test("checkpoints and AQE / shuffle-partition confs under src/main only in Materialize") {
-    val needles = Seq(".localCheckpoint(", "spark.sql.adaptive.enabled",
-      "spark.sql.shuffle.partitions", "SQLConf.ADAPTIVE_EXECUTION_ENABLED",
-      "SQLConf.SHUFFLE_PARTITIONS")
+  /** `file:line: text` of each non-comment line under src/main outside
+    * `owner` that contains a needle. */
+  private def strays(owner: String, needles: Seq[String],
+      exempt: (String, String) => Boolean = (_, _) => false): Seq[String] = {
     val sources = scalaSources("src/main")
-    assert(sources.exists(_.getFileName.toString == "Materialize.scala"),
-      "the module itself was not found")
-    val strays = for {
-      p <- sources if p.getFileName.toString != "Materialize.scala"
+    assert(sources.exists(_.getFileName.toString == owner), s"$owner was not found")
+    for {
+      p <- sources if p.getFileName.toString != owner
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       code = line.split("//", 2)(0)
       if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
-      // the session builder's initial confs are not a scope
-      if !(p.getFileName.toString == "GraftSession.scala" && code.contains(".config("))
+      if !exempt(p.getFileName.toString, code)
       if needles.exists(code.contains)
     } yield s"$p:${i + 1}: ${line.trim}"
-    assert(strays.isEmpty, s"materialization outside Materialize:\n${strays.mkString("\n")}")
+  }
+
+  test("checkpoints and AQE / shuffle-partition confs under src/main only in Materialize") {
+    val found = strays("Materialize.scala", Seq(".localCheckpoint(",
+      "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+      "SQLConf.ADAPTIVE_EXECUTION_ENABLED", "SQLConf.SHUFFLE_PARTITIONS"),
+      // the session builder's initial confs are not a scope
+      (file, code) => file == "GraftSession.scala" && code.contains(".config("))
+    assert(found.isEmpty, s"materialization outside Materialize:\n${found.mkString("\n")}")
+  }
+
+  test("memos and scratch roots under src/main only in GraftSession") {
+    assert(!Files.exists(Paths.get("src/main/scala/graft/io/TmpRoots.scala")))
+    val found = strays("GraftSession.scala", Seq("TrieMap", "identityHashCode",
+      "cleanupOnExit", "TmpRoots", "\"/tmp"))
+    assert(found.isEmpty, s"session state outside GraftSession:\n${found.mkString("\n")}")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,7 +18,7 @@ class LakeSessionSpec extends AnyFunSuite {
     StructField("areasymbol", StringType)))
 
   test("lake: partitioned write prunes partitions on areasymbol filter") {
-    val root = Files.createTempDirectory("graft_lake").toString
+    val root = tempDir("graft_lake").toString
     val d = df(schema, Seq(Row("m1", 1, "NE109"), Row("m2", 2, "IA021"),
       Row("m3", 3, "NE109")))
     Lake.write(d, root, "mapunit")
@@ -38,7 +36,7 @@ class LakeSessionSpec extends AnyFunSuite {
   }
 
   test("lake: appendSurvey replaces only the re-landed survey partition") {
-    val root = Files.createTempDirectory("graft_lake2").toString
+    val root = tempDir("graft_lake2").toString
     Lake.write(df(schema, Seq(Row("m1", 1, "NE109"), Row("m2", 2, "IA021"))),
       root, "mapunit")
     // re-land IA021 with a new row; NE109 must survive
@@ -65,7 +63,7 @@ class LakeSessionSpec extends AnyFunSuite {
       }
       z.close(); bos.toByteArray
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_landzip").toString
+    val root = tempDir("graft_landzip").toString
     val conf = spark.sparkContext.hadoopConfiguration
     val dest = WssLayout.landZip(conf, root, "wss_SSA_NE109_[2024-01-15].zip",
       zip("NE109/tabular/legend.txt" -> "L1|NE109"))

@@ -16,11 +16,11 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("mukey", StringType),
       StructField("v", IntegerType), StructField("areasymbol", StringType)))
-    val drop = Files.createTempDirectory("graft_drop").toString
-    val lake = Files.createTempDirectory("graft_lake_s").toString
+    val drop = tempDir("graft_drop").toString
+    val lake = tempDir("graft_lake_s").toString
     // the file-stream source watches flat files in the drop dir
     def land(rows: Seq[Row], file: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_land").toString
+      val tmp = tempDir("graft_land").toString
       TestSpark.df(schema, rows).coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -39,7 +39,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streamDedup over a parquet drop: surviving key set == batch firstArrival keys") {
     val src = "/root/testdata/sf0.001/events.parquet"
-    val dropDir = Files.createTempDirectory("graft_dedup_drop")
+    val dropDir = tempDir("graft_dedup_drop")
     Files.copy(Paths.get(src), dropDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
 
@@ -65,7 +65,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.events.EventOps
     val src = "/root/testdata/sf0.001/events.parquet"
-    val dropDir = Files.createTempDirectory("graft_ij_drop")
+    val dropDir = tempDir("graft_ij_drop")
     Files.copy(Paths.get(src), dropDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val schema = spark.read.parquet(src).schema
@@ -106,8 +106,8 @@ class StreamingSpec extends AnyFunSuite {
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("us", LongType)))
     val base = 1700000000000000L
-    val drop = Files.createTempDirectory("graft_oj_drop").toString
-    val out = Files.createTempDirectory("graft_oj_out").toString
+    val drop = tempDir("graft_oj_drop").toString
+    val out = tempDir("graft_oj_out").toString
     def land(rows: Seq[Row], f: String): Unit =
       TestSpark.df(schema, rows).coalesce(1).write.mode("append").parquet(drop)
     def run(): Unit = {
@@ -155,8 +155,8 @@ class StreamingSpec extends AnyFunSuite {
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("us", LongType)))
     val base = 1700000000000000L
-    val drop = Files.createTempDirectory("graft_foj_drop").toString
-    val out = Files.createTempDirectory("graft_foj_out").toString
+    val drop = tempDir("graft_foj_drop").toString
+    val out = tempDir("graft_foj_out").toString
     def land(rows: Seq[Row]): Unit =
       TestSpark.df(schema, rows).coalesce(1).write.mode("append").parquet(drop)
     def run(): Unit = {
@@ -197,7 +197,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streamHourlyRollup over a parquet drop == batch hourlyRollup") {
     val src = "/root/testdata/sf0.001/events.parquet"
-    val dropDir = Files.createTempDirectory("graft_stream_drop")
+    val dropDir = tempDir("graft_stream_drop")
     Files.copy(Paths.get(src), dropDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
 
@@ -230,9 +230,9 @@ class StreamingSpec extends AnyFunSuite {
     // convention): a mid-range split timestamp
     val cut = events.agg(
       percentile_approx(col("ts_ms"), lit(0.5), lit(100))).head().getLong(0)
-    val dropDir = Files.createTempDirectory("graft_funnel_drop")
+    val dropDir = tempDir("graft_funnel_drop")
     // checkpoint OUTSIDE the source glob — dropDir/* must see only waves
-    val ckptDir = Files.createTempDirectory("graft_funnel_ckpt")
+    val ckptDir = tempDir("graft_funnel_ckpt")
     events.filter(col("ts_ms") <= cut).coalesce(1)
       .write.parquet(dropDir.resolve("w1").toString)
 
@@ -288,7 +288,7 @@ class StreamingSpec extends AnyFunSuite {
   test("e11 streaming twin: watermarked session_window over a drop == batch sessions") {
     import org.apache.spark.sql.functions._
     val src = "/root/testdata/sf0.001/events.parquet"
-    val dropDir = Files.createTempDirectory("graft_sw_drop")
+    val dropDir = tempDir("graft_sw_drop")
     Files.copy(Paths.get(src), dropDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val schema = spark.read.parquet(src).schema
@@ -344,8 +344,8 @@ class StreamingSpec extends AnyFunSuite {
       .distinct().count()
     assert(staleGroups > 0, "fixture must have genuinely late rows")
 
-    val dropDir = Files.createTempDirectory("graft_late_drop")
-    val ckpt = Files.createTempDirectory("graft_late_ckpt")
+    val dropDir = tempDir("graft_late_drop")
+    val ckpt = tempDir("graft_late_ckpt")
     def land(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       df.coalesce(1).write.parquet(dropDir.resolve(name).toString)
     land(wave1, "w1")

@@ -74,7 +74,7 @@ class TablesSpec extends AnyFunSuite {
 
   test("rowCount falls back to a counted scan on layouts the footer path can't total") {
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_rc").toFile.getAbsolutePath
+    val root = tempDir("graft_rc").toFile.getAbsolutePath
     // partitioned key=value layout: spark.read.parquet reads it fine,
     // but the flat footer listing sees only subdirectories — Some(0)
     // here would memoize 0 and collapse adaptive parameters (r13
@@ -90,13 +90,12 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("clearCache evicts rowCount memos for the cleared dir (lifecycle-consistent)") {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_cc").toFile.getAbsolutePath
+    val root = tempDir("graft_cc").toFile.getAbsolutePath
     spark.range(3).write.parquet(s"$root/t.parquet")
     assert(Tables.rowCount(spark, root, "t") === 3L)
     // rewrite the vintage in-process; a stale memo would keep serving 3
     spark.range(5).write.mode("overwrite").parquet(s"$root/t.parquet")
-    Tables.clearCache(root)
+    GraftSession.forget(spark, root)
     assert(Tables.rowCount(spark, root, "t") === 5L)
   }
 

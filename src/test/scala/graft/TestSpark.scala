@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -11,6 +13,12 @@ object TestSpark {
 
   def df(schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  /** A fresh directory under the context's scratch root, deleted with
+    * it when the context stops or the JVM exits. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(
+    Files.createDirectories(Paths.get(GraftSession.scratch(spark, "tmp", "tests"))),
+    prefix)
 
   /** Collect a DataFrame to a sorted Seq of Seq[Any] for assertion. */
   def rowsOf(d: DataFrame): Seq[Seq[Any]] =
