@@ -900,10 +900,11 @@ object Dedup {
     // packing; without materialization the tokenize→explode→64-lane
     // aggregation (the dominant cost) runs twice. A LAZY localCheckpoint
     // computes it once at first action (constructing the DataFrame stays
-    // free) and truncates lineage, mirroring dupClusters. Tradeoff,
-    // deliberate: checkpoint blocks are executor-local — an executor
-    // loss mid-job fails the job instead of recomputing (same contract
-    // as dupClusters; acceptable for a single-stage materialization).
+    // free) and truncates lineage, as each dupClusters round does.
+    // Tradeoff, deliberate: checkpoint blocks are executor-local — an
+    // executor loss mid-job fails the job instead of recomputing (the
+    // contract of every local checkpoint; acceptable for a
+    // single-stage materialization).
     val lanes = Materialize.checkpoint(simhashLanesDf(docs, idCol, textCol), eager = false)
     val cuts = lanes.agg(
       avg(col("b0")).as("c0"), (1 until 64).map(i => avg(col(s"b$i")).as(s"c$i")): _*)
@@ -979,153 +980,61 @@ object Dedup {
   }
 
   /** Duplicate-cluster assignment: connected components over near-dup
-    * pairs via iterative min-label propagation — the standard
-    * large-graph CC shape (one shuffle join per round, converges in
-    * O(component diameter) rounds; near-dup components are tiny, so a
-    * handful of rounds suffices even at corpus scale). Lineage is
-    * truncated per round with localCheckpoint so the plan stays flat.
-    * Returns (id, cluster) with cluster = min id in the component. */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    val sym = edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst"))).cache()
-    // the candidate-pair pipeline feeding `pairs` materializes HERE
-    // (first action on the cache) — before AQE is toggled off, so its
-    // big shuffles keep adaptive skew/coalesce handling
-    var labels = Materialize.checkpoint(sym.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id")), eager = true)
-    // the per-round jobs are component-sized (near-dup clusters are
-    // tiny vs the corpus); AQE re-plans every one of the 3-4 jobs per
-    // round and the re-planning latency dominates the actual work —
-    // measured 2.3× on the whole operator. Toggle it off for the loop
-    // only, and restore whatever the session had. `sym` is released on
-    // the way out: every label frame is a materialized checkpoint, and
-    // a cache left behind would serve the next call over the same pairs.
-    val spark = pairs.sparkSession
-    try Materialize.scoped(spark, aqe = Some(false)) {
-      // convergence check without a per-round join: labels only ever
-      // DECREASE under min-propagation, so Σcluster strictly decreases
-      // iff any label changed — one shuffle-free partial-agg scan of
-      // the fresh checkpoint replaces the old join+filter+count job.
-      // Exactness without decimal aggregates (the decimal(38,0) form
-      // measured 2.3× slower than long partial-aggs — r8 verdict): the
-      // label is split into its arithmetic-shift high half and
-      // unsigned low half, each summed as a plain long, and the exact
-      // Σcluster is recomposed driver-side as sumHi·2³² + sumLo in
-      // BigInteger. Per-row, x == (x>>32)·2³² + (x & 0xFFFFFFFF) for
-      // any two's-complement long, so the recomposition is identity;
-      // the long partials can't wrap while n ≤ 2³¹ (lo terms < 2³²,
-      // hi terms < 2³¹ in magnitude). Beyond 2³¹ label rows — a
-      // >2-billion-node pair graph — fall back to the decimal sum,
-      // where the extra agg cost is noise against the joins anyway.
-      // sum() over ZERO rows is NULL — an empty pair set (no
-      // duplicates in the corpus slice) is a valid input that must
-      // converge immediately, not trip a guard (surfaced by the sf1
-      // battery: a dup-free fixture slice crashed here).
-      def labelSumN(df: DataFrame): (Long, java.math.BigInteger) = {
-        val v = df.agg(count(lit(1)),
-          sum(shiftright(col("cluster"), 32)),
-          sum(col("cluster").bitwiseAND(lit(0xFFFFFFFFL)))).head()
-        val n = v.getLong(0)
-        if (n == 0L) (0L, java.math.BigInteger.ZERO)
-        else if (n <= (1L << 31)) {
-          (n, java.math.BigInteger.valueOf(v.getLong(1)).shiftLeft(32)
-            .add(java.math.BigInteger.valueOf(v.getLong(2))))
-        } else {
-          val d = df.agg(sum(col("cluster").cast("decimal(38,0)"))).head()
-          require(!d.isNullAt(0),
-            "dupClusters: label sum overflowed decimal(38,0)")
-          (n, d.getDecimal(0).toBigInteger)
-        }
-      }
-      def labelSum(df: DataFrame): java.math.BigInteger = labelSumN(df)._2
-      val (n0, sum0) = labelSumN(labels)
-      // Loop shuffle sizing (the st07/st08 state-sizing lesson applied
-      // to the CC rounds): each round is 2-3 shuffle stages over a
-      // pair-GRAPH-sized table — running them at the session's
-      // fact-table partition count (32 here, hundreds on a cluster) is
-      // pure scheduler overhead when the graph is small. n0 is already
-      // on the driver from the convergence seed, so size partitions to
-      // the graph (~500k labels/partition, floor 8) and restore after;
-      // a genuinely huge pair graph keeps the session's parallelism.
-      Materialize.scoped(spark,
-          n => math.max(8L, math.min(n.toLong, n0 / 500000L + 1L)).toInt) {
-        var prevSum = sum0
-        var changed = true
-        var i = 0
-        while (changed && i < maxIter) {
-          val prop = sym.join(labels, sym("dst") === labels("id"))
-            .select(col("src").as("id"), col("cluster"))
-          // LAZY checkpoint: the labelSum action right below materializes
-          // it as a side effect — one blocking job per round instead of
-          // two (eager checkpoint + agg). Round latency, not data volume,
-          // dominates here (components are tiny), so halving the
-          // sequential job count is the win.
-          val next = Materialize.checkpoint(labels.unionByName(prop)
-            .groupBy(col("id")).agg(min(col("cluster")).as("cluster")), eager = false)
-          val sumNow = labelSum(next)
-          changed = sumNow.compareTo(prevSum) != 0
-          prevSum = sumNow
-          labels = next
-          i += 1
-        }
-        labels
-      }
-    } finally sym.unpersist()
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR
-    * contraction (the Kiveris et al. "Connected Components in
-    * MapReduce and Beyond" algorithm) — the high-diameter complement
-    * to [[dupClusters]]: min-label propagation converges in
-    * O(component diameter) rounds, which is the right trade for the
-    * tiny star-shaped components a near-dup corpus mostly produces,
-    * but a transitive near-dup CHAIN (v1≈v2≈…≈vL — successive
-    * crawl snapshots, versioned boilerplate) has diameter L and
-    * min-propagation pays L rounds; star contraction converges in
-    * O(log² n) worst-case / ~log L observed rounds regardless of
-    * shape (ScaleSpec pins ≤ 20 rounds on a 1024-chain, where
-    * propagation would need 1023).
+    * pairs via alternating LARGE-STAR / SMALL-STAR contraction (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", SoCC
+    * 2014). Returns (id, cluster) with cluster = min id in the
+    * component, for every node of a pair with id_a ≠ id_b (a self-pair
+    * carries no edge).
     *
-    * Round = large-star then small-star, each one grouped min +
-    * re-emit over the edge list (2-3 graph-sized shuffles — same
-    * per-round cost shape as a propagation round; the win is the
-    * ROUND COUNT). Edges stay canonical (u > v) throughout:
+    * Round count: min-label propagation needs as many rounds as the
+    * component's diameter, and a transitive near-dup CHAIN
+    * (v1≈v2≈…≈vL — successive crawl snapshots, versioned boilerplate)
+    * has diameter L. Star contraction converges in O(log² n)
+    * worst-case / ~log L observed rounds regardless of shape (ScaleSpec
+    * pins ≤ 20 rounds on a 1024-chain, where propagation would need
+    * 1023). A `maxIter` exit without the fixpoint fails loudly.
+    *
+    * Round = large-star then small-star, each a window min + re-emit
+    * over the edge list. Edges stay canonical (u > v) throughout:
     *   - large-star, per node x of the SYMMETRIC graph: every
     *     larger neighbor y > x re-attaches to m = min(Γ(x) ∪ {x});
     *   - small-star, per node u of the canonical list: u and its
     *     smaller neighbors all attach to their min.
     * Fixpoint (the edge set stops changing — an exact per-round set
     * compare, not a checksum) is a star forest: every node points
-    * directly at its component min. Output (id, cluster) is
-    * value-identical to [[dupClusters]] on any input (ScaleSpec
-    * cross-checks them on random graphs). */
-  def dupClustersStar(pairs: DataFrame, maxIter: Int = 32): DataFrame =
-    dupClustersStarWithRounds(pairs, maxIter)._1
+    * directly at its component min. The edge set and every round are
+    * checkpoints, so the plan stays flat and nothing is left cached. */
+  def dupClusters(pairs: DataFrame, maxIter: Int = 32): DataFrame =
+    dupClustersWithRounds(pairs, maxIter)._1
 
-  /** [[dupClustersStar]] plus the converged round count (exposed for
-    * the ScaleSpec round-count pin). The loop is action-driven (the
-    * fixpoint compare runs per round), like [[dupClusters]]'s. */
-  def dupClustersStarWithRounds(pairs: DataFrame,
+  /** [[dupClusters]] plus the converged round count (for the ScaleSpec
+    * round-count pin). */
+  private[graft] def dupClustersWithRounds(pairs: DataFrame,
       maxIter: Int = 32): (DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
     val spark = pairs.sparkSession
-    // canonical u > v, self-loops dropped; materializes BEFORE the AQE
-    // toggle so the candidate pipeline feeding `pairs` keeps adaptive
-    // handling (the dupClusters convention)
+    // canonical u > v, self-loops dropped; the candidate-pair pipeline
+    // feeding `pairs` materializes HERE — before AQE is toggled off, so
+    // its big shuffles keep adaptive skew/coalesce handling
     var edges = Materialize.checkpoint(pairs.select(
         greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v")).distinct(), eager = true)
+    // the per-round jobs are graph-sized (near-dup components are tiny
+    // next to the corpus); AQE re-plans every one of them and the
+    // re-planning latency dominates the actual work — measured 2.3× on
+    // the whole operator. Toggle it off for the loop only, and restore
+    // whatever the session had.
     Materialize.scoped(spark, aqe = Some(false)) {
-      // the dupClusters loop-sizing lesson: each round is 2-3 shuffles
-      // over the edge set with AQE off — at the session's fact-table
-      // partition count the per-task overhead dominates (measured 114
-      // task-seconds of ~50 ms tasks on a few-hundred-edge graph);
-      // size the loop to the graph and restore after
+      // each round is 2-3 shuffles over the edge set with AQE off — at
+      // the session's fact-table partition count the per-task overhead
+      // dominates (measured 114 task-seconds of ~50 ms tasks on a
+      // few-hundred-edge graph). Size the loop to the graph (~500k
+      // edges/partition, floor 8) with the session's own count as the
+      // ceiling, and restore after.
       val n0 = edges.count()
       Materialize.scoped(spark,
-          n => math.max(8L, math.min(n.toLong, n0 / 500000L + 1L)).toInt) {
+          n => math.min(n.toLong, math.max(8L, n0 / 500000L + 1L)).toInt) {
         var prevCount = n0
         var rounds = 0
         var stable = false
@@ -1179,11 +1088,10 @@ object Dedup {
         // fail-loud contract (r14 advice): a maxIter exit without the
         // fixpoint means the labels below may not be component minima —
         // silently returning them would hand a caller wrong clusters
-        // with no signal (dupClustersStar discards the round count).
-        // ~log² n rounds suffice for ANY graph, so tripping this at
-        // maxIter=32 indicates a bug, not a big input.
+        // with no signal. ~log² n rounds suffice for ANY graph, so
+        // tripping this at maxIter=32 indicates a bug, not a big input.
         require(stable,
-          s"dupClustersStar: no fixpoint after $maxIter rounds " +
+          s"dupClusters: no fixpoint after $maxIter rounds " +
             s"(edge set still changing, |E|=$prevCount) — labels would " +
             "not be component minima; raise maxIter only with evidence")
         // converged star forest: every u points at its component min;
@@ -1225,8 +1133,8 @@ object Dedup {
         .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
       eager = true)
     // the per-iteration jobs are graph-sized (tiny next to the corpus
-    // work that produced the pairs); as in dupClusters, AQE's re-plan
-    // latency per micro-stage dominates the actual work — measured
+    // work that produced the pairs); as in dupClusters' rounds, AQE's
+    // re-plan latency per micro-stage dominates the actual work — measured
     // ~4.5 s of pure planning on a 50-node graph. Run the iterations
     // as eagerly-checkpointed tiny jobs with AQE off, restoring the
     // session's setting after.

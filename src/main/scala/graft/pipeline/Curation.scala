@@ -16,7 +16,8 @@ import graft.text.TextAnalysis
   * Survivor rule: a document survives iff quality >= minQuality, its
   * predicted language matches the labeled language, and it is its
   * duplicate-cluster representative (the min doc id) — or belongs to no
-  * cluster. */
+  * cluster. Clusters come from [[Dedup.dupClusters]], the one
+  * connected-components operator (star contraction, as d06 and d32). */
 object Curation {
 
   /** `exactPairs = false` (the default, and the 100 TB path) generates

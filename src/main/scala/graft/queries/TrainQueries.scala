@@ -844,7 +844,9 @@ object TrainQueries extends QuerySet {
     * a per-RUN copy: [[Ann.indexLakeApply]] MUTATES its lake, so each
     * run applies against a fresh filesystem copy of the immutable base
     * (bench runs the query 3×; a shared mutable lake would make the
-    * second run's input the first run's output). */
+    * second run's input the first run's output). A run's result reads
+    * its copy lazily, so the copy is deleted when the next run in the
+    * same context starts, not at return: one copy stays on disk. */
   private def n27LakeCopy(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val base = GraftSession.memo(s, "apply_lake", dir) {
@@ -863,6 +865,10 @@ object TrainQueries extends QuerySet {
       root
     }
     val run = s"${base}_run${n27RunSeq.incrementAndGet()}"
+    val last = GraftSession.memo(s, "apply_lake_last", dir)(
+      new java.util.concurrent.atomic.AtomicReference[String]())
+    Option(last.getAndSet(run)).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(base), new java.io.File(run))
     run
@@ -2169,8 +2175,8 @@ object TrainQueries extends QuerySet {
               |FROM sc WHERE cosine >= 0.95 GROUP BY vid""".stripMargin)),
 
     // D6 — duplicate-cluster assignment: connected components over the
-    // exact-Jaccard near-dup pairs (min-label propagation; oracle is a
-    // recursive-CTE transitive closure over the same pairs).
+    // exact-Jaccard near-dup pairs (Dedup.dupClusters' star contraction;
+    // oracle is a recursive-CTE transitive closure over the same pairs).
     Q("d06_dup_clusters",
       (s, dir) => Dedup.dupClusters(Dedup.ngramJaccardPairs(
         Tables.load(s, dir, "documents").filter(col("doc_id") < 1000),
@@ -2180,7 +2186,8 @@ object TrainQueries extends QuerySet {
 
     // D16 — dup-cluster size histogram with singleton accounting: the
     // report a dedup run ends with (how much of the corpus is in
-    // near-dup clusters of what size). Reuses the d06 clustering;
+    // near-dup clusters of what size). Reuses the d06 clustering (the
+    // one connected-components operator, Dedup.dupClusters);
     // singletons (docs in no pair) are counted via one anti-join and
     // appended as the size-1 row — every doc lands in exactly one row
     // of the histogram.
@@ -3985,23 +3992,21 @@ object TrainQueries extends QuerySet {
              |       coalesce(agg.text_clean, '') AS text_clean
              |FROM tk LEFT JOIN agg ON tk.doc_id = agg.doc_id""".stripMargin)),
 
-    // D32 — duplicate clustering for HIGH-DIAMETER components
-    // (Dedup.dupClustersStar): alternating large-star/small-star
-    // contraction (Kiveris et al.), the O(log)-round complement to
-    // d06's min-label propagation. Near-dup corpora mostly produce
-    // tiny star components (d06's right trade), but transitive
-    // near-dup CHAINS — successive crawl snapshots, versioned
-    // boilerplate, v1≈v2≈…≈vL — have diameter L, and propagation
-    // pays L rounds where contraction pays ~log L (ScaleSpec pins
-    // ≤ 20 rounds on a 1024-chain and value-equality with
-    // dupClusters on random graphs). The query runs the SAME
-    // Jaccard pair front-end as d06 PLUS a planted 64-doc chain
-    // (synthetic ids, each linked only to its successor — exactly
-    // the shape that breaks a diameter-bound loop: d06's maxIter-20
-    // propagation would stop 43 rounds short of this chain's
-    // fixpoint) and labels every node with its component min; the
-    // oracle is the d06 recursive-CTE transitive closure over the
-    // same edge set, chain included.
+    // D32 — duplicate clustering for HIGH-DIAMETER components: the
+    // same operator as d06 (Dedup.dupClusters, alternating
+    // large-star/small-star contraction after Kiveris et al.) on a
+    // graph shaped to break a diameter-bound loop. Near-dup corpora
+    // mostly produce tiny star components, but transitive near-dup
+    // CHAINS — successive crawl snapshots, versioned boilerplate,
+    // v1≈v2≈…≈vL — have diameter L: min-label propagation pays L
+    // rounds where contraction pays ~log L (ScaleSpec pins ≤ 20
+    // rounds on a 1024-chain). The query runs the SAME Jaccard pair
+    // front-end as d06 PLUS a planted 64-doc chain (synthetic ids,
+    // each linked only to its successor; propagation capped at 20
+    // rounds would stop 43 rounds short of this chain's fixpoint)
+    // and labels every node with its component min; the oracle is
+    // the d06 recursive-CTE transitive closure over the same edge
+    // set, chain included.
     Q("d32_dup_clusters_star",
       (s, dir) => {
         val pairs = Dedup.ngramJaccardPairs(
@@ -4011,7 +4016,7 @@ object TrainQueries extends QuerySet {
         val chain = s.range(0, 63).select(
           (col("id") + 5000000L).as("id_a"),
           (col("id") + 5000001L).as("id_b"))
-        Dedup.dupClustersStar(pairs.unionByName(chain))
+        Dedup.dupClusters(pairs.unionByName(chain))
       },
       Some(s"""WITH RECURSIVE $shingle2Ctes,
              |pairs AS (SELECT id_a, id_b

@@ -218,30 +218,39 @@ class ScaleSpec extends AnyFunSuite {
       s"per-batch shuffle grew with the corpus: $recSmall -> $recBig at 4x corpus")
   }
 
-  test("dupClustersStar: log-round convergence on a 1024-chain, value-identical to dupClusters on random graphs") {
+  test("dupClusters: log rounds on a 1024-chain, union-find labels on random graphs") {
     import graft.dedup.Dedup
     val pairS = StructType(Seq(StructField("id_a", LongType),
       StructField("id_b", LongType)))
-    // diameter-1023 chain: min-label propagation needs 1023 rounds
-    // (d06's maxIter-20 default would stop far short of fixpoint);
-    // star contraction must land in ~log rounds
+    // diameter-1023 chain: min-label propagation would need 1023
+    // rounds; star contraction must land in ~log rounds
     val chain = df(pairS, (0L until 1023L).map(i => Row(i, i + 1)))
-    val (labels, rounds) = Dedup.dupClustersStarWithRounds(chain)
+    val (labels, rounds) = Dedup.dupClustersWithRounds(chain)
     assert(rounds <= 20, s"star contraction took $rounds rounds on a 1024-chain")
     val lab = rowsOf(labels).map(r => r.head.asInstanceOf[Long] ->
       r(1).asInstanceOf[Long]).toMap
     assert(lab.size === 1024 && lab.values.forall(_ == 0L),
       "every chain node must label to the component min")
-    // random graphs: labels must equal dupClusters' exactly
+    // random graphs: labels must equal an in-memory union-find's
+    // (each node → the min id of its component)
     for (seed <- Seq(7, 23)) {
       val rnd = new scala.util.Random(seed)
       val edges = (1 to 400).map { _ =>
-        Row(rnd.nextInt(300).toLong, rnd.nextInt(300).toLong)
-      }.filter(r => r.getLong(0) != r.getLong(1))
-      val pairs = df(pairS, edges)
-      val star = rowsOf(Dedup.dupClustersStar(pairs).orderBy("id"))
-      val prop = rowsOf(Dedup.dupClusters(pairs).orderBy("id"))
-      assert(star === prop, s"seed $seed: star labels diverge from propagation")
+        (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong)
+      }.filter { case (a, b) => a != b }
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val expected = parent.keys.toSeq.sorted.map(x => Seq[Any](x, find(x)))
+      val got = Dedup.dupClusters(df(pairS, edges.map { case (a, b) => Row(a, b) }))
+        .orderBy("id").collect().map(_.toSeq).toSeq
+      assert(got === expected, s"seed $seed: labels diverge from union-find")
     }
   }
 

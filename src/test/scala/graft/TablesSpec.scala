@@ -99,6 +99,16 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.rowCount(spark, root, "t") === 5L)
   }
 
+  test("n27: two runs in one context leave one apply_lake run copy, same output") {
+    val q = SparkEntry.queries("n27_index_lake_apply")
+    def runCopies = new java.io.File(GraftSession.scratch(spark, "apply_lake", sf))
+      .getParentFile.listFiles.map(_.getName).filter(_.startsWith("apply_lake_run"))
+    val first = rowsOf(q(spark, sf))
+    val second = rowsOf(q(spark, sf))
+    assert(second === first)
+    assert(runCopies.length === 1, runCopies.mkString(", "))
+  }
+
   test("Bench.timed surfaces a failing query as an error, never a success") {
     val (_, err) = Bench.timed(() => throw new RuntimeException("boom"))
     assert(err.exists(_.contains("boom")))

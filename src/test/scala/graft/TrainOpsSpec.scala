@@ -596,7 +596,7 @@ class TrainOpsSpec extends AnyFunSuite {
     assert(got.contains(Seq(1L, 4L, 1.0)))
   }
 
-  test("dup clusters: min-label propagation finds connected components") {
+  test("dup clusters: star contraction finds connected components") {
     val pS = StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType)))
     // chain 1-2-3 plus pair 8-9: clusters {1,2,3}→1, {8,9}→8
     val pairs = df(pS, Seq(Row(1L, 2L), Row(2L, 3L), Row(8L, 9L)))
@@ -605,10 +605,18 @@ class TrainOpsSpec extends AnyFunSuite {
       Seq(8L, 8L), Seq(9L, 8L)))
   }
 
+  test("dupClusters: a 64-node chain labels every node with the component min") {
+    val pS = StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType)))
+    // diameter 63: a loop bounded by the component diameter (min-label
+    // propagation stopped at 20 rounds) leaves the far end mislabeled
+    val got = rowsOf(Dedup.dupClusters(df(pS, (0L until 63L).map(i => Row(i, i + 1)))))
+    assert(got === (0L until 64L).map(i => Seq[Any](i, 0L)).sortBy(_.mkString("|")))
+  }
+
   test("dup clusters: empty pair set converges to an empty result (no dups in slice)") {
     val pS = StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType)))
-    // sum() over zero rows is NULL — must read as "converged", not as
-    // the decimal-overflow guard (the sf1-battery crash class)
+    // a dup-free slice is a valid input that must converge at once,
+    // not trip the no-fixpoint guard (the sf1-battery crash class)
     assert(rowsOf(Dedup.dupClusters(df(pS, Seq.empty))) === Seq.empty)
   }
 
