@@ -21,28 +21,38 @@ object Tables {
     if (state.cacheTables)
       state.memo(s"table/$name", dir) {
         val raw = spark.read.parquet(s"$dir/$name.parquet")
-        // Cache-fill LAYOUT (r18): the test lake ships one row group per
+        // Cache-fill LAYOUT: the test lake ships one row group per
         // table, so the scan - and therefore the cached RDD every query
         // maps over - is a single partition; every first map stage of
-        // every query then runs ONE task regardless of cores (StageProbe:
-        // p09 spent ~10 s in five serial 2.7-s scans of the cached
-        // 600k-row lineitem). Widen the cache to a row-count-derived
-        // partition count ONCE at fill (an 11 MB round-robin exchange,
-        // paid one time per session). 20k rows/partition was swept
-        // against 250 and 2000 at sf0.1: finer widths win nothing more
-        // on the heavy lineitem scans but tax every small-table stage
-        // with per-task overhead (e05 1.72 s at rows/250 vs 0.70 at
-        // rows/20k). Scale story: a production lake's scan already
-        // yields >= cores splits, so target <= scanParts and this is a
-        // no-op - it repairs the small-file/single-row-group case only,
-        // and the footer row count is O(KB) metadata.
+        // every query would then run ONE task regardless of cores
+        // (StageProbe, r18: p09 spent ~10 s in five serial 2.7-s scans
+        // of the cached 600k-row lineitem). So the fill widens the cache
+        // to a row-count-derived partition count ONCE, with one exchange
+        // paid per session, and makes that exchange a hash on the
+        // table's leading column: in every lake table that is its key
+        // (l_orderkey, o_orderkey, c_custkey, ...). The cached relation
+        // then reports hash partitioning on the key, so an aggregate or
+        // join keyed on it, or on a key derived from it by an alias
+        // (the SDV analogs' mukey = l_orderkey), reads its input
+        // already clustered and plans no exchange of its own: a03 runs
+        // as one stage. A round-robin fill costs the same exchange and
+        // clusters nothing.
+        // 20k rows/partition was swept against 250 and 2000 at sf0.1:
+        // finer widths win nothing more on the heavy lineitem scans but
+        // tax every small-table stage with per-task overhead (e05
+        // 1.72 s at rows/250 vs 0.70 at rows/20k). Scale story: a
+        // production lake's scan already yields >= cores splits, so
+        // target <= scanParts and this is a no-op - it repairs the
+        // small-file/single-row-group case only, and the footer row
+        // count is O(KB) metadata.
         val rpp = 20000L
         val target = footerRowCount(spark, s"$dir/$name.parquet")
           .map(r => math.min(spark.sparkContext.defaultParallelism.toLong,
             (r + rpp - 1) / rpp).toInt)
           .getOrElse(1)
         val scanParts = raw.queryExecution.toRdd.getNumPartitions
-        (if (target > scanParts) raw.repartition(target) else raw).cache()
+        (if (target > scanParts) raw.repartition(target, raw.col(raw.columns.head))
+         else raw).cache()
       }
     else spark.read.parquet(s"$dir/$name.parquet")
   }

@@ -2,21 +2,28 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ArgBest
 
 /** Top-1-per-group machinery.
   *
   * The reference implements every "dominant" pick as an ORDER BY cursor +
   * take-first-row-per-group (SortData, gSSURGO_CreateSoilMap.py:456-509).
-  * The scalable Spark shape is `max_by` over a packed ordering struct
-  * rather than a `row_number` window: max_by does map-side partial
-  * aggregation, so the shuffle carries one candidate per (group, map
-  * partition) instead of the whole component table — the difference
-  * between shuffling ~100 TB and shuffling the group cardinality.
+  * The scalable Spark shape is a grouped arg-max rather than a
+  * `row_number` window: it aggregates map-side, so the shuffle carries
+  * one candidate per (group, map partition) instead of the whole
+  * component table — the difference between shuffling ~100 TB and
+  * shuffling the group cardinality. The arg-max is [[ArgBest]]. When
+  * every order and payload column is fixed-width, its flat buffer
+  * plans as a codegen'd partial + final HashAggregate, with an exchange
+  * between them unless the input is already clustered on the group
+  * key. A string or array column (a Choice rating, an ANN vector)
+  * makes the buffer variable-width, and the pick plans Sort +
+  * SortAggregate on each side instead.
   */
 object Ranked {
 
   /** One row per group; the winner is the row whose `order` tuple is
-    * greatest under lexicographic struct comparison. Callers orient every
+    * greatest lexicographically, nulls lowest. Callers orient every
     * order column so that MAX selects the winner (negate numeric columns
     * that should sort ascending) and guarantee they are non-null.
     *
@@ -28,10 +35,8 @@ object Ranked {
       groupCols: Seq[String],
       order: Seq[Column],
       payload: Seq[(String, Column)]): DataFrame = {
-    val ordStruct = struct(order.zipWithIndex.map { case (c, i) => c.as(s"o$i") }: _*)
-    val payStruct = struct(payload.map { case (n, c) => c.as(n) }: _*)
     df.groupBy(groupCols.map(col): _*)
-      .agg(max_by(payStruct, ordStruct).as("__win"))
+      .agg(ArgBest.max(order, payload).as("__win"))
       .select(groupCols.map(col) ++ payload.map { case (n, _) => col(s"__win.$n").as(n) }: _*)
   }
 

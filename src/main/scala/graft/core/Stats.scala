@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ArgBest
 
 /** Scale-safe summary statistics. */
 object Stats {
@@ -104,7 +105,7 @@ object Stats {
     * then SMALLEST value — `mode()`'s tie winner is engine/partition
     * luck) and the mode's count. Same two-aggregation shape as the
     * quantiles: the first shuffle carries distinct (group, value)
-    * pairs with map-side partial counts, the second is a min_by argmax
+    * pairs with map-side partial counts, the second is an arg-min
     * over the tiny per-group distribution — no window, no row sort.
     * Nulls are ignored; an all-null group disappears. */
   def groupedMode(df: DataFrame, groupCol: String, valueCol: String,
@@ -113,8 +114,8 @@ object Stats {
       .groupBy(col(groupCol), col(valueCol)).agg(count(lit(1)).as("c"))
     // lexicographic min over (-count, value) = count desc, value asc
     counts.groupBy(col(groupCol)).agg(
-      min_by(col(valueCol),
-        struct((-col("c")).as("nc"), col(valueCol).as("v"))).as(out),
+      ArgBest.min(Seq(-col("c"), col(valueCol)), Seq(out -> col(valueCol)))
+        .getField(out).as(out),
       max(col("c")).as(s"${out}_n"))
   }
 }

@@ -930,6 +930,24 @@ object Dedup {
       idCol, textCol, shingleN, threshold)
   }
 
+  /** (id_a, id_b, c): the number of distinct shingles each doc pair
+    * id_a < id_b shares — the shingle self-join behind
+    * [[ngramJaccardPairs]] and [[ngramContainmentPairs]]. The shingle
+    * rows are small but the join multiplies them, so AQE would
+    * coalesce the join's exchange to ONE partition and run the heaviest
+    * step serially (sf0.1, 4 cores: one 0.75–1.44 s task in d06, d16
+    * and d32). A repartition by `s` to the session's shuffle-partition
+    * count is an exchange AQE never coalesces; both join sides read it.
+    * Cost: a pair's shared shingles now sit in several partitions, so
+    * the partial counts after the join shuffle about twice the bytes. */
+  private def sharedShingles(sh: DataFrame): DataFrame = {
+    val byS = sh.repartition(sh.sparkSession.sessionState.conf.numShufflePartitions, col("s"))
+    byS.as("a").join(byS.as("b"),
+        col("a.s") === col("b.s") && col("a.did") < col("b.did"))
+      .groupBy(col("a.did").as("id_a"), col("b.did").as("id_b"))
+      .agg(count(lit(1)).as("c"))
+  }
+
   /** Exact n-gram Jaccard near-dup pairs via shingle equi-join — fully
     * deterministic (no hashing), the oracle-checkable twin of the LSH
     * path. jaccard = |A∩B| / (|A|+|B|-|A∩B|). */
@@ -937,10 +955,7 @@ object Dedup {
       shingleN: Int = 2, threshold: Double = 0.5): DataFrame = {
     val sh = shingleRows(docs, idCol, textCol, shingleN)
     val cnt = sh.groupBy(col("did")).agg(count(lit(1)).as("n"))
-    val common = sh.as("a").join(sh.as("b"),
-        col("a.s") === col("b.s") && col("a.did") < col("b.did"))
-      .groupBy(col("a.did").as("id_a"), col("b.did").as("id_b"))
-      .agg(count(lit(1)).as("c"))
+    val common = sharedShingles(sh)
     common
       .join(cnt.select(col("did").as("id_a"), col("n").as("na")), "id_a")
       .join(cnt.select(col("did").as("id_b"), col("n").as("nb")), "id_b")
@@ -964,10 +979,7 @@ object Dedup {
       shingleN: Int = 2, threshold: Double = 0.8): DataFrame = {
     val sh = shingleRows(docs, idCol, textCol, shingleN)
     val cnt = sh.groupBy(col("did")).agg(count(lit(1)).as("n"))
-    val common = sh.as("a").join(sh.as("b"),
-        col("a.s") === col("b.s") && col("a.did") < col("b.did"))
-      .groupBy(col("a.did").as("id_a"), col("b.did").as("id_b"))
-      .agg(count(lit(1)).as("c"))
+    val common = sharedShingles(sh)
     val contAb = col("c").cast("double") / col("na")
     val contBa = col("c").cast("double") / col("nb")
     common

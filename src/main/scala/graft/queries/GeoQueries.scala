@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ArgBest
 
 import graft.{GraftSession, Tables}
 import graft.geo.Geo
@@ -410,8 +411,8 @@ object GeoQueries extends QuerySet {
     // table and every one of the ~2B candidate probes pays its cache
     // misses. Fan the probe/stream side under a broadcast join; fan
     // the smaller side only when both sides shuffle.) Exact integer
-    // squared distances; argmin by min(struct(d2, mukey)) —
-    // lexicographic struct ordering is the deterministic tiebreak.
+    // squared distances; argmin over (d2, mukey) (ArgBest.min) —
+    // lexicographic key order is the deterministic tiebreak.
     // Unmatched probes keep a NULL row (the left join back is
     // co-partitioned on point_id). The oracle replays bucketing,
     // radius, and argmin. At 100 TB: probe fan is a constant 9 of
@@ -440,7 +441,8 @@ object GeoQueries extends QuerySet {
             expr("(px - cx) * (px - cx) + (py - cy) * (py - cy)"))
           .filter(col("d2") <= 576)
           .groupBy(col("point_id"))
-          .agg(min(struct(col("d2"), col("mukey"))).as("m"))
+          .agg(ArgBest.min(Seq(col("d2"), col("mukey")),
+            Seq("d2" -> col("d2"), "mukey" -> col("mukey"))).as("m"))
           .select(col("point_id"), col("m.mukey").as("nn_mukey"),
             col("m.d2").as("nn_d2"))
         probes.join(nn, Seq("point_id"), "left")

@@ -2,6 +2,7 @@ package graft.sdv
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ArgBest
 
 import graft.core.{Exprs, Ranked}
 
@@ -79,7 +80,7 @@ object SdvAgg {
   // (:5768-5787), else the rating with max summed pct (ties by rating
   // order). Output pct is normalized: 100 * classPct / totalPct.
   // A4 — AggregateCo_DCD_Domain (:7339-7750) = same with domain ordinal.
-  // Physical shape: TWO hash aggregations, no joins. Pass 1 groups by
+  // Physical shape: two aggregations, no joins. Pass 1 groups by
   // (mukey, rating) keeping the class pct-sum plus the class's best
   // component (max comppct, then max cokey — its per-class
   // representative). Pass 2 groups by mukey and picks, in one agg, the
@@ -88,6 +89,13 @@ object SdvAgg {
   // argmax because ratingOrd is constant within a class), and the
   // total. The naive form (separate DCP + 3 joins) shuffles the fact
   // table four times; this shuffles it once plus the tiny byRating set.
+  // Every pick is an ArgBest, so with a numeric rating each pass plans
+  // as a partial + final codegen'd HashAggregate: four of them and two
+  // exchanges (on (mukey, rating), then on mukey) over a plain scan,
+  // and no exchange at all over a cache hash-clustered on mukey's
+  // source key (Tables.load), as a03 runs in a bench session. A string
+  // rating (a04, a Choice domain) makes the buffers variable-width, and
+  // each aggregate plans Sort + SortAggregate instead.
   def dominantCondition(
       df: DataFrame,
       tieLow: Boolean = true,
@@ -96,13 +104,14 @@ object SdvAgg {
     val byRating = df.groupBy(m, col("rating")).agg(
       sum(col("comppct")).as("sumpct"),
       max(col("ratingOrd")).as("ratingOrd"),
-      max(struct(col("comppct").as("pct"), col("cokey").as("cokey"))).as("best"))
+      ArgBest.max(Seq(col("comppct"), col("cokey")),
+        Seq("pct" -> col("comppct"), "cokey" -> col("cokey"))).as("best"))
     val tie = tieCol(tieLow)
     val condTot = byRating.groupBy(m).agg(
-      max_by(struct(col("rating").as("r"), col("sumpct").as("sp")),
-        struct(col("sumpct"), tie)).as("cond"),
-      max_by(struct(col("rating").as("r"), col("sumpct").as("sp"), col("best.pct").as("pct")),
-        struct(col("best.pct"), tie, col("best.cokey"))).as("dcp"),
+      ArgBest.max(Seq(col("sumpct"), tie),
+        Seq("r" -> col("rating"), "sp" -> col("sumpct"))).as("cond"),
+      ArgBest.max(Seq(col("best.pct"), tie, col("best.cokey")),
+        Seq("r" -> col("rating"), "sp" -> col("sumpct"), "pct" -> col("best.pct"))).as("dcp"),
       sum(col("sumpct")).as("totalpct"))
     // When the trump fires, the reference reports the dominant
     // COMPONENT's pct (dcpPct), not its rating-class sum
@@ -141,13 +150,12 @@ object SdvAgg {
     // planner sets ratingOrd = 0 on every row, so ordering on ratingOrd
     // alone would leave the winner partition-dependent (same degenerate
     // case limiting() tie-breaks explicitly).
-    val key = struct(col("ratingOrd"), col("rating"))
-    val ratedOrd = notRatedOrd match {
-      case Some(o) => when(col("ratingOrd") =!= o, key)
-      case None    => key
-    }
+    val key = Seq(col("ratingOrd"), col("rating"))
+    val rated = notRatedOrd.fold(lit(true))(o => col("ratingOrd") =!= o)
+    val pick = Seq("rating" -> col("rating"))
     val extreme =
-      if (most) max_by(col("rating"), ratedOrd) else min_by(col("rating"), ratedOrd)
+      (if (most) ArgBest.max(key, pick, rated) else ArgBest.min(key, pick, rated))
+        .getField("rating")
     // Fallback fires only when every row was 'Not rated' (single literal).
     df.groupBy(m).agg(
       coalesce(extreme, first(col("rating"))).as("rating"))
@@ -405,10 +413,11 @@ object SdvAgg {
     * double-counting comppct — a cursor artifact on a path its own
     * comments call untested; we deliberately do not reproduce it.) */
   def perComponentExtreme(df: DataFrame, most: Boolean): DataFrame = {
-    val pick = struct(col("rating").as("r"), col("ratingOrd").as("o"))
+    val key = Seq(col("rating"), col("ratingOrd"))
+    val pick = Seq("r" -> col("rating"), "o" -> col("ratingOrd"))
     df.filter(col("rating").isNotNull)
       .groupBy(m, col("cokey"), col("comppct"))
-      .agg((if (most) max(pick) else min(pick)).as("p"))
+      .agg((if (most) ArgBest.max(key, pick) else ArgBest.min(key, pick)).as("p"))
       .select(m, col("cokey"), col("comppct"),
         col("p.r").as("rating"), col("p.o").as("ratingOrd"))
   }

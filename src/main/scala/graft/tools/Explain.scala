@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-inspection main: prints the formatted physical plan of the
@@ -30,7 +32,7 @@ object Explain {
       // plan (AQE join rewrites, coalesced reads), not the initial one.
       if (sys.env.get("SPARK_GRAFT_EXECUTE").contains("1"))
         df.queryExecution.toRdd.foreach(_ => ())
-      val plan = df.queryExecution.explainString(FormattedMode)
+      val plan = stable(df.queryExecution.explainString(FormattedMode))
       outDir match {
         case Some(d) =>
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
@@ -45,4 +47,10 @@ object Explain {
     }
     spark.stop()
   }
+
+  /** `plan` with each JVM lambda class name (`Multimodal$$$Lambda$6383/0x…@47e6fa81`,
+    * new on every run) cut to `$$Lambda`, so two dumps of the same code
+    * compare equal. */
+  private[graft] def stable(plan: String): String =
+    plan.replaceAll("""\$\$Lambda[$/\w]*@[0-9a-f]+""", Regex.quoteReplacement("$$Lambda"))
 }

@@ -52,6 +52,35 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(found.isEmpty, s"materialization outside Materialize:\n${found.mkString("\n")}")
   }
 
+  test("struct arg-max picks under src/main only through ArgBest") {
+    // max_by / min_by over a struct, and max / min of one, hash-aggregate
+    // only as ArgBest's flat buffer; calls may span lines
+    val overStruct = """\b(max_by|min_by)\(""".r
+    val ofStruct = """\b(max|min)\(\s*(named_)?struct\(""".r
+    val sources = scalaSources("src/main")
+    assert(sources.exists(_.getFileName.toString == "ArgBest.scala"), "ArgBest.scala was not found")
+    val found = for {
+      p <- sources if p.getFileName.toString != "ArgBest.scala"
+      code = Files.readAllLines(p).asScala.map { line =>
+        val c = line.split("//", 2)(0)
+        if (c.trim.startsWith("*") || c.trim.startsWith("/*")) "" else c
+      }.mkString("\n")
+      m <- overStruct.findAllMatchIn(code).filter(m => argsAt(code, m.end).contains("struct(")) ++
+        ofStruct.findAllMatchIn(code)
+    } yield s"$p:${code.take(m.start).count(_ == '\n') + 1}"
+    assert(found.isEmpty, s"struct picks outside ArgBest:\n${found.mkString("\n")}")
+  }
+
+  /** `code` from `from` to the parenthesis closing the one just before it. */
+  private def argsAt(code: String, from: Int): String = {
+    var (depth, i) = (1, from)
+    while (i < code.length && depth > 0) {
+      if (code(i) == '(') depth += 1 else if (code(i) == ')') depth -= 1
+      i += 1
+    }
+    code.substring(from, i)
+  }
+
   test("memos and scratch roots under src/main only in GraftSession") {
     assert(!Files.exists(Paths.get("src/main/scala/graft/io/TmpRoots.scala")))
     val found = strays("GraftSession.scala", Seq("TrieMap", "identityHashCode",

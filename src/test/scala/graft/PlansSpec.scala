@@ -67,4 +67,12 @@ class PlansSpec extends AnyFunSuite with PredicateHelper {
     assert(!cs.exists { case GreaterThan(b, t) =>
       attrNamed(b, "hzdepb") && attrNamed(t, "hzdept"); case _ => false }, s"guard in $cs")
   }
+
+  test("Explain.stable cuts JVM lambda class names, which change on every run") {
+    val dump = "Arguments: graft.mm.Multimodal$$$Lambda$6383/0x00007f5e358130c8@47e6fa81, obj#14602\n" +
+      "Arguments: org.apache.spark.sql.internal.UDFAdaptors$$$Lambda/0x00007f5e35bd5978@23f40aa, value#3"
+    assert(graft.tools.Explain.stable(dump) ===
+      "Arguments: graft.mm.Multimodal$$$Lambda, obj#14602\n" +
+      "Arguments: org.apache.spark.sql.internal.UDFAdaptors$$$Lambda, value#3")
+  }
 }

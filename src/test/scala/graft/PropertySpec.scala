@@ -4,6 +4,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ArgBest
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,6 +64,58 @@ class PropertySpec extends AnyFunSuite {
       val rs = byMu(r.getString(0))
       assert(r.getDouble(2) === rs.map(_.getDouble(2)).max)
     }
+  }
+
+  test("property: ArgBest equals max_by/min_by over structs and max/min(struct), at 1, 3 and 8 partitions") {
+    val schema = StructType(Seq(
+      StructField("g", IntegerType), StructField("k1", DoubleType),
+      StructField("k2", LongType), StructField("id", LongType),
+      StructField("p1", DoubleType), StructField("p2", StringType),
+      StructField("keep", BooleanType)))
+    val specials = Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity)
+    def dbl(): Any = rnd.nextInt(10) match {
+      case 0 => null
+      case 1 | 2 => specials(rnd.nextInt(specials.size))
+      case _ => rnd.nextInt(4).toDouble
+    }
+    // the final key `id` is unique, so no pick depends on arrival order;
+    // group 0 skips every row, and a null `keep` is skipped too (the
+    // struct form's null ordering)
+    val rows = (0 until 800).map { i =>
+      val g = rnd.nextInt(50)
+      Row(g, dbl(), if (rnd.nextInt(6) == 0) null else rnd.nextInt(3).toLong, i.toLong,
+        dbl(), if (rnd.nextInt(6) == 0) null else s"s${rnd.nextInt(9)}",
+        if (g == 0) false else if (rnd.nextInt(7) == 0) null else rnd.nextInt(4) != 0)
+    }
+    val keys = Seq(col("k1"), col("k2"), col("id"))
+    val ord = when(col("keep"), struct(keys: _*))
+    val keyPay = Seq("k1" -> col("k1"), "k2" -> col("k2"), "id" -> col("id"))
+    // all fixed-width (hash-aggregated) and with a string payload
+    // (sort-aggregated): both physical paths
+    val shapes = Seq(Seq("p1" -> col("p1"), "id" -> col("id")),
+      Seq("p1" -> col("p1"), "p2" -> col("p2")))
+    def show(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toString).toSeq.sorted
+    val answers = Seq(1, 3, 8).map { parts =>
+      val d = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+      val g = d.groupBy(col("g"))
+      val picks = shapes.flatMap { pay =>
+        val ps = struct(pay.map { case (n, c) => c.as(n) }: _*)
+        val flat = g.agg(ArgBest.max(keys, pay, col("keep")).as("hi"),
+          ArgBest.min(keys, pay, col("keep")).as("lo"))
+        val viaStruct = g.agg(max_by(ps, ord).as("hi"), min_by(ps, ord).as("lo"))
+        Seq(show(flat) -> show(viaStruct))
+      }
+      val flatExtremes = g.agg(ArgBest.max(keys, keyPay).as("hi"), ArgBest.min(keys, keyPay).as("lo"))
+      val structExtremes = g.agg(max(struct(keys: _*)).as("hi"), min(struct(keys: _*)).as("lo"))
+      picks.foreach { case (flat, _) =>
+        assert(flat.contains("[0,null,null]"), "the all-skipped group yields null")
+      }
+      val all = picks :+ (show(flatExtremes) -> show(structExtremes))
+      all.foreach { case (flat, viaStruct) => assert(flat === viaStruct, s"at $parts partitions") }
+      all.map(_._1)
+    }
+    assert(answers.distinct.size === 1, "answers depend on the partition count")
   }
 
   test("property: slice thickness never exceeds the slice width") {

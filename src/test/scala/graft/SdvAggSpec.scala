@@ -74,6 +74,23 @@ class SdvAggSpec extends AnyFunSuite {
     assert(rowsOf(SdvAgg.dominantCondition(d)) === Seq(Seq("m1", "Slight", 60.0)))
   }
 
+  test("numeric top-1 picks plan hash aggregates, no SortAggregate") {
+    val d = df(numSchema, Seq(Row("m1", 1L, 60.0, 3.0, 3.0), Row("m1", 2L, 40.0, 4.0, 4.0),
+      Row("m2", 3L, 100.0, 4.0, 4.0)))
+    val picks = Seq(
+      "dominantCondition" -> SdvAgg.dominantCondition(d),
+      "dominantComponent" -> SdvAgg.dominantComponent(d),
+      "maxMin" -> SdvAgg.maxMin(d, most = true, notRatedOrd = Some(4.0)),
+      "limiting" -> SdvAgg.limiting(d, most = false, notRatedOrd = Some(4.0)))
+    picks.foreach { case (name, q) =>
+      val plan = q.queryExecution.sparkPlan.treeString
+      assert(plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
+        s"$name:\n$plan")
+    }
+    assert(rowsOf(picks.head._2) === Seq(Seq("m1", 3.0, 60.0), Seq("m2", 4.0, 100.0)))
+    assert(rowsOf(picks(2)._2) === Seq(Seq("m1", 3.0), Seq("m2", 4.0)))
+  }
+
   test("A6 WTA: null ratings excluded from weights; bZero includes them (:5588-5593, 8035-8041)") {
     val d = df(numSchema, Seq(
       Row("m1", 1L, 50.0, 10.0, 10.0),

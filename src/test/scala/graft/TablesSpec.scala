@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,6 +109,46 @@ class TablesSpec extends AnyFunSuite {
     val second = rowsOf(q(spark, sf))
     assert(second === first)
     assert(runCopies.length === 1, runCopies.mkString(", "))
+  }
+
+  test("cached layout: a03, r02, a02, a04, r01 and v03 match the uncached session at sf0.01") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val lake = Paths.get(sf).resolveSibling("sf0.01").toString
+    val names = Seq("a03_dominant_condition", "r02_acreage_report", "a02_dominant_component",
+      "a04_dominant_condition_domain", "r01_dominant_component_key", "v03_calc_aws")
+    val uncached = names.map(n => rowsOf(SparkEntry.queries(n)(spark, lake)))
+    // a copy of the lake, so no memo the uncached runs left for `lake`
+    // is reused by the cached ones
+    val copy = tempDir("graft_cached_lake")
+    Files.walk(Paths.get(lake)).iterator().asScala.foreach { src =>
+      val dst = copy.resolve(Paths.get(lake).relativize(src).toString)
+      if (Files.isDirectory(src)) Files.createDirectories(dst)
+      else Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
+    }
+    val dir = copy.toString
+    // the test JVM has one context, so Bench.session returns `spark`
+    // with table caching switched on for the context: undo it after
+    val cached = Bench.session("4")
+    try {
+      names.zip(uncached).foreach { case (n, want) =>
+        assert(rowsOf(SparkEntry.queries(n)(cached, dir)) === want, n)
+      }
+      // a03 over the cache clustered on l_orderkey (= mukey): four
+      // codegen'd hash aggregates, no sort aggregate and no exchange
+      val a03 = SparkEntry.benchQueries("a03_dominant_condition")(cached, dir)
+      a03.collect()
+      val nodes = new AdaptiveSparkPlanHelper {}.collect(a03.queryExecution.executedPlan) {
+        case e: Exchange => e.nodeName
+        case a: SortAggregateExec => a.nodeName
+      }
+      assert(nodes.isEmpty, a03.queryExecution.executedPlan.treeString)
+    } finally {
+      GraftSession.state(spark).cacheTables = false
+      GraftSession.forget(spark, dir)
+    }
   }
 
   test("Bench.timed surfaces a failing query as an error, never a success") {
