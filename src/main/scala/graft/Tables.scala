@@ -15,7 +15,16 @@ object Tables {
     * (gSSURGO_CreateSoilMaps loops CreateSoilMap over one database;
     * SURVEY §3 "cache candidate"); [[GraftSession.forget]] unpersists
     * a dir's tables. Off by default: single-query runs and correctness
-    * dumps should measure the cold path. */
+    * dumps should measure the cold path.
+    *
+    * Once the cache is filled, its scans are planned as
+    * `CachedScanExec` (the session's `PlanCachedScans` rule), not as
+    * AQE's per-scan `TableCacheQueryStage`. That stage canonicalizes
+    * with its own id, so an exchange above a cached scan never matched
+    * an earlier copy of itself and a subplan repeated within one query
+    * ran again; over the plain leaf AQE reuses it (val07 at sf0.01: 9
+    * jobs a run → 6). The first query over a cache not filled yet still
+    * plans the stage, so AQE runs the fill first. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val state = GraftSession.state(spark)
     if (state.cacheTables)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graft.PlanCachedScans
 
 /** Catalyst optimizer rule: rewrite the depth-overlap positivity filter
   *
@@ -68,9 +69,13 @@ object DepthOverlapRule extends Rule[LogicalPlan] {
 
 /** SparkSessionExtensions entry point:
   * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. Installs
+  * [[DepthOverlapRule]] (optimizer) and `PlanCachedScans` (AQE stage
+  * preparation: scans of a filled table cache become `CachedScanExec`,
+  * so exchanges above them can be reused). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => DepthOverlapRule)
+    e.injectQueryStagePrepRule(_ => PlanCachedScans)
   }
 }

@@ -2,6 +2,7 @@ package graft.valu
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.core.Exprs
 
@@ -10,7 +11,7 @@ import graft.core.Exprs
   * shared horizon query table; results join wide on mukey. The reference
   * re-scans its materialized QueryTable_HZ per stage with its own
   * cursor sort (:3083-3160); here the stages are lazy plans over one
-  * cached DataFrame and Catalyst/AQE handle the rest. */
+  * checkpointed DataFrame and Catalyst/AQE handle the rest. */
 object ValuTable {
 
   /** Assemble the wide Valu1 table from the stage outputs. `base` is the
@@ -38,7 +39,7 @@ object ValuTable {
       interp: DataFrame, nccpiRules: Seq[(String, String)],
       socSlices: Seq[(Int, Int)] = Valu.valu1Slices): DataFrame = {
 
-    val cached = hz.cache()
+    val cached = Materialize.checkpoint(hz, eager = false)
     val gsum = Valu.sumPct(comp, major, earthy)
     // GetSumPct supplies musumcpct (all components, the table-creation
     // fill :611-625) and pctearthmc; musumcpcta/musumcpcts are NOT

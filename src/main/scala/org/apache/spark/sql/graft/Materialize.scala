@@ -114,7 +114,8 @@ object Materialize {
     * walks, insert repair, tower maintenance): `body` builds the query
     * with AQE off and shuffle partitions sized to `rows` (≈ the corpus
     * rows the chain's shuffles carry; ~250k rows per partition, floor 4,
-    * the session's count the ceiling).
+    * the session's count the ceiling, which wins over the floor: a
+    * `local[2]` session plans 2).
     *
     * Under AQE a lazy [[checkpoint]] is not lazy: planning its RDD
     * forces `AdaptiveSparkPlanExec.getFinalPhysicalPlan`, which runs
@@ -128,6 +129,6 @@ object Materialize {
     * the scope restores AQE, still adapts. Results are
     * partitioning-invariant by the operators' determinism contract. */
   def sized[T](spark: SparkSession, rows: Long)(body: => T): T =
-    scoped(spark, n => math.max(4L, math.min(n.toLong, rows / 250000L + 1L)).toInt,
+    scoped(spark, n => math.min(n.toLong, math.max(4L, rows / 250000L + 1L)).toInt,
       aqe = Some(false))(body)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesSpec extends AnyFunSuite {
   import TestSpark._
   private val sf = "/root/testdata/sf0.001"
+  private val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
 
   /** name -> acceptable dtypes (timestamps may arrive NTZ, TZ, or — for
     * events.ts under nanosAsLong — long). */
@@ -112,27 +111,13 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("cached layout: a03, r02, a02, a04, r01 and v03 match the uncached session at sf0.01") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.Exchange
-    val lake = Paths.get(sf).resolveSibling("sf0.01").toString
     val names = Seq("a03_dominant_condition", "r02_acreage_report", "a02_dominant_component",
       "a04_dominant_condition_domain", "r01_dominant_component_key", "v03_calc_aws")
-    val uncached = names.map(n => rowsOf(SparkEntry.queries(n)(spark, lake)))
-    // a copy of the lake, so no memo the uncached runs left for `lake`
-    // is reused by the cached ones
-    val copy = tempDir("graft_cached_lake")
-    Files.walk(Paths.get(lake)).iterator().asScala.foreach { src =>
-      val dst = copy.resolve(Paths.get(lake).relativize(src).toString)
-      if (Files.isDirectory(src)) Files.createDirectories(dst)
-      else Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
-    }
-    val dir = copy.toString
-    // the test JVM has one context, so Bench.session returns `spark`
-    // with table caching switched on for the context: undo it after
-    val cached = Bench.session("4")
-    try {
+    val uncached = names.map(n => rowsOf(SparkEntry.queries(n)(spark, sf001)))
+    inCachedSession(sf001) { (cached, dir) =>
       names.zip(uncached).foreach { case (n, want) =>
         assert(rowsOf(SparkEntry.queries(n)(cached, dir)) === want, n)
       }
@@ -145,9 +130,19 @@ class TablesSpec extends AnyFunSuite {
         case a: SortAggregateExec => a.nodeName
       }
       assert(nodes.isEmpty, a03.queryExecution.executedPlan.treeString)
-    } finally {
-      GraftSession.state(spark).cacheTables = false
-      GraftSession.forget(spark, dir)
+    }
+  }
+
+  test("cached layout: val07, s15, n18, r07, p08 and v08 (exchange reuse) match the uncached session at sf0.01") {
+    // the queries whose cached plans reuse an exchange above a scan of
+    // the filled cache (CachedScanExec)
+    val names = Seq("val07_restriction_depth", "s15_cdc_apply", "n18_knn_graph",
+      "r07_legend_colors", "p08_planner_int_precision", "v08_rz_aws")
+    val uncached = names.map(n => rowsOf(SparkEntry.queries(n)(spark, sf001)))
+    inCachedSession(sf001) { (cached, dir) =>
+      names.zip(uncached).foreach { case (n, want) =>
+        assert(rowsOf(SparkEntry.queries(n)(cached, dir)) === want, n)
+      }
     }
   }
 

@@ -64,6 +64,21 @@ class MaterializeSpec extends AnyFunSuite {
     } finally spark.conf.set(partsKey, before._2)
   }
 
+  test("sized: the session's partition count caps the floor of 4, and row count sizes up to it") {
+    val before = spark.conf.get(partsKey)
+    def sizedAt(n: Int, rows: Long): (String, String) = {
+      spark.conf.set(partsKey, n.toString)
+      Materialize.sized(spark, rows)((spark.conf.get(partsKey), spark.conf.get(aqeKey)))
+    }
+    try {
+      assert(sizedAt(2, 1000L) === (("2", "false")))
+      assert(sizedAt(2, 10000000L) === (("2", "false")))
+      assert(sizedAt(32, 1000L) === (("4", "false")))
+      assert(sizedAt(32, 2000000L) === (("9", "false")))
+      assert(sizedAt(32, 100000000L) === (("32", "false")))
+    } finally spark.conf.set(partsKey, before)
+  }
+
   test("dupClusters and dsirScore leave no Dataset cache entry behind") {
     val cacheManager = spark.sharedState.cacheManager
     val entries = cacheManager.numCachedEntries
