@@ -71,6 +71,16 @@ object GraftSession {
   def scratch(s: SparkSession, tag: String, dir: String): String =
     state(s).scratch(tag, dir)
 
+  /** [[scratch]] for (`tag`, `dir`), emptied through its Hadoop
+    * filesystem: a run that must start fresh (a stale checkpoint would
+    * replay nothing, a stale lake could mask a code change). */
+  def freshScratch(s: SparkSession, tag: String, dir: String): String = {
+    val path = scratch(s, tag, dir)
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    path
+  }
+
   /** Drop every memo and scratch root of `dir` in `s`'s [[State]]. */
   def forget(s: SparkSession, dir: String): Unit = state(s).forget(dir)
 

@@ -1,18 +1,16 @@
 package graft
 
-/** Minimal JSON string escaping shared by the Bench/Verify artifact
-  * writers. Escapes backslash, quote, and ALL control chars (<0x20) —
-  * Spark exception text routinely carries tabs, newlines, and ANSI
-  * escape bytes, any of which would make the driver's json.load fail
-  * and silently zero a round's artifact. */
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** The one JSON writer of the driver artifacts (Bench, Verify,
+  * ContractCheck): Jackson with its Scala module, both on Spark's
+  * classpath. Jackson escapes every control char, so Spark exception
+  * text (tabs, newlines, ANSI escapes) stays on one line and parses. */
 object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** `v` as one line: maps (a `ListMap` keeps its field order), seqs,
+    * options, strings, numbers, booleans. */
+  def write(v: Any): String = mapper.writeValueAsString(v)
 }

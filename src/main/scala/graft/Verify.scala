@@ -22,20 +22,13 @@ object Verify {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          val msg = s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("").replaceAll("\\s+", " ").take(300)
-          errors(name) = msg
-          System.err.println(s"[verify] $name FAILED: $msg")
+          errors(name) = tools.TaskMetrics.failure(e)
+          System.err.println(s"[verify] $name FAILED: ${errors(name)}")
         }
     }
-    def q(s: String): String = Json.str(s)
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => keep(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql.filter { case (k, _) => keep(k) }))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), Json.write(errors))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} of ${SparkEntry.queries.size} queries FAILED")
     spark.stop()

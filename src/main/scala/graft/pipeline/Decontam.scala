@@ -91,12 +91,10 @@ object Decontam {
     val s = corpus.sparkSession
     val evalSh = shingled(eval, idCol, textCol, n).select(col("s")).distinct()
     // the hashed eval set feeds ~10 EAGER jobs below (occupancy count,
-    // the direct build, up to 8 shard builds) — persist it so the
-    // tokenize/explode/distinct pipeline runs once, not per job; all
-    // consumers finish before this function returns, so the unpersist
-    // below is safe (the RETURNED plan reads evalSh, not evalH)
-    val evalH = evalSh.select(xxhash64(col("s")).as("h")).persist()
-    try {
+    // the direct build, up to 8 shard builds) — checkpoint it so the
+    // tokenize/explode/distinct pipeline runs once, not per job (the
+    // RETURNED plan reads evalSh, not evalH)
+    val evalH = Materialize.checkpoint(evalSh.select(xxhash64(col("s")).as("h")), eager = true)
     // shard occupancy in one small-side job: stat.bloomFilter NPEs on a
     // zero-row input (the build aggregate returns a null blob), and a
     // tiny eval set legitimately leaves shards empty — an empty shard
@@ -129,7 +127,6 @@ object Decontam {
       .groupBy(col("did").as(idCol))
       .agg(count_distinct(col("s")).as("n_shared"))
       .withColumn("merge_exact", lit(mergeExact))
-    } finally evalH.unpersist()
   }
 
   /** NEAR-duplicate decontamination — the fuzzy complement of

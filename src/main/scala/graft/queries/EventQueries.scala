@@ -201,34 +201,16 @@ object EventQueries extends QuerySet {
     Q("st07_stream_interval_join",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        val tmp = GraftSession.scratch(s, "st07", dir)
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
-          col("event_type"), col("ts"),
-          graft.core.Exprs.cents(col("value")).cast("long").as("value_cents"))
+        val tmp = GraftSession.freshScratch(s, "st07", dir)
+        val ev = eventCents(s, dir)
         val cut1 = timestamp_micros(lit(1704432000000000L))
         val cut2 = timestamp_micros(lit(1705607000000000L))
-        def run(): Unit = {
-          val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/drop")
-          val clicks = stream.filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("c_ts"))
-          val views = stream.filter(col("event_type") === "view")
-            .select(col("event_id").as("view_id"), col("user_id"),
-              col("ts").as("v_ts"), col("value_cents"))
-          val q = EventOps.streamIntervalJoin(clicks, views, "user_id",
-              "c_ts", "v_ts", interval = "1 HOUR", delay = "2 hours")
-            .select(col("click_id"), col("user_id"),
-              unix_micros(col("c_ts")).as("click_us"),
-              col("view_id"), unix_micros(col("v_ts")).as("view_us"),
-              col("value_cents"))
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$tmp/out")
-            .option("checkpointLocation", s"$tmp/ck")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        def run(): Unit = ij("inner")(s.readStream.schema(ev.schema).parquet(s"$tmp/drop"))
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", s"$tmp/out")
+          .option("checkpointLocation", s"$tmp/ck")
+          .trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
         // the stream's STATE partition count is fixed at first start by
         // spark.sql.shuffle.partitions and re-used from the checkpoint;
         // at 32 each of the 3 runs commits 32 join-state stores per
@@ -272,34 +254,15 @@ object EventQueries extends QuerySet {
     Q("st10_stream_outer_join",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        val tmp = GraftSession.scratch(s, "st10", dir)
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
-          col("event_type"), col("ts"),
-          graft.core.Exprs.cents(col("value")).cast("long").as("value_cents"))
+        val tmp = GraftSession.freshScratch(s, "st10", dir)
+        val ev = eventCents(s, dir)
         val cut = timestamp_micros(lit(1705607000000000L))
-        def run(): Unit = {
-          val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/drop")
-          val clicks = stream.filter(col("event_type") === "click")
-            .select(col("event_id").as("click_id"), col("user_id"),
-              col("ts").as("c_ts"))
-          val views = stream.filter(col("event_type") === "view")
-            .select(col("event_id").as("view_id"), col("user_id"),
-              col("ts").as("v_ts"), col("value_cents"))
-          val q = EventOps.streamIntervalJoin(clicks, views, "user_id",
-              "c_ts", "v_ts", interval = "1 HOUR", delay = "2 hours",
-              joinType = "left_outer")
-            .select(col("click_id"), col("user_id"),
-              unix_micros(col("c_ts")).as("click_us"),
-              col("view_id"), unix_micros(col("v_ts")).as("view_us"),
-              col("value_cents"))
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", s"$tmp/out")
-            .option("checkpointLocation", s"$tmp/ck")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        def run(): Unit = ij("left_outer")(s.readStream.schema(ev.schema).parquet(s"$tmp/drop"))
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", s"$tmp/out")
+          .option("checkpointLocation", s"$tmp/ck")
+          .trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
         // state stores sized to state volume, not session CPUs (the
         // st07 measurement: ~23 s → ~8 s at small store counts)
         Materialize.scoped(s, _ => 4) {
@@ -818,9 +781,7 @@ object EventQueries extends QuerySet {
     Q("st08_watermark_drop",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        val tmp = GraftSession.scratch(s, "st08", dir)
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        val tmp = GraftSession.freshScratch(s, "st08", dir)
         val ev = Tables.events(s, dir).select(col("ts"), col("event_type"))
         val mm = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
         val cut = (mm.getLong(0) + mm.getLong(1)) / 2
@@ -889,28 +850,23 @@ object EventQueries extends QuerySet {
              |UNION ALL
              |SELECT 'state_rows', (SELECT count(*) FROM keep)""".stripMargin)))
 
-  /** Batch-side plans of this set's streaming queries on static frames
-    * (CodegenGateSpec probe targets — see QuerySet.stBatchPlans):
-    * st05's registered query IS its batch twin (typed funnelBatch);
-    * st07/st10 run streamIntervalJoin on static inputs (withWatermark
-    * on a batch frame is eliminated by the optimizer, leaving exactly
-    * the per-batch join plan); st08 probes the windowed aggregation
-    * plus the update-mode read-back (last update per key). */
-  private def cv(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
+  /** The events projection st07/st10 land and stream: ids, type, ts
+    * and the value in exact cents. */
+  private def eventCents(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.events(s, dir).select(col("event_id"), col("user_id"),
       col("event_type"), col("ts"),
       graft.core.Exprs.cents(col("value")).cast("long").as("value_cents"))
-    (ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("c_ts")),
-      ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("user_id"),
-          col("ts").as("v_ts"), col("value_cents")))
-  }
 
-  private def ij(joinType: String)(s: org.apache.spark.sql.SparkSession,
-      dir: String) = {
-    val (clicks, views) = cv(s, dir)
+  /** e03's interval join of `ev`'s clicks to its views, over a static
+    * or a `readStream` frame of [[eventCents]]: st07 (`inner`) and st10
+    * (`left_outer`) stream through it, and their bench twins and
+    * codegen probes run it on the static frame. */
+  private def ij(joinType: String)(ev: org.apache.spark.sql.DataFrame) = {
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id"),
+        col("ts").as("v_ts"), col("value_cents"))
     EventOps.streamIntervalJoin(clicks, views, "user_id", "c_ts", "v_ts",
         interval = "1 HOUR", delay = "2 hours", joinType = joinType)
       .select(col("click_id"), col("user_id"),
@@ -918,6 +874,9 @@ object EventQueries extends QuerySet {
         col("view_id"), unix_micros(col("v_ts")).as("view_us"),
         col("value_cents"))
   }
+
+  private def ijStatic(joinType: String)(s: org.apache.spark.sql.SparkSession,
+      dir: String) = ij(joinType)(eventCents(s, dir))
 
   /** Bench twins (r15 verdict #6, the n22/n23 precedent applied to
     * the streaming family): st07/st10 book ~2 s of operator work
@@ -933,16 +892,23 @@ object EventQueries extends QuerySet {
   override def benchPlans
       : Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
     Map(
-      "st07_stream_interval_join" -> (ij("inner") _),
-      "st10_stream_outer_join" -> (ij("left_outer") _))
+      "st07_stream_interval_join" -> (ijStatic("inner") _),
+      "st10_stream_outer_join" -> (ijStatic("left_outer") _))
 
+  /** Batch-side plans of this set's streaming queries on static frames
+    * (CodegenGateSpec probe targets — see QuerySet.stBatchPlans):
+    * st05's registered query IS its batch twin (typed funnelBatch);
+    * st07/st10 run streamIntervalJoin on static inputs (withWatermark
+    * on a batch frame is eliminated by the optimizer, leaving exactly
+    * the per-batch join plan); st08 probes the windowed aggregation
+    * plus the update-mode read-back (last update per key). */
   override def stBatchPlans
       : Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = {
     Map(
       "st05_funnel_stateful" ->
         all.find(_.name == "st05_funnel_stateful").get.fn,
-      "st07_stream_interval_join" -> (ij("inner") _),
-      "st10_stream_outer_join" -> (ij("left_outer") _),
+      "st07_stream_interval_join" -> (ijStatic("inner") _),
+      "st10_stream_outer_join" -> (ijStatic("left_outer") _),
       "st08_watermark_drop" -> ((s, dir) => {
         val agg = Tables.events(s, dir).select(col("ts"), col("event_type"))
           .withWatermark("ts", "1 hour")

@@ -580,11 +580,7 @@ object ExtraQueries extends QuerySet {
     Q("st04_valu_incremental",
       (s, dir) => {
         import org.apache.spark.sql.DataFrame
-        val tmp = GraftSession.scratch(s, "st04", dir)
-        // fresh run — a stale checkpoint would replay nothing and a
-        // stale lake could mask a code change
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        val tmp = GraftSession.freshScratch(s, "st04", dir)
         val base = Tables.load(s, dir, "customer").select(col("c_custkey").as("mukey"))
         def areaOf = concat(lit("SSA"), (col("mukey") % 4).cast("string"))
         val signal = base.select(col("mukey"), areaOf.as("areasymbol"))

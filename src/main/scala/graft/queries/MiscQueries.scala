@@ -52,10 +52,8 @@ object MiscQueries extends QuerySet {
     Q("s04_wss_canned_zip",
       (s, dir) => {
         import java.util.zip.{ZipEntry, ZipOutputStream}
-        val root = GraftSession.scratch(s, "s04", dir)
-        val p = new org.apache.hadoop.fs.Path(root)
+        val root = GraftSession.freshScratch(s, "s04", dir)
         val conf = s.sparkContext.hadoopConfiguration
-        p.getFileSystem(conf).delete(p, true)
         // region is TPC-H's fixed 5-row dimension — bounded driver-side
         // work to fabricate the download artifacts, not a data scan
         val rows = Tables.load(s, dir, "region")

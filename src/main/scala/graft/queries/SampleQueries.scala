@@ -153,9 +153,7 @@ object SampleQueries extends QuerySet {
     // as s15, now through the streaming machinery.
     Q("st09_stream_cdc_apply",
       (s, dir) => {
-        val tmp = GraftSession.scratch(s, "st09", dir)
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        val tmp = GraftSession.freshScratch(s, "st09", dir)
         val (oldSnap, newSnap) = snapshotPair(s, dir)
         graft.streaming.Ingest.initSnapshot(oldSnap, s"$tmp/lake")
         // checkpoint the full-outer diff once — both wave writes read

@@ -4411,9 +4411,7 @@ object TrainQueries extends QuerySet {
     Q("st06_index_add_stream",
       (s, dir) => {
         import graft.streaming.Ingest
-        val tmp = GraftSession.scratch(s, "st06", dir)
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        val tmp = GraftSession.freshScratch(s, "st06", dir)
         val e = Tables.load(s, dir, "embeddings")
         val encode = st06Encode(s, dir)
         val newV = e.filter(col("vec_id") >= 400)
@@ -5229,9 +5227,7 @@ object TrainQueries extends QuerySet {
     Q("st11_stream_neardup",
       (s, dir) => {
         import graft.streaming.Ingest
-        val tmp = GraftSession.scratch(s, "st11", dir)
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        val tmp = GraftSession.freshScratch(s, "st11", dir)
         val docs = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("text"))
         val corpus = docs.filter(col("doc_id") < 300)

@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -221,9 +223,7 @@ object ContractCheck {
         System.err.println(s"[contract] $name errored: ${e.getMessage}"); false
       }))
     }
-    val json = results.map { case (k, v) => s"${graft.Json.str(k)}: $v" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(jsonOut), json)
+    Files.writeString(Paths.get(jsonOut), graft.Json.write(ListMap(results: _*)))
     results.foreach { case (k, v) =>
       println(s"[contract] ${if (v) "PASS" else "FAIL"} $k")
     }

@@ -18,17 +18,13 @@ object StageProbe {
     val metrics = new TaskMetrics
     spark.sparkContext.addSparkListener(metrics)
     for (name <- args; r <- 1 to reps) {
-      metrics.resetStages()
-      val b = metrics.totals
-      val t0 = System.nanoTime()
-      graft.Bench.runNoop(spark, sfDir, name)
-      val w = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      val d = metrics.totals - b
-      println(f"[stageprobe] $name rep$r: $w%.2f s" +
+      val m = metrics.measure(spark.sparkContext)(graft.Bench.runNoop(spark, sfDir, name))
+      val d = m.sums
+      println(f"[stageprobe] $name rep$r: ${m.wallS}%.2f s" +
         f" task=${d.runMs / 1e3}%.2f cpu=${d.cpuNs / 1e9}%.2f gc=${d.gcMs / 1e3}%.2f" +
         f" tasks=${d.tasks}%d" +
-        f" shuffle_rw_mb=[${d.shuffleReadBytes / 1e6}%.1f,${d.shuffleWriteBytes / 1e6}%.1f]")
+        f" shuffle_rw_mb=[${d.shuffleReadBytes / 1e6}%.1f,${d.shuffleWriteBytes / 1e6}%.1f]" +
+        m.error.fold("")(e => s" FAILED $e"))
       if (r == reps || probeAll)
         for ((id, stage, a) <- metrics.stageTable)
           println(f"  stage $id%5d task=${a.runMs / 1e3}%7.2f cpu=${a.cpuNs / 1e9}%7.2f" +

@@ -2,18 +2,18 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.SparkContext
+import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Task-end metrics of a session — the one listener behind Bench's
   * per-query wall-vs-CPU split (contention inflates wall with CPU flat;
   * a code regression moves both) and StageProbe's stage table. Totals
-  * only grow: diff two [[totals]] snapshots to charge a span of work.
-  * Per-stage aggregates are cleared by the caller per query
-  * ([[resetStages]]), so a long-lived session does not grow them.
-  * Events arrive asynchronously: drain the listener bus
-  * (`org.apache.spark.graft.ListenerDrain`) when ms of lag matter. */
+  * only grow: diff two [[totals]] snapshots to charge a span of work;
+  * [[measure]] charges one query. Each [[measure]] clears the per-stage
+  * aggregates, so a long-lived session does not grow them. */
 final class TaskMetrics extends SparkListener {
-  import TaskMetrics.Sums
+  import TaskMetrics.{Measured, Sums}
 
   private var total = Sums()
   private val stages = mutable.Map.empty[Int, (String, Sums)] // id → (name, sums)
@@ -49,16 +49,38 @@ final class TaskMetrics extends SparkListener {
 
   def totals: Sums = synchronized(total)
 
-  /** (stage id, name, sums) of every stage since the last
-    * [[resetStages]], by task time descending. */
+  /** (stage id, name, sums) of every stage since the last [[measure]]
+    * began, by task time descending. */
   def stageTable: Seq[(Int, String, Sums)] = synchronized {
     stages.toSeq.map { case (id, (name, s)) => (id, name, s) }
   }.sortBy(-_._3.runMs)
 
-  def resetStages(): Unit = synchronized(stages.clear())
+  private def resetStages(): Unit = synchronized(stages.clear())
+
+  /** Run `body` as one query on `sc`, where this listener is added: its
+    * wall seconds, task totals and failure text. The bus is drained after
+    * the wall time and before the totals: task-end events arrive late,
+    * and would otherwise be charged to the next query. */
+  def measure(sc: SparkContext)(body: => Unit): Measured = {
+    resetStages()
+    val before = totals
+    val t0 = System.nanoTime()
+    val err = try { body; None } catch { case e: Throwable => Some(TaskMetrics.failure(e)) }
+    val wallS = (System.nanoTime() - t0) / 1e9
+    ListenerDrain.drain(sc)
+    Measured(wallS, totals - before, err)
+  }
 }
 
 object TaskMetrics {
+
+  /** One query's [[TaskMetrics.measure]]: `error` is None when it ran. */
+  final case class Measured(wallS: Double, sums: Sums, error: Option[String])
+
+  /** A failed query as one short line: it must surface in an artifact
+    * as an error, never as a 2 ms "success". */
+  def failure(e: Throwable): String = s"${e.getClass.getSimpleName}: " +
+    Option(e.getMessage).getOrElse("").replaceAll("\\s+", " ").take(300)
 
   /** Summed task metrics (ms / ns / bytes as Spark reports them).
     * `maxTaskMs` is the longest single task — a max, not a sum, so a

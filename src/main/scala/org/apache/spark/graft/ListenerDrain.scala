@@ -2,8 +2,8 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Test-side deterministic listener-bus drain (the r12 advisor's skew-
-  * battery flake finding): `SparkContext.listenerBus` is
+/** Deterministic listener-bus drain, for `TaskMetrics.measure` and the
+  * skew tests (the r12 skew-battery flake): `SparkContext.listenerBus` is
   * `private[spark]`, so the skew measurements previously polled the
   * task-end queue for 3×100 ms of stability — late TaskEnd delivery on
   * a loaded machine could drop events past the poll window and flake

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every entry point builds its session through [[GraftSession]]: a
   * second builder chain is how the confs drifted apart before. Every
   * checkpoint and every AQE / shuffle-partition scope goes through
-  * `org.apache.spark.sql.graft.Materialize`, and every memo and scratch
-  * root through [[GraftSession]]'s state, for the same reason. */
+  * `org.apache.spark.sql.graft.Materialize`, every memo and scratch
+  * root through [[GraftSession]]'s state, and every driver artifact
+  * through the one JSON writer, for the same reason. */
 class GraftSessionSpec extends AnyFunSuite {
 
   private def scalaSources(root: String): Seq[Path] =
@@ -50,6 +51,17 @@ class GraftSessionSpec extends AnyFunSuite {
       // the session builder's initial confs are not a scope
       (file, code) => file == "GraftSession.scala" && code.contains(".config("))
     assert(found.isEmpty, s"materialization outside Materialize:\n${found.mkString("\n")}")
+  }
+
+  test("Dataset caches under src/main only through Materialize and the Tables cache fill") {
+    val found = strays("Materialize.scala", Seq(".persist(", ".cache()"),
+      (file, code) => file == "Tables.scala" && code.contains(".cache()"))
+    assert(found.isEmpty, s"raw caches outside Materialize:\n${found.mkString("\n")}")
+  }
+
+  test("driver artifacts under src/main only through the Jackson writer in Json.scala") {
+    val found = strays("Json.scala", Seq("Json.str(", "mkString(\"{\""))
+    assert(found.isEmpty, s"hand-built JSON:\n${found.mkString("\n")}")
   }
 
   test("struct arg-max picks under src/main only through ArgBest") {

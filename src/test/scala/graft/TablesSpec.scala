@@ -146,10 +146,11 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
-  test("Bench.timed surfaces a failing query as an error, never a success") {
-    val (_, err) = Bench.timed(() => throw new RuntimeException("boom"))
+  test("TaskMetrics.measure surfaces a failing query as an error, never a success") {
+    val metrics = new tools.TaskMetrics
+    val err = metrics.measure(spark.sparkContext)(throw new RuntimeException("boom")).error
     assert(err.exists(_.contains("boom")))
-    val (_, ok) = Bench.timed(() => ())
+    val ok = metrics.measure(spark.sparkContext)(()).error
     assert(ok.isEmpty)
   }
 }
