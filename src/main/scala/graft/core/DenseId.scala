@@ -21,12 +21,9 @@ object DenseId {
   /** (key, `outCol`) lookup over the distinct non-null values of
     * `keyCol` in `df`, ids consecutive from 1 in ascending key order.
     * Join it back to the fact rows for the per-row cell value. */
-  def lookup(df: DataFrame, keyCol: String, outCol: String = "cellvalue",
-      partitions: Int = 0): DataFrame = {
+  def lookup(df: DataFrame, keyCol: String, outCol: String = "cellvalue"): DataFrame = {
     val spark = df.sparkSession
-    val n =
-      if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
+    val n = spark.sessionState.conf.numShufflePartitions
     val keys = df.select(col(keyCol)).where(col(keyCol).isNotNull).distinct()
     val sorted = keys.repartitionByRange(n, col(keyCol)).sortWithinPartitions(keyCol)
     val schema = sorted.schema.add(outCol, LongType, nullable = false)

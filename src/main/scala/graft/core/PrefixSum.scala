@@ -27,11 +27,9 @@ object PrefixSum {
     * not the max of the running sum (which only coincides with the
     * total when values are non-negative). */
   def exclusive(df: DataFrame, orderCol: String, valueCol: String,
-      out: String = "prefix", partitions: Int = 0): DataFrame = {
+      out: String = "prefix"): DataFrame = {
     val spark = df.sparkSession
-    val n =
-      if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
+    val n = spark.sessionState.conf.numShufflePartitions
     val withPid = df.repartitionByRange(n, col(orderCol))
       .withColumn("__pid", spark_partition_id())
     val local = Window.partitionBy(col("__pid")).orderBy(col(orderCol))

@@ -1032,89 +1032,77 @@ object Dedup {
         greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v")).distinct(), eager = true)
-    // the per-round jobs are graph-sized (near-dup components are tiny
-    // next to the corpus); AQE re-plans every one of them and the
-    // re-planning latency dominates the actual work — measured 2.3× on
-    // the whole operator. Toggle it off for the loop only, and restore
-    // whatever the session had.
-    Materialize.scoped(spark, aqe = Some(false)) {
-      // each round is 2-3 shuffles over the edge set with AQE off — at
-      // the session's fact-table partition count the per-task overhead
-      // dominates (measured 114 task-seconds of ~50 ms tasks on a
-      // few-hundred-edge graph). Size the loop to the graph (~500k
-      // edges/partition, floor 8) with the session's own count as the
-      // ceiling, and restore after.
-      val n0 = edges.count()
-      Materialize.scoped(spark,
-          n => math.min(n.toLong, math.max(8L, n0 / 500000L + 1L)).toInt) {
-        var prevCount = n0
-        var rounds = 0
-        var stable = false
-        while (!stable && rounds < maxIter) {
-          // Each round is ONE action: both star ops are window minima
-          // (not groupBy+self-join — a join would consume its left side
-          // through multiple branches and re-evaluate the round's
-          // lineage per branch), the small-star's two emissions ride one
-          // explode, and the fixpoint check is a single aggregate over
-          // the new set left-joined to the old. Round latency — plan +
-          // job, not data — dominates at every scale where CC matters,
-          // and the 3-actions-per-round draft measured ~0.9 s/round of
-          // pure planning/launch on a 70-edge graph.
-          // large-star over the symmetric view: (y > x) re-attaches to
-          // m = min(Γ(x) ∪ {x}); output stays canonical because m ≤ x < y
-          val sym = edges.select(col("u").as("x"), col("v").as("y"))
-            .unionByName(edges.select(col("v").as("x"), col("u").as("y")))
-          val wL = Window.partitionBy(col("x"))
-          // no distinct here (r18): the small-star min below is
-          // duplicate-insensitive and ss re-distincts, so the dedup
-          // exchange+aggregate this carried every round bought nothing —
-          // duplicate (u,v) rows (bounded by the symmetric degree) ride
-          // one more exchange instead. Set semantics per round unchanged.
-          val ls = sym
-            .withColumn("m", least(min(col("y")).over(wL), col("x")))
-            .filter(col("y") > col("x"))
-            .select(col("y").as("u"), col("m").as("v"))
-          // small-star over the canonical list: u and its smaller
-          // neighbors attach to min(N<(u)); all outputs (·, m) canonical
-          val wS = Window.partitionBy(col("u"))
-          val ss = Materialize.checkpoint(ls
-            .withColumn("m", min(col("v")).over(wS))
-            .select(explode(array(
-              struct(col("v").as("u"), col("m").as("v")),
-              struct(col("u"), col("m").as("v")))).as("e"))
-            .select(col("e.u").as("u"), col("e.v").as("v"))
-            .filter(col("u") =!= col("v"))
-            .distinct(), eager = false)
-          // exact fixpoint in the same action: new-set size (old size is
-          // carried, not recomputed) and overlap with the old set — both
-          // distinct, so nNew == nOld == prevCount ⇔ set equality
-          val chk = ss.join(
-              edges.select(col("u"), col("v"), lit(1).as("old_e")),
-              Seq("u", "v"), "left")
-            .agg(count(lit(1)).as("n"), count(col("old_e")).as("o")).head()
-          stable = chk.getLong(0) == prevCount && chk.getLong(1) == chk.getLong(0)
-          prevCount = chk.getLong(0)
-          edges = ss
-          rounds += 1
-        }
-        // fail-loud contract (r14 advice): a maxIter exit without the
-        // fixpoint means the labels below may not be component minima —
-        // silently returning them would hand a caller wrong clusters
-        // with no signal. ~log² n rounds suffice for ANY graph, so
-        // tripping this at maxIter=32 indicates a bug, not a big input.
-        require(stable,
-          s"dupClusters: no fixpoint after $maxIter rounds " +
-            s"(edge set still changing, |E|=$prevCount) — labels would " +
-            "not be component minima; raise maxIter only with evidence")
-        // converged star forest: every u points at its component min;
-        // roots (v-side only) label themselves
-        val uLab = edges.groupBy(col("u")).agg(min(col("v")).as("cluster"))
-          .select(col("u").as("id"), col("cluster"))
-        val roots = edges.select(col("v")).distinct()
-          .join(edges.select(col("u").as("v")).distinct(), Seq("v"), "left_anti")
-          .select(col("v").as("id"), col("v").as("cluster"))
-        (uLab.unionByName(roots), rounds)
+    // the loop runs 2-3 graph-sized shuffles per round (near-dup
+    // components are tiny next to the corpus), sized to the edge set
+    lazy val n0 = edges.count()
+    Materialize.sized(spark, n0) {
+      var prevCount = n0
+      var rounds = 0
+      var stable = false
+      while (!stable && rounds < maxIter) {
+        // Each round is ONE action: both star ops are window minima
+        // (not groupBy+self-join — a join would consume its left side
+        // through multiple branches and re-evaluate the round's
+        // lineage per branch), the small-star's two emissions ride one
+        // explode, and the fixpoint check is a single aggregate over
+        // the new set left-joined to the old. Round latency — plan +
+        // job, not data — dominates at every scale where CC matters,
+        // and the 3-actions-per-round draft measured ~0.9 s/round of
+        // pure planning/launch on a 70-edge graph.
+        // large-star over the symmetric view: (y > x) re-attaches to
+        // m = min(Γ(x) ∪ {x}); output stays canonical because m ≤ x < y
+        val sym = edges.select(col("u").as("x"), col("v").as("y"))
+          .unionByName(edges.select(col("v").as("x"), col("u").as("y")))
+        val wL = Window.partitionBy(col("x"))
+        // no distinct here (r18): the small-star min below is
+        // duplicate-insensitive and ss re-distincts, so the dedup
+        // exchange+aggregate this carried every round bought nothing —
+        // duplicate (u,v) rows (bounded by the symmetric degree) ride
+        // one more exchange instead. Set semantics per round unchanged.
+        val ls = sym
+          .withColumn("m", least(min(col("y")).over(wL), col("x")))
+          .filter(col("y") > col("x"))
+          .select(col("y").as("u"), col("m").as("v"))
+        // small-star over the canonical list: u and its smaller
+        // neighbors attach to min(N<(u)); all outputs (·, m) canonical
+        val wS = Window.partitionBy(col("u"))
+        val ss = Materialize.checkpoint(ls
+          .withColumn("m", min(col("v")).over(wS))
+          .select(explode(array(
+            struct(col("v").as("u"), col("m").as("v")),
+            struct(col("u"), col("m").as("v")))).as("e"))
+          .select(col("e.u").as("u"), col("e.v").as("v"))
+          .filter(col("u") =!= col("v"))
+          .distinct(), eager = false)
+        // exact fixpoint in the same action: new-set size (old size is
+        // carried, not recomputed) and overlap with the old set — both
+        // distinct, so nNew == nOld == prevCount ⇔ set equality
+        val chk = ss.join(
+            edges.select(col("u"), col("v"), lit(1).as("old_e")),
+            Seq("u", "v"), "left")
+          .agg(count(lit(1)).as("n"), count(col("old_e")).as("o")).head()
+        stable = chk.getLong(0) == prevCount && chk.getLong(1) == chk.getLong(0)
+        prevCount = chk.getLong(0)
+        edges = ss
+        rounds += 1
       }
+      // fail-loud contract (r14 advice): a maxIter exit without the
+      // fixpoint means the labels below may not be component minima —
+      // silently returning them would hand a caller wrong clusters
+      // with no signal. ~log² n rounds suffice for ANY graph, so
+      // tripping this at maxIter=32 indicates a bug, not a big input.
+      require(stable,
+        s"dupClusters: no fixpoint after $maxIter rounds " +
+          s"(edge set still changing, |E|=$prevCount) — labels would " +
+          "not be component minima; raise maxIter only with evidence")
+      // converged star forest: every u points at its component min;
+      // roots (v-side only) label themselves
+      val uLab = edges.groupBy(col("u")).agg(min(col("v")).as("cluster"))
+        .select(col("u").as("id"), col("cluster"))
+      val roots = edges.select(col("v")).distinct()
+        .join(edges.select(col("u").as("v")).distinct(), Seq("v"), "left_anti")
+        .select(col("v").as("id"), col("v").as("cluster"))
+      (uLab.unionByName(roots), rounds)
     }
   }
 
@@ -1145,22 +1133,10 @@ object Dedup {
         .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
       eager = true)
     // the per-iteration jobs are graph-sized (tiny next to the corpus
-    // work that produced the pairs); as in dupClusters' rounds, AQE's
-    // re-plan latency per micro-stage dominates the actual work — measured
-    // ~4.5 s of pure planning on a 50-node graph. Run the iterations
-    // as eagerly-checkpointed tiny jobs with AQE off, restoring the
-    // session's setting after.
+    // work that produced the pairs): eagerly-checkpointed tiny jobs,
+    // sized to the edge set
     val spark = pairs.sparkSession
-    // size the loop's shuffles to the GRAPH, not the session CPU
-    // count (the st07 stream-state lesson): a near-dup graph is tiny
-    // next to the corpus that produced it, and 6 micro-jobs × 32+
-    // tasks of pure scheduling overhead dominate. ~500k edges per
-    // partition; the session's own setting stays the ceiling so a
-    // genuinely large graph keeps its parallelism.
-    val nEdges = edges.count()
-    Materialize.scoped(spark,
-        n => math.max(1L, math.min(n.toLong, (nEdges + 499999L) / 500000L)).toInt,
-        aqe = Some(false)) {
+    Materialize.sized(spark, edges.count()) {
       // the scope's partition count (AQE is off, so no coalescing
       // initial count stands in for it)
       val e = edges.coalesce(spark.sessionState.conf.numShufflePartitions)

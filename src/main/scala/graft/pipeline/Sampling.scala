@@ -230,14 +230,12 @@ object Sampling {
     * sorted order, not on partition bounds. Null ids are excluded;
     * negative ids fail loudly ([[hash32]] is undefined on them).
     * Returns (id, shard, shard_pos) with shard_pos dense from 0. */
-  def shardOrder(df: DataFrame, idCol: String, nShards: Int,
-      partitions: Int = 0): DataFrame = {
+  def shardOrder(df: DataFrame, idCol: String, nShards: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
     require(nShards >= 1, s"shardOrder: nShards=$nShards must be positive")
     val spark = df.sparkSession
-    val n = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
+    val n = spark.sessionState.conf.numShufflePartitions
     val h = hash32(col(idCol))
     val keyed = df.filter(col(idCol).isNotNull)
       .filter(coalesce(assert_true(col(idCol) >= 0,

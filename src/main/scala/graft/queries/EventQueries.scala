@@ -211,15 +211,8 @@ object EventQueries extends QuerySet {
           .option("checkpointLocation", s"$tmp/ck")
           .trigger(Trigger.AvailableNow()).start()
           .awaitTermination()
-        // the stream's STATE partition count is fixed at first start by
-        // spark.sql.shuffle.partitions and re-used from the checkpoint;
-        // at 32 each of the 3 runs commits 32 join-state stores per
-        // side per batch and the store churn dominates wall time
-        // (measured ~23 s → ~8 s at 8). State volume here is bounded
-        // by watermark+interval, so fewer/bigger stores is strictly
-        // better; a production deployment sizes this to state volume,
-        // not to the batch session's CPU count.
-        Materialize.scoped(s, _ => 4) {
+        // join state is bounded by watermark+interval
+        Materialize.sized(s, Tables.rowCount(s, dir, "events")) {
           ev.filter(col("ts") < cut1).coalesce(4)
             .write.mode("append").parquet(s"$tmp/drop")
           run()
@@ -263,9 +256,7 @@ object EventQueries extends QuerySet {
           .option("checkpointLocation", s"$tmp/ck")
           .trigger(Trigger.AvailableNow()).start()
           .awaitTermination()
-        // state stores sized to state volume, not session CPUs (the
-        // st07 measurement: ~23 s → ~8 s at small store counts)
-        Materialize.scoped(s, _ => 4) {
+        Materialize.sized(s, Tables.rowCount(s, dir, "events")) {
           ev.filter(col("ts") < cut).coalesce(4)
             .write.mode("append").parquet(s"$tmp/drop")
           run()
@@ -808,14 +799,8 @@ object EventQueries extends QuerySet {
           q.recentProgress.toSeq.flatMap(_.stateOperators)
             .map(_.numRowsDroppedByWatermark).sum
         }
-        // state-store sizing, the st07 lesson: the streaming agg's
-        // state partition count is fixed at first start by
-        // spark.sql.shuffle.partitions and reused from the checkpoint;
-        // at 32 each of the 2 runs commits 32 stores per batch and the
-        // store churn dominates — state here is a few thousand
-        // (window, type) groups, so 8 bigger stores are strictly
-        // better. Production sizes this to state volume, not CPUs.
-        val dropped = Materialize.scoped(s, _ => 8) {
+        // state here is a few thousand (window, type) groups
+        val dropped = Materialize.sized(s, Tables.rowCount(s, dir, "events")) {
           run()
           land(us <= cut - 3 * hr, "w2stale")
           land(us > cut, "w2fresh")

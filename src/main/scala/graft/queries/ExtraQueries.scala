@@ -604,11 +604,8 @@ object ExtraQueries extends QuerySet {
             // file per touched partition instead of one per shuffle task
             .coalesce(1)
         // incremental refreshes build per-area SLICES (≤ a quarter of
-        // the horizon table each) — 32-task shuffles on that volume
-        // are scheduler overhead, not parallelism; 8 matches the slice
-        // size (the st07/st08 sizing lesson applied to the batch ops
-        // inside foreachBatch). Values are partitioning-invariant.
-        Materialize.scoped(s, _ => 8) {
+        // the horizon table each)
+        Materialize.sized(s, Tables.rowCount(s, dir, "lineitem")) {
           signal.filter(col("areasymbol").isin("SSA0", "SSA1", "SSA2"))
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.refreshValu(s, s"$tmp/drop", signal.schema, s"$tmp/lake", buildFor)

@@ -4417,9 +4417,7 @@ object TrainQueries extends QuerySet {
         val newV = e.filter(col("vec_id") >= 400)
           .select(col("vec_id"), col("embedding"))
         // per-batch encode joins are batch-sized (hundreds of vectors)
-        // — 8 shuffle tasks match the volume (the st07/st08 sizing
-        // lesson); values are partitioning-invariant
-        Materialize.scoped(s, _ => 8) {
+        Materialize.sized(s, Tables.rowCount(s, dir, "embeddings")) {
           newV.filter(pmod(col("vec_id"), lit(2)) === 0)
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.encodeAppend(s, s"$tmp/drop", newV.schema, s"$tmp/index", encode)
@@ -5242,9 +5240,7 @@ object TrainQueries extends QuerySet {
         val oldSh = s.read.parquet(s"$tmp/digests")
           .select(col("did").as("old_id"), col("sh"))
         val admit = st11Admit(idx, oldSh)
-        // per-batch volumes are wave-sized — 8 shuffle tasks match (the
-        // st06/st07 sizing lesson); pair values partitioning-invariant
-        Materialize.scoped(s, _ => 8) {
+        Materialize.sized(s, Tables.rowCount(s, dir, "documents")) {
           arriving.filter(pmod(col("doc_id"), lit(2)) === 0)
             .write.mode("append").parquet(s"$tmp/drop")
           Ingest.encodeAppend(s, s"$tmp/drop", arriving.schema,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -76,17 +76,6 @@ object Ingest {
     q.awaitTermination()
   }
 
-  /** Incremental survey ingestion (SURVEY §1.5): each micro-batch of
-    * landed rows is upserted into the lake by survey-area partition
-    * (foreachBatch + dynamic partition overwrite) — the streaming form
-    * of the MergeDatabases append, idempotent per re-landed survey.
-    *
-    * CONTRACT: a survey's files must land atomically as a complete
-    * snapshot (true of WSS drops — one zip = one whole survey): the
-    * partition overwrite replaces a survey with whatever the batch
-    * holds. Trigger.Once processes everything available as ONE batch so
-    * a multi-file survey cannot be split across micro-batches within a
-    * run. */
   /** Incremental Valu1 maintenance (SURVEY §1.5, gSSURGO_ValuTable.py
     * run per-SSA): a drop lands change-signal rows tagged by
     * areasymbol; each micro-batch re-derives the Valu1 rows of exactly
@@ -102,20 +91,14 @@ object Ingest {
     * the same list). At 100 TB the per-batch work is proportional to
     * the changed areas, never the whole lake. */
   def refreshValu(spark: SparkSession, dropDir: String, schema: StructType,
-      lakeRoot: String, buildFor: Seq[String] => DataFrame): Unit = {
-    val q = spark.readStream.schema(schema).parquet(dropDir)
-      .writeStream
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/valu1")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val areas = batch.select("areasymbol").distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-        if (areas.nonEmpty)
-          graft.io.Lake.appendSurvey(buildFor(areas), lakeRoot, "valu1")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      lakeRoot: String, buildFor: Seq[String] => DataFrame): Unit =
+    drain(spark, dropDir, schema, s"$lakeRoot/_checkpoints/valu1",
+        Trigger.AvailableNow()) { (batch, _) =>
+      val areas = batch.select("areasymbol").distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+      if (areas.nonEmpty)
+        graft.io.Lake.appendSurvey(buildFor(areas), lakeRoot, "valu1")
+    }
 
   /** Streaming index maintenance (the n11 contract as a stream): each
     * micro-batch of arriving rows runs through `encode` — a STATELESS
@@ -129,17 +112,11 @@ object Ingest {
     * rows under a NEW path appends again; upstream drops are expected
     * to be immutable landed files, the st04 convention.) */
   def encodeAppend(spark: SparkSession, dropDir: String, schema: StructType,
-      indexDir: String, encode: DataFrame => DataFrame): Unit = {
-    val q = spark.readStream.schema(schema).parquet(dropDir)
-      .writeStream
-      .option("checkpointLocation", s"$indexDir/_checkpoints/encode")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        encode(batch.toDF()).write.mode("append").parquet(s"$indexDir/rows")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      indexDir: String, encode: DataFrame => DataFrame): Unit =
+    drain(spark, dropDir, schema, s"$indexDir/_checkpoints/encode",
+        Trigger.AvailableNow()) { (batch, _) =>
+      encode(batch).write.mode("append").parquet(s"$indexDir/rows")
+    }
 
   /** Streaming CDC APPLY — the Delta-style streaming MERGE INTO: each
     * micro-batch of change rows (the Cdc.changes shape: key, op, and
@@ -171,23 +148,17 @@ object Ingest {
     * identity) is the contract here. */
   def streamCdcApply(spark: SparkSession, dropDir: String,
       schema: StructType, lakeDir: String, key: String,
-      tracked: Seq[String]): Unit = {
-    val q = spark.readStream.schema(schema).parquet(dropDir)
-      .writeStream
-      .option("checkpointLocation", s"$lakeDir/_checkpoints/cdc")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val version = s"snap_v$batchId"
-        if (pointerVersion(spark, lakeDir) != version) {
-          val cur = currentSnapshot(spark, lakeDir)
-          val next = graft.io.Cdc.applyChanges(cur, batch.toDF(), key, tracked)
-          next.write.mode("overwrite").parquet(s"$lakeDir/$version")
-          writePointer(spark, lakeDir, version)
-        } // else: replay of a batch whose merge already committed — skip
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      tracked: Seq[String]): Unit =
+    drain(spark, dropDir, schema, s"$lakeDir/_checkpoints/cdc",
+        Trigger.AvailableNow()) { (batch, batchId) =>
+      val version = s"snap_v$batchId"
+      if (pointerVersion(spark, lakeDir) != version) {
+        val cur = currentSnapshot(spark, lakeDir)
+        val next = graft.io.Cdc.applyChanges(cur, batch, key, tracked)
+        next.write.mode("overwrite").parquet(s"$lakeDir/$version")
+        writePointer(spark, lakeDir, version)
+      } // else: replay of a batch whose merge already committed — skip
+    }
 
   /** Seed the versioned-snapshot lake [[streamCdcApply]] maintains. */
   def initSnapshot(df: DataFrame, lakeDir: String): Unit = {
@@ -216,18 +187,34 @@ object Ingest {
     try out.write(version.getBytes("UTF-8")) finally out.close()
   }
 
+  /** Incremental survey ingestion (SURVEY §1.5): each micro-batch of
+    * landed rows is upserted into the lake by survey-area partition
+    * (foreachBatch + dynamic partition overwrite) — the streaming form
+    * of the MergeDatabases append, idempotent per re-landed survey.
+    *
+    * CONTRACT: a survey's files must land atomically as a complete
+    * snapshot (true of WSS drops — one zip = one whole survey): the
+    * partition overwrite replaces a survey with whatever the batch
+    * holds. Trigger.Once processes everything available as ONE batch so
+    * a multi-file survey cannot be split across micro-batches within a
+    * run. */
   def streamIntoLake(spark: SparkSession, dropDir: String, schema: StructType,
-      lakeRoot: String, table: String): Unit = {
-    val q = spark.readStream.schema(schema).parquet(dropDir)
+      lakeRoot: String, table: String): Unit =
+    drain(spark, dropDir, schema, s"$lakeRoot/_checkpoints/$table", Trigger.Once()) {
+      (batch, _) => graft.io.Lake.appendSurvey(batch, lakeRoot, table)
+    }
+
+  /** Run a file-source stream over `dropDir` until `trigger` has
+    * processed what is available, handing each micro-batch and its id
+    * to `batch`. The checkpoint carries the processed-file log, so a
+    * landed drop is picked up exactly once across restarts. */
+  private def drain(spark: SparkSession, dropDir: String, schema: StructType,
+      checkpoint: String, trigger: Trigger)(batch: (DataFrame, Long) => Unit): Unit =
+    spark.readStream.schema(schema).parquet(dropDir)
       .writeStream
-      // checkpoint carries the processed-file log → re-landed drops are
-      // picked up exactly once across restarts
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/$table")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        graft.io.Lake.appendSurvey(batch.toDF(), lakeRoot, table)
-      }
-      .trigger(Trigger.Once())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (b: Dataset[Row], id: Long) => batch(b.toDF(), id) }
+      .trigger(trigger)
       .start()
-    q.awaitTermination()
-  }
+      .awaitTermination()
 }

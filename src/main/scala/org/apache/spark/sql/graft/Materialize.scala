@@ -7,9 +7,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The one door for materialization: every intermediate the library
-  * lands ([[checkpoint]]) and every AQE / shuffle-partition scope it
-  * plans under ([[scoped]]). Package escape, the PointInPolygon
-  * convention.
+  * lands ([[checkpoint]]) and every construction scope it plans under
+  * ([[sized]]). Package escape, the PointInPolygon convention.
   *
   * Checkpoint contract — what a caller downstream of [[checkpoint]] sees:
   *  - lineage truncated; the plan leaf is a `LogicalRDD` with the source
@@ -33,10 +32,10 @@ import org.apache.spark.storage.StorageLevel
   *    checkpoints into more tasks (n20 at sf0.01: 311 tasks against
   *    227).
   *
-  * Scope contract: [[scoped]] sets the session's shuffle-partition
-  * count (and optionally AQE) for `body` and restores both after, also
+  * Scope contract: [[sized]] sets the session's AQE flag and
+  * shuffle-partition count for `body` and restores both after, also
   * when `body` throws. The confs are the SESSION's, so two threads
-  * running scopes in one session see each other's settings: [[scoped]]
+  * running scopes in one session see each other's settings: [[sized]]
   * is not thread-safe within one session. */
 object Materialize {
 
@@ -91,44 +90,51 @@ object Materialize {
     }
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to
-    * `partitions(n)`, n the session's shuffle-partition count read once
-    * on entry, and — when `aqe` is given — AQE set to it; both confs are
-    * restored on exit. */
-  def scoped[T](spark: SparkSession, partitions: Int => Int = identity,
-      aqe: Option[Boolean] = None)(body: => T): T = {
+  /** Construction scope: `body` plans with AQE off and
+    * `min(n, max(4, rows / 250000 + 1))` shuffle partitions, n the
+    * session's own count (the ceiling, which wins over the floor: a
+    * `local[2]` session plans 2); both confs are restored on exit.
+    * `rows` is the row count the scope's shuffles carry (a table's
+    * footer count, a graph's edge count), evaluated once AQE is off, so
+    * a count it runs is one static job.
+    *
+    * Construction and stream-state work is sized to the rows it
+    * carries, not to the session's cores. A near-dup graph or a
+    * stream's per-batch slice is tiny next to the corpus, and at the
+    * session's fact-table count the per-task and per-store overhead is
+    * the work: a streaming join's state partition count is fixed at
+    * first start by this conf and every batch commits one store per
+    * partition (STATUS.md "Streaming state-store sizing": st07
+    * 7.7 → 5.9 s, st08 4.4 → 3.1 s), and a graph loop's micro-jobs at
+    * 32+ tasks each are scheduling overhead (STATUS.md "pairPageRank":
+    * d21 8.9 → 5.5–6.2 s).
+    *
+    * AQE is off because under AQE a lazy [[checkpoint]] is not lazy:
+    * planning its RDD forces `AdaptiveSparkPlanExec.getFinalPhysicalPlan`,
+    * which runs every exchange of the subtree as a synchronous shuffle
+    * job, so a chain of ~20 lazy checkpoints (n20/n22/n23) executes as
+    * ~20+ SEQUENTIAL job rounds at construction time (r18 StageProbe:
+    * n20 at 122 stages, 6.5 task-seconds, 7.7 s wall), and a loop of
+    * graph-sized jobs pays AQE's re-planning latency per job (measured
+    * 2.3× on the whole of `Dedup.dupClusters`). With AQE off every
+    * checkpoint plans to a static RDD graph with zero jobs, and the
+    * final action runs the whole DAG in one job whose independent
+    * subtrees overlap on the scheduler; the top-level plan, built after
+    * the scope restores AQE, still adapts. Results are
+    * partitioning-invariant by the operators' determinism contract
+    * (`PartitionInvarianceSpec`). */
+  def sized[T](spark: SparkSession, rows: => Long)(body: => T): T = {
     val conf = spark.sessionState.conf
     val saved = Seq(AqeKey, PartsKey).map(k =>
       k -> Option.when(conf.contains(k))(conf.getConfString(k)))
     try {
-      conf.setConfString(PartsKey, partitions(conf.numShufflePartitions).toString)
-      aqe.foreach(on => conf.setConfString(AqeKey, on.toString))
+      conf.setConfString(AqeKey, "false")
+      val n = conf.numShufflePartitions.toLong
+      conf.setConfString(PartsKey, math.min(n, math.max(4L, rows / 250000L + 1L)).toString)
       body
     } finally saved.foreach {
       case (k, Some(v)) => conf.setConfString(k, v)
       case (k, None) => conf.unsetConf(k)
     }
   }
-
-  /** Static construction for the iterative/chained operators (ANN graph
-    * walks, insert repair, tower maintenance): `body` builds the query
-    * with AQE off and shuffle partitions sized to `rows` (≈ the corpus
-    * rows the chain's shuffles carry; ~250k rows per partition, floor 4,
-    * the session's count the ceiling, which wins over the floor: a
-    * `local[2]` session plans 2).
-    *
-    * Under AQE a lazy [[checkpoint]] is not lazy: planning its RDD
-    * forces `AdaptiveSparkPlanExec.getFinalPhysicalPlan`, which runs
-    * every exchange of the subtree as a synchronous shuffle job, so a
-    * chain of ~20 lazy checkpoints (n20/n22/n23) executes as ~20+
-    * SEQUENTIAL job rounds at construction time (r18 StageProbe: n20 at
-    * 122 stages, 6.5 task-seconds, 7.7 s wall). With AQE off every
-    * checkpoint plans to a static RDD graph with zero jobs, and the
-    * final action runs the whole DAG in one job whose independent
-    * subtrees overlap on the scheduler; the top-level plan, built after
-    * the scope restores AQE, still adapts. Results are
-    * partitioning-invariant by the operators' determinism contract. */
-  def sized[T](spark: SparkSession, rows: Long)(body: => T): T =
-    scoped(spark, n => math.min(n.toLong, math.max(4L, rows / 250000L + 1L)).toInt,
-      aqe = Some(false))(body)
 }

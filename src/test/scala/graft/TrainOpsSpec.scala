@@ -481,11 +481,13 @@ class TrainOpsSpec extends AnyFunSuite {
       rowsOf(d.select(col("doc_id"), pmod(h, lit(8L)).as("shard"),
         (row_number().over(w) - 1).cast("long").as("shard_pos")).orderBy("doc_id"))
     }
-    for (p <- Seq(3, 7)) {
-      val got = rowsOf(Sampling.shardOrder(d, "doc_id", nShards = 8,
-        partitions = p).orderBy("doc_id"))
+    val parts = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(parts)
+    try for (p <- Seq(3, 7)) {
+      spark.conf.set(parts, p.toString)
+      val got = rowsOf(Sampling.shardOrder(d, "doc_id", nShards = 8).orderBy("doc_id"))
       assert(got === ref)
-    }
+    } finally spark.conf.set(parts, before)
   }
 
   test("legendColorRamp: equal-interval classes, truncated lerp endpoints, empty class kept") {
@@ -873,8 +875,11 @@ class TrainOpsSpec extends AnyFunSuite {
     val s = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
     val rows = Seq(1L -> 5L, 2L -> -8L, 3L -> 3L, 4L -> -1L, 5L -> 10L, 6L -> -20L, 7L -> 4L)
     val d = df(s, rows.map { case (k, v) => Row(k, v) }).repartition(4)
-    val got = rowsOf(graft.core.PrefixSum.exclusive(d, "k", "v", partitions = 3)
-      .orderBy("k").select("k", "prefix"))
+    val parts = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(parts)
+    spark.conf.set(parts, "3")
+    val got = try rowsOf(graft.core.PrefixSum.exclusive(d, "k", "v")
+      .orderBy("k").select("k", "prefix")) finally spark.conf.set(parts, before)
     val expect = rows.map(_._2).scanLeft(0L)(_ + _).init
     assert(got.map(_(1)) === expect)
   }

@@ -9,7 +9,7 @@ import _root_.graft.dedup.Dedup
 import _root_.graft.text.TextAnalysis
 
 /** The [[Materialize]] contracts: what a checkpoint leaf reports to the
-  * optimizer, that a conf scope always restores the session, and that
+  * optimizer, that the construction scope always restores the session, and that
   * the operators which used to leave a Dataset cache behind no longer do.
   * In Spark's package, like the module, to read the cache manager. */
 class MaterializeSpec extends AnyFunSuite {
@@ -43,25 +43,28 @@ class MaterializeSpec extends AnyFunSuite {
     assert(cp.count() === 49L)
   }
 
-  test("scoped sets both confs for the body and restores them when it throws") {
-    val before = (spark.conf.get(aqeKey), spark.conf.get(partsKey))
-    var inside = ("", "")
-    val e = intercept[IllegalStateException] {
-      Materialize.scoped(spark, n => n + 3, aqe = Some(false)) {
-        inside = (spark.conf.get(aqeKey), spark.conf.get(partsKey))
-        throw new IllegalStateException("body failed")
-      }
-    }
-    assert(e.getMessage === "body failed")
-    assert(inside === (("false", (before._2.toInt + 3).toString)))
-    assert((spark.conf.get(aqeKey), spark.conf.get(partsKey)) === before)
-    // a conf the session never set explicitly is unset again, not
-    // pinned to the value the scope read
-    spark.conf.unset(partsKey)
+  test("sized sets both confs for the body and restores them when it throws") {
+    val saved = spark.conf.get(partsKey)
+    spark.conf.set(partsKey, "32")
     try {
-      Materialize.scoped(spark, _ => 7)(())
+      val before = (spark.conf.get(aqeKey), spark.conf.get(partsKey))
+      assert(before._1 === "true")
+      var inside = ("", "")
+      val e = intercept[IllegalStateException] {
+        Materialize.sized(spark, 1000L) {
+          inside = (spark.conf.get(aqeKey), spark.conf.get(partsKey))
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage === "body failed")
+      assert(inside === (("false", "4")))
+      assert((spark.conf.get(aqeKey), spark.conf.get(partsKey)) === before)
+      // a conf the session never set explicitly is unset again, not
+      // pinned to the value the scope read
+      spark.conf.unset(partsKey)
+      Materialize.sized(spark, 1000L)(())
       assert(!spark.sessionState.conf.contains(partsKey))
-    } finally spark.conf.set(partsKey, before._2)
+    } finally spark.conf.set(partsKey, saved)
   }
 
   test("sized: the session's partition count caps the floor of 4, and row count sizes up to it") {
