@@ -1,7 +1,6 @@
 package graft.ann
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Materialize
 
@@ -16,22 +15,38 @@ import graft.core.Ranked
   * - IVF (ivfAssign/ivfSearch): the scale path — corpus is bucketed by
   *   nearest centroid once (a broadcast of the small centroid table);
   *   each query probes only its bucket, turning the cross join into an
-  *   equi-join on centroid_id. */
+  *   equi-join on centroid_id.
+  *
+  * Every ranking in this file — neighbor lists, probe sets, beam
+  * frontiers, seeds — is [[graft.core.Ranked.topK]] over the score
+  * [[Vectors.cos6]] with an id tiebreak; every single pick (a bucket
+  * assignment, a super group) is [[graft.core.Ranked.argmax]] over the
+  * same score with the same tiebreak. The round-6 score makes each
+  * comparison an engine-portable decimal one and the id makes each
+  * order total, so bucket membership, candidate sets, walks and
+  * results are identical in any engine and at any partitioning, and
+  * every index and search here is oracle-replayable. The flat probe
+  * rule is [[probes]]: a vector's top-`nprobe` centroids, whose pr=1
+  * row is [[ivfAssign]]'s pick; [[probesTwoLevel]] is its two-level
+  * twin. */
 object Ann {
 
-  /** Exact top-k neighbors by cosine for each query vector.
-    * Input: queries(qid, qvec), corpus(vid, vec). Ranking key is
-    * round(cosine, 6) with vid as the deterministic tiebreak. */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val scored = queries.crossJoin(corpus)
-      .filter(col("qid") =!= col("vid"))
+  /** Top-k neighbors per `by` in `scored` (…, neighbor_id, cosine):
+    * cosine desc, neighbor id asc. */
+  private[ann] def nearest(scored: DataFrame, by: String, k: Int): DataFrame =
+    Ranked.topK(scored, Seq(col(by)), Seq(col("cosine").desc, col("neighbor_id").asc), k)
+
+  /** Top-k neighbors per query among candidate pairs (qid, qvec, vid,
+    * vec), self-matches dropped. */
+  private def queryTopK(pairs: DataFrame, k: Int): DataFrame =
+    nearest(pairs.filter(col("qid") =!= col("vid"))
       .select(col("qid"), col("vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+        Vectors.cos6(col("qvec"), col("vec")).as("cosine")), "qid", k)
+
+  /** Exact top-k neighbors by cosine for each query vector.
+    * Input: queries(qid, qvec), corpus(vid, vec). */
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    queryTopK(queries.crossJoin(corpus), k)
 
   /** Assign every corpus vector to its nearest centroid (max cosine;
     * centroid table is broadcast). centroids: (cid, cvec).
@@ -47,41 +62,42 @@ object Ann {
     Ranked.argmax(
       corpus.crossJoin(broadcast(centroids))
         .select(col("vid"), col("vec"), col("cid"),
-          graft.core.Exprs.roundHalfUp(Vectors.cosine(col("vec"), col("cvec")), 6).as("cos")),
+          Vectors.cos6(col("vec"), col("cvec")).as("cos")),
       Seq("vid"),
       Seq(col("cos"), -col("cid")),
       Seq("cid" -> col("cid"), "vec" -> col("vec")))
 
+  /** The flat probe rule: each vector's `nprobe` nearest centroids
+    * (cos6 desc, cid asc — the broadcast centroid table scored against
+    * every vector), shaped (vid, vec, cid, pr). Its pr=1 row is
+    * [[ivfAssign]]'s pick: same score, same tiebreak. */
+  def probes(vecs: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
+    topProbes(vecs.select(col("vid"), col("vec")).crossJoin(broadcast(centroids))
+      .select(col("vid"), col("vec"), col("cid"),
+        Vectors.cos6(col("vec"), col("cvec")).as("pcos")), "pcos", nprobe)
+
+  private def topProbes(scored: DataFrame, score: String, nprobe: Int): DataFrame =
+    Ranked.topK(scored, Seq(col("vid")), Seq(col(score).desc, col("cid").asc), nprobe, "pr")
+      .select(col("vid"), col("vec"), col("cid"), col("pr"))
+
+  /** [[probes]] of a query batch (qid, qvec), shaped (qid, qvec, cid). */
+  private[graft] def queryProbes(queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
+    probes(queries.select(col("qid").as("vid"), col("qvec").as("vec")), centroids, nprobe)
+      .select(col("vid").as("qid"), col("vec").as("qvec"), col("cid"))
+
   /** IVF search with multi-probe: each query probes its `nprobe`
     * nearest centroid buckets instead of one — the standard recall
     * knob of a production IVF index (a query near a Voronoi boundary
-    * finds neighbors that fell just across it). Probe selection ranks
-    * on the same round-6-quantized cosine as ivfAssign (cid tiebreak),
-    * so bucket choice — and therefore the whole candidate set — stays
-    * engine-portable. Buckets are disjoint (each corpus vector lives in
-    * exactly one), so no candidate dedup is needed; the per-query fan
-    * is bounded by nprobe buckets, never the corpus. */
+    * finds neighbors that fell just across it). Buckets are disjoint
+    * (each corpus vector lives in exactly one), so no candidate dedup
+    * is needed; the per-query fan is bounded by nprobe buckets, never
+    * the corpus. */
   def ivfSearchMultiProbe(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val corpusAssigned = ivfAssign(corpus, centroids)
-    val pw = Window.partitionBy(col("qid"))
-      .orderBy(col("pcos").desc, col("cid").asc)
-    val probes = queries.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qvec"), col("cid"),
-        graft.core.Exprs.roundHalfUp(Vectors.cosine(col("qvec"), col("cvec")), 6).as("pcos"))
-      .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qvec"), col("cid"))
-    // probes is query-batch-bounded (|queries|·nprobe) — broadcast it
-    // so the corpus-shaped assignment streams unshuffled (guide §3.1)
-    val scored = corpusAssigned.join(broadcast(probes), "cid")
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+      centroids: DataFrame, k: Int, nprobe: Int): DataFrame =
+    // the probes are query-batch-bounded (|queries|·nprobe) — broadcast
+    // them so the corpus-shaped assignment streams unshuffled (guide §3.1)
+    queryTopK(ivfAssign(corpus, centroids)
+      .join(broadcast(queryProbes(queries, centroids, nprobe)), "cid"), k)
 
   /** Lloyd's k-means — the IVF TRAINING step (at corpus scale the
     * bucket centroids must be learned, not picked ad hoc). Each round
@@ -132,17 +148,6 @@ object Ann {
           coalesce(col("hits"), lit(0L)) / lit(k.toDouble), 4).as("recall"))
   }
 
-  /** k-nearest-neighbor GRAPH construction — every corpus vector's
-    * top-k neighbors among its IVF bucket-mates (the input artifact of
-    * graph-based dedup/clustering passes: SemDeDup-style pruning,
-    * label propagation, kNN classifiers). Distinct from search: the
-    * query set IS the corpus, so the scale problem is the all-pairs
-    * blow-up, and the bucket equi-join bounds it to Σ|bucket|² — the
-    * SemDeDup shape; at corpus scale the centroid count grows with the
-    * corpus to hold per-bucket cost constant. Ranking is the
-    * round-6-quantized cosine with neighbor-id tiebreak, so the whole
-    * graph is engine-portable. Vectors alone in their bucket emit no
-    * rows (no neighbors at this probe radius — the standard contract). */
   /** Centroid-count default ∝ corpus — the Σ|bucket|² shapes
     * (knnGraph, SemDeDup) are n²/k at FIXED k, so a constant centroid
     * count silently goes quadratic as the corpus grows (measured:
@@ -179,8 +184,7 @@ object Ann {
     Ranked.argmax(
       centroids.crossJoin(broadcast(supers))
         .select(col("cid"), col("cvec"), col("gid"),
-          graft.core.Exprs.roundHalfUp(
-            Vectors.cosine(col("cvec"), col("gvec")), 6).as("gcos")),
+          Vectors.cos6(col("cvec"), col("gvec")).as("gcos")),
       Seq("cid"),
       Seq(col("gcos"), -col("gid")),
       Seq("gid" -> col("gid"), "cvec" -> col("cvec")))
@@ -199,19 +203,15 @@ object Ann {
       gstep: Long, gprobe: Int): DataFrame = {
     val supers = grouped.filter(col("cid") % gstep === 0)
       .select(col("cid").as("gid"), col("cvec").as("gvec"))
-    val gw = Window.partitionBy(col("vid"))
-      .orderBy(col("gcos").desc, col("gid").asc)
-    val sg = vecs.select(col("vid"), col("vec"))
-      .crossJoin(broadcast(supers))
-      .select(col("vid"), col("vec"), col("gid"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("vec"), col("gvec")), 6).as("gcos"))
-      .withColumn("gr", row_number().over(gw)).filter(col("gr") <= gprobe)
+    val sg = Ranked.topK(vecs.select(col("vid"), col("vec"))
+        .crossJoin(broadcast(supers))
+        .select(col("vid"), col("vec"), col("gid"),
+          Vectors.cos6(col("vec"), col("gvec")).as("gcos")),
+        Seq(col("vid")), Seq(col("gcos").desc, col("gid").asc), gprobe, "gr")
       .select(col("vid"), col("vec"), col("gid"))
     sg.join(grouped.select(col("cid"), col("cvec"), col("gid")), "gid")
       .select(col("vid"), col("vec"), col("cid"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("vec"), col("cvec")), 6).as("cos6"))
+        Vectors.cos6(col("vec"), col("cvec")).as("cos6"))
   }
 
   /** Two-level IVF assignment: argmax over [[twoLevelCandidates]]
@@ -228,20 +228,16 @@ object Ann {
       Seq("cid" -> col("cid"), "vec" -> col("vec")))
 
   /** Two-level probe set: top-`nprobe` candidate buckets per vector
-    * (cos desc, cid asc) — the [[twoLevelCandidates]] analog of the
-    * flat multiprobe rule, shaped (vid, vec, cid, pr) for
+    * (cos desc, cid asc) — the [[twoLevelCandidates]] analog of
+    * [[probes]], shaped (vid, vec, cid, pr) for
     * [[graphInsertProbed]]/[[knnGraphProbed]]. */
   def probesTwoLevel(vecs: DataFrame, grouped: DataFrame, gstep: Long,
-      nprobe: Int, gprobe: Int): DataFrame = {
-    val pw = Window.partitionBy(col("vid"))
-      .orderBy(col("cos6").desc, col("cid").asc)
-    twoLevelCandidates(vecs, grouped, gstep, gprobe)
-      .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nprobe)
-      .select(col("vid"), col("vec"), col("cid"), col("pr"))
-  }
+      nprobe: Int, gprobe: Int): DataFrame =
+    topProbes(twoLevelCandidates(vecs, grouped, gstep, gprobe), "cos6", nprobe)
 
   /** The distinct probed cids of an already-computed probe frame —
-    * the bounded driver collect (≤ |batch|·nprobe ints). Callers
+    * the bounded driver collect (≤ |batch|·nprobe ints: the lake's
+    * partition column reads back as IntegerType, see [[lakePrune]]). Callers
     * compute the probe frame ONCE (checkpointed), derive the prune
     * set from it here, and hand the SAME frame to
     * [[graphInsertProbed]] — re-deriving the probe chain for each
@@ -250,17 +246,20 @@ object Ann {
     probes.select(col("cid").cast("int")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
 
+  /** k-nearest-neighbor GRAPH construction — every corpus vector's
+    * top-k neighbors among its IVF bucket-mates (the input artifact of
+    * graph-based dedup/clustering passes: SemDeDup-style pruning,
+    * label propagation, kNN classifiers). Distinct from search: the
+    * query set IS the corpus, so the scale problem is the all-pairs
+    * blow-up, and the bucket equi-join bounds it to Σ|bucket|² — the
+    * SemDeDup shape; at corpus scale the centroid count grows with the
+    * corpus to hold per-bucket cost constant. Vectors alone in their
+    * bucket emit no rows (no neighbors at this probe radius — the
+    * standard contract). It is [[knnGraphProbed]] with the assignment
+    * as its own probe set. */
   def knnGraph(corpus: DataFrame, centroids: DataFrame, k: Int): DataFrame = {
     val ca = ivfAssign(corpus, centroids)
-    val scored = ca.as("a").join(ca.as("b"),
-        col("a.cid") === col("b.cid") && col("a.vid") =!= col("b.vid"))
-      .select(col("a.vid").as("vid"), col("b.vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("a.vec"), col("b.vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("vid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    knnGraphProbed(ca, ca, k)
   }
 
   /** kNN graph with CROSS-BUCKET edges: every corpus vector's top-k
@@ -272,21 +271,11 @@ object Ann {
     * lets the walk recover neighbors a single-bucket IVF probe
     * misses. Cost is Σ nprobe·|bucket|² — the knnGraph bound times
     * nprobe, still held constant per vector by
-    * [[adaptiveCentroidCount]]. Ranking is the round-6-quantized
-    * cosine with id tiebreak (engine-portable, like every ranking in
-    * this file). Returns (vid, neighbor_id, cosine, rank ≤ k). */
+    * [[adaptiveCentroidCount]]. Returns (vid, neighbor_id, cosine,
+    * rank ≤ k). */
   def knnGraphMultiProbe(corpus: DataFrame, centroids: DataFrame, k: Int,
-      nprobe: Int): DataFrame = {
-    val ca = ivfAssign(corpus, centroids)
-    val pw = Window.partitionBy(col("vid"))
-      .orderBy(col("pcos").desc, col("cid").asc)
-    val probes = corpus.crossJoin(broadcast(centroids))
-      .select(col("vid"), col("vec"), col("cid"),
-        graft.core.Exprs.roundHalfUp(Vectors.cosine(col("vec"), col("cvec")), 6).as("pcos"))
-      .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nprobe)
-      .select(col("vid"), col("vec"), col("cid"))
-    knnGraphProbed(ca, probes, k)
-  }
+      nprobe: Int): DataFrame =
+    knnGraphProbed(ivfAssign(corpus, centroids), probes(corpus, centroids, nprobe), k)
 
   /** [[knnGraphMultiProbe]] under the two-level quantizer — the lake
     * build path: assignment and probes both route through the √ncent
@@ -297,24 +286,18 @@ object Ann {
       probesTwoLevel(corpus.select(col("vid"), col("vec")), grouped, gstep,
         nprobe, gprobe), k)
 
-  /** [[knnGraphMultiProbe]] with assignment and probes PRECOMPUTED —
-    * the two-level build path ([[ivfAssignTwoLevel]] +
-    * [[probesTwoLevel]]) shares the bucket self-join and ranking. */
-  def knnGraphProbed(ca: DataFrame, probesRaw: DataFrame,
-      k: Int): DataFrame = {
-    val probes = probesRaw.select(col("vid"), col("vec"), col("cid"))
-    val scored = probes.as("a").join(ca.as("b"),
+  /** [[knnGraphMultiProbe]] with assignment `ca` (vid, cid, vec) and
+    * probe set (vid, vec, cid, …) PRECOMPUTED — the one bucket
+    * self-join and ranking behind [[knnGraph]] (probes = ca), the flat
+    * multiprobe graph and the two-level build path
+    * ([[ivfAssignTwoLevel]] + [[probesTwoLevel]]). */
+  def knnGraphProbed(ca: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    // a vector probing 2 buckets meets each bucket-mate once (buckets
+    // are disjoint), so no dedup is needed before ranking
+    nearest(probes.as("a").join(ca.as("b"),
         col("a.cid") === col("b.cid") && col("a.vid") =!= col("b.vid"))
       .select(col("a.vid").as("vid"), col("b.vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("a.vec"), col("b.vec")), 6).as("cosine"))
-      // a vector probing 2 buckets meets each bucket-mate once (buckets
-      // are disjoint), so no dedup is needed before ranking
-    val w = Window.partitionBy(col("vid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+        Vectors.cos6(col("a.vec"), col("b.vec")).as("cosine")), "vid", k)
 
   /** Incremental kNN-graph maintenance (n22) — batch vertex insert with
     * bounded edge repair, the operation that makes n18/n19/n20's graph
@@ -327,8 +310,8 @@ object Ann {
     * rank — degree ≤ k). Per batch:
     *
     *   1. FORWARD: each new vertex probes its `nprobe` nearest
-    *      centroid buckets (broadcast centroid table, the
-    *      knnGraphMultiProbe probe rule verbatim) and takes its top-k
+    *      centroid buckets ([[probes]], the knnGraphMultiProbe probe
+    *      rule) and takes its top-k
     *      neighbors among those buckets' members — existing AND
     *      same-batch vertices (the batch joins the index first, at
     *      its top-1 bucket, exactly where a rebuild would put it).
@@ -353,24 +336,12 @@ object Ann {
     * re-ranks old-edges ∪ reverse-candidates rather than its whole
     * bucket, and an existing vertex the batch never probed keeps its
     * list — the standard insertion-time repair; n22 gates incremental
-    * search recall ≥ rebuilt − ε end-to-end. Determinism: every
-    * ranking is the round-6-quantized cosine with id tiebreaks, so the
-    * whole maintenance chain is oracle-replayable.
+    * search recall ≥ rebuilt − ε end-to-end.
     *
     * Returns (assigned', edges') — the updated index artifacts. */
   def graphInsert(assigned: DataFrame, edges: DataFrame, batch: DataFrame,
-      centroids: DataFrame, k: Int, nprobe: Int): (DataFrame, DataFrame) = {
-    val pw = Window.partitionBy(col("vid"))
-      .orderBy(col("pcos").desc, col("cid").asc)
-    graphInsertProbed(assigned, edges,
-      batch.select(col("vid"), col("vec"))
-        .crossJoin(broadcast(centroids))
-        .select(col("vid"), col("vec"), col("cid"),
-          graft.core.Exprs.roundHalfUp(
-            Vectors.cosine(col("vec"), col("cvec")), 6).as("pcos"))
-        .withColumn("pr", row_number().over(pw))
-        .filter(col("pr") <= nprobe), k)
-  }
+      centroids: DataFrame, k: Int, nprobe: Int): (DataFrame, DataFrame) =
+    graphInsertProbed(assigned, edges, probes(batch, centroids, nprobe), k)
 
   /** [[graphInsert]] with the probe set PRECOMPUTED (vid, vec, cid,
     * pr) — the seam that lets the lake path route its batch through
@@ -398,17 +369,12 @@ object Ann {
     // forward edges: batch probes against the probed buckets' members —
     // the probe side is the broadcast build side, so the corpus-sized
     // assignment streams through unshuffled
-    val nw = Window.partitionBy(col("vid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val newEdges = Materialize.checkpoint(
-      broadcast(probes.select(col("vid"), col("vec"), col("cid"))).as("a")
-        .join(assignedAll.as("b"),
-          col("a.cid") === col("b.cid") && col("a.vid") =!= col("b.vid"))
-        .select(col("a.vid").as("vid"), col("b.vid").as("neighbor_id"),
-          graft.core.Exprs.roundHalfUp(
-            Vectors.cosine(col("a.vec"), col("b.vec")), 6).as("cosine"))
-        .withColumn("rank", row_number().over(nw).cast("long"))
-        .filter(col("rank") <= k)
+    val newEdges = Materialize.checkpoint(nearest(
+        broadcast(probes.select(col("vid"), col("vec"), col("cid"))).as("a")
+          .join(assignedAll.as("b"),
+            col("a.cid") === col("b.cid") && col("a.vid") =!= col("b.vid"))
+          .select(col("a.vid").as("vid"), col("b.vid").as("neighbor_id"),
+            Vectors.cos6(col("a.vec"), col("b.vec")).as("cosine")), "vid", k)
         .select(col("vid"), col("neighbor_id"), col("cosine")), eager = true)
     // reverse fixup: forward edges flip into candidates for their
     // targets; touched ≤ batch·k vertices re-rank old ∪ reverse ∪ (for
@@ -424,9 +390,7 @@ object Ann {
     val candUpd = Materialize.checkpoint(
       oldSlim.join(broadcast(touched), Seq("vid"), "left_semi")
         .unionByName(newEdges).unionByName(rc).distinct(), eager = true)
-    val ranked = candUpd
-      .withColumn("rank", row_number().over(nw).cast("long"))
-      .filter(col("rank") <= k)
+    val ranked = nearest(candUpd, "vid", k)
     // untouched vertices pass through verbatim (broadcast anti — the
     // index lake's partition-overwrite expressed in one plan)
     val untouched = edges
@@ -505,30 +469,6 @@ object Ann {
     }
   }
 
-  /** The distinct centroid buckets a batch's `nprobe` probe touches,
-    * COLLECTED to the driver — ≤ |batch|·nprobe ints by construction
-    * (a maintenance batch is operationally bounded; this is the
-    * partition-pruning key set for an index-lake read, not a corpus
-    * collect). Same probe rule as [[graphInsert]]: top-`nprobe`
-    * centroids by the round-6-quantized cosine with cid tiebreaks, so
-    * the pruned slice is exactly the set of buckets the repair can
-    * touch. Ints, not longs: the lake's cid partition column
-    * round-trips through directory names as IntegerType, and an
-    * un-cast long literal in the IN-list would wrap the partition
-    * column in a cast that can defeat metadata pruning. */
-  def probedCids(batch: DataFrame, centroids: DataFrame,
-      nprobe: Int): Seq[Int] = {
-    val pw = Window.partitionBy(col("vid"))
-      .orderBy(col("pcos").desc, col("cid").asc)
-    batch.select(col("vid"), col("vec")).crossJoin(broadcast(centroids))
-      .select(col("vid"), col("cid"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("vec"), col("cvec")), 6).as("pcos"))
-      .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nprobe)
-      .select(col("cid").cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-  }
-
   /** The lake's bounded hive-directory count: partitions are keyed by
     * `pmod(cid, K)`, never raw cid — raw-cid partitioning at
     * [[adaptiveCentroidCount]]'s n/256 means ~4M directories of ~4M
@@ -550,7 +490,8 @@ object Ann {
     * `buckets` directories listed) and the cid IN-list lands in
     * PushedFilters where parquet row-group min/max skips the
     * colliding cids that share a bucket. A maintenance batch then
-    * reads ONLY its [[probedCids]] slice ([[indexLakeProbedSlice]])
+    * reads ONLY its probed slice ([[cidsOf]] of its [[probes]],
+    * [[indexLakeProbedSlice]])
     * and [[graphInsert]] on that slice produces output IDENTICAL to the
     * full-index repair restricted to the probed buckets — forward
     * candidates live in probed buckets by the probe rule, every touched
@@ -617,52 +558,16 @@ object Ann {
       col("cid").isin(probed.map(_.toLong): _*))
   }
 
-  /** SEARCH-side partition pruning over an [[indexLakeWrite]] lake —
-    * the query-path twin of the n24/n25 maintenance pruning, and the
-    * higher-QPS one: IVF search only ever scores the probed buckets,
-    * so with the corpus assignment laid out cid-partitioned, a query
-    * batch reads ≤ |batch|·nprobe partitions and NOTHING else (a
-    * 10-query batch against a 10⁹-vector lake reads ~20 of ~4M bucket
-    * directories — the scan is batch-shaped, not corpus-shaped).
-    * Semantically identical to [[ivfSearchMultiProbe]] on the full
-    * corpus: the probe rule is the same quantized-cosine top-`nprobe`,
-    * and unprobed buckets never reach the scorer there either — the
-    * lake read just stops paying IO for them (n26 gates the equality
-    * against the full-replay oracle). */
-  def ivfSearchFromLake(spark: org.apache.spark.sql.SparkSession,
-      root: String, queries: DataFrame, centroids: DataFrame,
-      k: Int, nprobe: Int, buckets: Int = defaultLakeBuckets): DataFrame = {
-    val probed = probedCids(
-      queries.select(col("qid").as("vid"), col("qvec").as("vec")),
-      centroids, nprobe)
-    val corpusAssigned = lakePrune(
-        spark.read.parquet(s"$root/assigned"), probed, buckets)
-      .select(col("vid"), col("vec"), col("cid").cast("long").as("cid"))
-    val pw = Window.partitionBy(col("qid"))
-      .orderBy(col("pcos").desc, col("cid").asc)
-    val probes = queries.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qvec"), col("cid"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("qvec"), col("cvec")), 6).as("pcos"))
-      .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qvec"), col("cid"))
-    val scored = probes.join(corpusAssigned, "cid")
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** [[ivfSearchFromLake]] under the TWO-LEVEL quantizer — the 10⁹
-    * search path end to end: probe selection broadcasts only the
-    * √ncent supers ([[probesTwoLevel]]), the probed-cid collect stays
-    * batch-bounded, and the lake read prunes to ≤ |batch|·nprobe of ≤
-    * `buckets` partitions. Against an [[ivfAssignTwoLevel]]-built lake
-    * this is semantically the full-corpus two-level multiprobe search
+  /** SEARCH-side partition pruning over an [[indexLakeWrite]] lake
+    * under the TWO-LEVEL quantizer — the query-path twin of the
+    * n24/n25 maintenance pruning, and the 10⁹ search path end to end:
+    * probe selection broadcasts only the √ncent supers
+    * ([[probesTwoLevel]]), the probed-cid collect stays batch-bounded,
+    * and the lake read prunes to ≤ |batch|·nprobe of ≤ `buckets`
+    * partitions (a 10-query batch against a 10⁹-vector lake reads ~20
+    * of ~4k bucket directories — the scan is batch-shaped, not
+    * corpus-shaped). Against an [[ivfAssignTwoLevel]]-built lake this
+    * is semantically the full-corpus two-level multiprobe search
     * (n26's oracle replays exactly that). */
   def ivfSearchFromLakeTwoLevel(spark: org.apache.spark.sql.SparkSession,
       root: String, queries: DataFrame, grouped: DataFrame, gstep: Long,
@@ -676,17 +581,8 @@ object Ann {
     val corpusAssigned = lakePrune(
         spark.read.parquet(s"$root/assigned"), probed, buckets)
       .select(col("vid"), col("vec"), col("cid").cast("long").as("cid"))
-    val probes = probesQ
-      .select(col("vid").as("qid"), col("vec").as("qvec"), col("cid"))
-    val scored = probes.join(corpusAssigned, "cid")
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    queryTopK(probesQ.select(col("vid").as("qid"), col("vec").as("qvec"), col("cid"))
+      .join(corpusAssigned, "cid"), k)
   }
 
   /** Pruned read of an [[indexLakeWrite]] lake: only the probed cids'
@@ -782,10 +678,9 @@ object Ann {
     * `beam` best fresh vertices. Everything is bounded per query —
     * seed 1, visited ≤ 1 + hops·beam — and per-hop work is one
     * equi-join on vid + one per-query window, so 10⁶ queries walk in
-    * `hops` joins total, never a per-query loop. All ranking is the
-    * round-6-quantized cosine with id tiebreaks: the walk — frontier
-    * choice included — is engine-portable and fully oracle-replayable
-    * (the n02 technique applied to a graph traversal).
+    * `hops` joins total, never a per-query loop. The walk — frontier
+    * choice included — is fully oracle-replayable (the n02 technique
+    * applied to a graph traversal).
     *
     * `edges` should come from [[knnGraphMultiProbe]]: its
     * boundary-crossing edges are what lets the walk beat the
@@ -852,55 +747,32 @@ object Ann {
       val cand = e.join(broadcast(frontier), Seq("vid"))
         .select(col("qid"), col("neighbor_id").as("vid")).distinct()
       val fresh = cand.join(broadcast(visited), Seq("qid", "vid"), "left_anti")
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos6").desc, col("vid").asc)
-      frontier = Materialize.checkpoint(cv.join(broadcast(fresh), Seq("vid"))
-        .join(broadcast(qv), Seq("qid"))
-        .select(col("qid"), col("vid"),
-          graft.core.Exprs.roundHalfUp(
-            Vectors.cosine(col("qvec"), col("vec")), 6).as("cos6"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beam)
-        .select(col("qid"), col("vid")), eager = false)
+      frontier = bestOf(qv, cv, fresh, beam)
       visited = visited.unionByName(frontier)
     }
     visited
   }
 
-  /** Exact re-rank of a visited set: top-k by the round-6-quantized
-    * cosine, self-matches dropped (the [[graphSearch]] id-space
-    * contract applies). */
+  /** Score candidate (qid, vid) pairs and keep the `n` best vertices
+    * per query, lazily checkpointed — a [[beamWalk]] hop's frontier and
+    * the level-to-level handoff of [[hnswSearch]]'s descent. */
+  private def bestOf(qv: DataFrame, cv: DataFrame, cand: DataFrame,
+      n: Int): DataFrame =
+    // bounded-side broadcasts, corpus streams (see beamWalk)
+    Materialize.checkpoint(Ranked.topK(
+        cv.join(broadcast(cand), Seq("vid")).join(broadcast(qv), Seq("qid"))
+          .select(col("qid"), col("vid"),
+            Vectors.cos6(col("qvec"), col("vec")).as("cos6")),
+        Seq(col("qid")), Seq(col("cos6").desc, col("vid").asc), n, "rn")
+      .select(col("qid"), col("vid")), eager = false)
+
+  /** Exact re-rank of a visited set: top-k neighbors, self-matches
+    * dropped (the [[graphSearch]] id-space contract applies). */
   private def rerankVisited(qv: DataFrame, cv: DataFrame,
-      visited: DataFrame, k: Int): DataFrame = {
+      visited: DataFrame, k: Int): DataFrame =
     // visited/qv are query-batch-bounded, cv is the corpus — broadcast
     // the bounded sides so the corpus streams (see beamWalk)
-    val rescored = cv.join(broadcast(visited), Seq("vid"))
-      .join(broadcast(qv), Seq("qid"))
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    rescored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** Score a visited set and keep the `seedK` best vertices per query —
-    * the level-to-level handoff of [[hnswSearch]]'s descent. */
-  private def bestVisited(qv: DataFrame, cv: DataFrame,
-      visited: DataFrame, seedK: Int): DataFrame = {
-    val sw = Window.partitionBy(col("qid"))
-      .orderBy(col("cos6").desc, col("vid").asc)
-    // bounded-side broadcasts, corpus streams (see beamWalk)
-    Materialize.checkpoint(cv.join(broadcast(visited), Seq("vid")).join(broadcast(qv), Seq("qid"))
-      .select(col("qid"), col("vid"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("qvec"), col("vec")), 6).as("cos6"))
-      .withColumn("rn", row_number().over(sw))
-      .filter(col("rn") <= seedK)
-      .select(col("qid"), col("vid")), eager = false)
-  }
+    queryTopK(cv.join(broadcast(visited), Seq("vid")).join(broadcast(qv), Seq("qid")), k)
 
   /** The HNSW tower's level geometry: cumulative strides S₁..S_L such
     * that level ℓ = the corpus vids divisible by S_ℓ (level ℓ+1 ⊂
@@ -949,11 +821,10 @@ object Ann {
     * a foothold in each component rather than needing one static
     * entry per index bucket.
     *
-    * Determinism: level membership (vid stride), descent ranking, seed
-    * ranking, walk, and re-rank are all integer arithmetic or the
-    * round-6-quantized cosine with id tiebreaks — fully
-    * oracle-replayable (the n19 unrolled-CTE technique, one chain per
-    * level). The [[graphSearch]] id-space contract applies. Returns
+    * Determinism: level membership (vid stride) is integer
+    * arithmetic and every ranking follows the object's one rule, so
+    * the search is fully oracle-replayable (the n19 unrolled-CTE technique, one chain
+    * per level). The [[graphSearch]] id-space contract applies. Returns
     * (qid, neighbor_id, cosine, rank ≤ k). */
   def hnswSearch(queries: DataFrame, corpus: DataFrame,
       levelEdges: Seq[DataFrame], steps: Seq[Long], edges: DataFrame,
@@ -988,7 +859,7 @@ object Ann {
       val visited =
         if (steps(l) == steps(l - 1)) seeds
         else beamWalk(qv, cv, seeds, levelEdges(l - 1), upperBeam, upperHops)
-      seeds = bestVisited(qv, cv, visited, seedK)
+      seeds = bestOf(qv, cv, visited, seedK)
     }
     val visited = beamWalk(qv, cv, seeds, edges, beam, hops)
     rerankVisited(qv, cv, visited, k)
@@ -998,18 +869,10 @@ object Ann {
     * Returns (qid, neighbor_id, cosine, rank) with rank <= k. */
   def ivfSearch(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       k: Int): DataFrame = {
-    val corpusAssigned = ivfAssign(corpus, centroids)
     val queriesAssigned = ivfAssign(
       queries.select(col("qid").as("vid"), col("qvec").as("vec")), centroids)
       .select(col("vid").as("qid"), col("cid"), col("vec").as("qvec"))
     // query side is batch-bounded — broadcast it, stream the corpus
-    val scored = corpusAssigned.join(broadcast(queriesAssigned), "cid")
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid").as("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    queryTopK(ivfAssign(corpus, centroids).join(broadcast(queriesAssigned), "cid"), k)
   }
 }

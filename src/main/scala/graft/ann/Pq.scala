@@ -1,7 +1,6 @@
 package graft.ann
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Ranked
@@ -95,21 +94,9 @@ object Pq {
     * (bucket, sub, cid) — an equi-join bounded by bucket occupancy,
     * never the corpus. Returns (qid, neighbor_id, adc_d2, rank ≤ k). */
   def adcTopKBucketed(qSub: DataFrame, cb: DataFrame, codes: DataFrame,
-      qBuckets: DataFrame, k: Int): DataFrame = {
-    val qd = qSub.select(col("vid").as("qid"), col("sub"), col("dim"), col("v"))
-      .join(broadcast(cb), Seq("sub", "dim"))
-      .groupBy(col("qid"), col("sub"), col("cid"))
-      .agg(sum((col("v") - col("cv")) * (col("v") - col("cv"))).as("qd2"))
-      .join(qBuckets, "qid")
-    val approx = codes.join(broadcast(qd), Seq("bucket", "sub", "cid"))
-      .filter(col("qid") =!= col("vid"))
-      .groupBy(col("qid"), col("vid"))
-      .agg(sum(col("qd2")).as("adc_d2"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc_d2").asc, col("vid").asc)
-    approx.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vid").as("neighbor_id"), col("adc_d2"), col("rank"))
-  }
+      qBuckets: DataFrame, k: Int): DataFrame =
+    adc(distanceTables(qSub, cb).join(qBuckets, "qid"), codes,
+      Seq("bucket", "sub", "cid"), k)
 
   /** Exact re-rank of an ADC shortlist — the refine step of a
     * production IVF-PQ search (ADC distances are quantization
@@ -118,22 +105,17 @@ object Pq {
     * from [[adcTopK]]/[[adcTopKBucketed]] at k' > k; this fetches raw
     * vectors for shortlist rows only — the corpus scan is one
     * broadcast-probed equi-join on vid (q·k' rows against the corpus,
-    * never a second distance scan) — and re-ranks on the exact round-6
-    * cosine with id tiebreak. Returns (qid, neighbor_id, cosine,
+    * never a second distance scan) — and re-ranks like every exact ANN
+    * search ([[Ann.nearest]]). Returns (qid, neighbor_id, cosine,
     * rank ≤ k). */
   def rerankExact(shortlist: DataFrame, queries: DataFrame, corpus: DataFrame,
       k: Int): DataFrame = {
     val pairs = shortlist.select(col("qid"), col("neighbor_id"))
       .join(queries.select(col("qid"), col("qvec")), "qid")
-    val scored = corpus.select(col("vid").as("neighbor_id"), col("vec"))
+    Ann.nearest(corpus.select(col("vid").as("neighbor_id"), col("vec"))
       .join(broadcast(pairs), "neighbor_id")
       .select(col("qid"), col("neighbor_id"),
-        graft.core.Exprs.roundHalfUp(
-          Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+        Vectors.cos6(col("qvec"), col("vec")).as("cosine")), "qid", k)
   }
 
   /** ADC top-k: per-query squared-L2 distance tables against the
@@ -142,18 +124,24 @@ object Pq {
     * only the (vid, sub, cid) code table. Self-matches (qid = vid) are
     * excluded. Returns (qid, neighbor_id, adc_d2, rank ≤ k) with
     * (distance asc, id asc) deterministic ranking. */
-  def adcTopK(qSub: DataFrame, cb: DataFrame, codes: DataFrame, k: Int): DataFrame = {
-    val qd = qSub.select(col("vid").as("qid"), col("sub"), col("dim"), col("v"))
+  def adcTopK(qSub: DataFrame, cb: DataFrame, codes: DataFrame, k: Int): DataFrame =
+    adc(distanceTables(qSub, cb), codes, Seq("sub", "cid"), k)
+
+  /** Per-query squared-L2 distance tables (qid, sub, cid, qd2). */
+  private def distanceTables(qSub: DataFrame, cb: DataFrame): DataFrame =
+    qSub.select(col("vid").as("qid"), col("sub"), col("dim"), col("v"))
       .join(broadcast(cb), Seq("sub", "dim"))
       .groupBy(col("qid"), col("sub"), col("cid"))
       .agg(sum((col("v") - col("cv")) * (col("v") - col("cv"))).as("qd2"))
-    val approx = codes.join(broadcast(qd), Seq("sub", "cid"))
-      .filter(col("qid") =!= col("vid"))
-      .groupBy(col("qid"), col("vid"))
-      .agg(sum(col("qd2")).as("adc_d2"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc_d2").asc, col("vid").asc)
-    approx.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+
+  /** The ADC scan and ranking shared by [[adcTopK]] and
+    * [[adcTopKBucketed]]: codes meet the broadcast tables on `keys`. */
+  private def adc(qd: DataFrame, codes: DataFrame, keys: Seq[String],
+      k: Int): DataFrame =
+    Ranked.topK(codes.join(broadcast(qd), keys)
+        .filter(col("qid") =!= col("vid"))
+        .groupBy(col("qid"), col("vid"))
+        .agg(sum(col("qd2")).as("adc_d2")),
+        Seq(col("qid")), Seq(col("adc_d2").asc, col("vid").asc), k)
       .select(col("qid"), col("vid").as("neighbor_id"), col("adc_d2"), col("rank"))
-  }
 }

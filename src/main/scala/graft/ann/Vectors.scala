@@ -30,6 +30,13 @@ object Vectors {
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.CosineSim.ofColumns(a, b)
 
+  /** The engine-portable score every ANN ranking and probe uses: the
+    * cosine rounded half-up at 6 decimals, so a last-ulp difference
+    * between two engines' float sums changes no comparison unless it
+    * straddles a rounding boundary; callers break ties by id. */
+  def cos6(a: Column, b: Column): Column =
+    graft.core.Exprs.roundHalfUp(cosine(a, b), 6)
+
   /** Symmetric per-vector int8 scalar quantization — the 4× embedding
     * storage/bandwidth cut an ANN index takes at corpus scale. scale =
     * max|x|/127; q_i = floor(x_i/scale + 0.5) (the engine-portable

@@ -1,10 +1,12 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ArgBest
 
-/** Top-1-per-group machinery.
+/** Top-per-group machinery: one winner per group ([[Ranked.argmax]])
+  * or the first k ([[Ranked.topK]]).
   *
   * The reference implements every "dominant" pick as an ORDER BY cursor +
   * take-first-row-per-group (SortData, gSSURGO_CreateSoilMap.py:456-509).
@@ -39,6 +41,23 @@ object Ranked {
       .agg(ArgBest.max(order, payload).as("__win"))
       .select(groupCols.map(col) ++ payload.map { case (n, _) => col(s"__win.$n").as(n) }: _*)
   }
+
+  /** The `k` first rows of each `by` group under `order`, numbered
+    * 1..k in a long `rank` column — the one top-k-per-group kernel, a
+    * `row_number` window. For k up to Spark's window-group-limit
+    * threshold the `rank <= k` filter plans as a partial
+    * WindowGroupLimit before the exchange and a final one after it, so
+    * the shuffle carries at most k rows per group and map partition,
+    * every input column included. `order` must end in a unique key (an
+    * id tiebreak) for the pick to be deterministic. A pre-limit by a
+    * finer key (`by` plus a salt) followed by the group's own topK is
+    * exact: the group's top k lie inside the union of the finer
+    * groups' top k. */
+  def topK(df: DataFrame, by: Seq[Column], order: Seq[Column], k: Int,
+      rank: String = "rank"): DataFrame =
+    df.withColumn(rank,
+        row_number().over(Window.partitionBy(by: _*).orderBy(order: _*)).cast("long"))
+      .filter(col(rank) <= k)
 
   /** Keep every row tied for the top of `orderCol` within its group —
     * the reference's multi-dominant-component tie retention

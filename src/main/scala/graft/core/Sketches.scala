@@ -123,7 +123,6 @@ object Sketches {
   def kmvSetOps(df: DataFrame, setCol: String, elemCol: String,
       k: Int = 1024): DataFrame = {
     val s = df.sparkSession
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val d = df.filter(col(setCol).isNotNull && col(elemCol).isNotNull)
       .select(col(setCol).cast("string").as("g"), col(elemCol).as("e"))
@@ -141,8 +140,7 @@ object Sketches {
     val h = d.select(col("g"), xxhash64(col("e")).as("h")).distinct()
     def bottomK(hashed: org.apache.spark.sql.DataFrame,
         part: Seq[String]): Array[((String, Long), Long)] = {
-      val pw = Window.partitionBy(part.map(col): _*).orderBy(col("h").asc)
-      hashed.withColumn("rn", row_number().over(pw)).filter(col("rn") <= k)
+      Ranked.topK(hashed, part.map(col), Seq(col("h").asc), k, "rn")
         .select(col("g"), col("h"),
           (if (part.contains("shard")) col("shard") else lit(0L)).as("sh"))
         .collect().map(r => ((r.getString(0), r.getLong(2)), r.getLong(1)))

@@ -74,20 +74,6 @@ object Dedup {
     shingleRowsAll(docs, idCol, textCol, n)
       .select(col("did"), xxhash64(col("s")).as("h")).distinct()
 
-  /** MinHash signature: k seeded-xxhash64 minima over the shingle set
-    * (array-expression form, used for ad-hoc column-level work).
-    * Lane construction REPLICATES [[laneSignature]] (a column
-    * expression cannot call the DataFrame-level helper) — each
-    * shingle is digested once and lane i takes min(xxhash64(i,
-    * digest)) — so signatures from the two APIs are band-compatible;
-    * any seeding change to laneSignature must be mirrored here by
-    * hand. */
-  def minhashSignature(shingles: Column, k: Int): Column = {
-    val digests = transform(shingles, sh => xxhash64(sh))
-    transform(sequence(lit(0), lit(k - 1)),
-      s => array_min(transform(digests, h => xxhash64(s, h))))
-  }
-
   /** Row-local distinct shingle digests of a text column — the
     * STREAMING-SAFE form of [[shingleDigests]] (an array per row, no
     * explode/groupBy, so it evaluates inside an append-mode stream with
@@ -113,8 +99,10 @@ object Dedup {
     * array_min(xxhash64(i, digest)), REPLICATING [[laneSignature]]'s
     * lane definition exactly (INT literal seed, LONG digest — xxhash64
     * hashes by input type, so the seed must stay IntegerType for the
-    * lanes to be band-compatible); any seeding change there must be
-    * mirrored here and in [[minhashSignature]] by hand. */
+    * lanes to be band-compatible). A column expression cannot call the
+    * DataFrame helper; TrainOpsSpec gates that the two forms emit
+    * identical band rows. Over a shingle array, pass
+    * `transform(shingles, xxhash64)` as `digests`. */
   def signatureColumn(digests: Column, k: Int): Column =
     transform(sequence(lit(0), lit(k - 1)),
       i => array_min(transform(digests, h => xxhash64(i, h))))
@@ -179,10 +167,8 @@ object Dedup {
     * min(xxhash64(i, digest)). This is THE lane definition: banding
     * ([[minhashBanded]]) and calibration ([[minhashJaccardEstimate]])
     * must stay lane-identical for their signatures to be comparable,
-    * so both CALL here; [[minhashSignature]]'s column-expression form
-    * cannot call a DataFrame helper and REPLICATES these lanes — any
-    * seeding change must be applied there by hand (its scaladoc
-    * carries the matching warning). */
+    * so both CALL here; [[signatureColumn]] is the row-local form of
+    * the same lanes. */
   private def laneSignature(hashed: DataFrame, k: Int): DataFrame = {
     val lanes = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"mh$i"))
     hashed.groupBy(col("did")).agg(lanes.head, lanes.tail: _*)

@@ -214,20 +214,9 @@ object Decontam {
   def semanticContaminated(corpus: DataFrame, bench: DataFrame,
       centroids: DataFrame, nprobe: Int = 2,
       threshold: Double = 0.95): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.ann.{Ann, Vectors}
-    import graft.core.Exprs
-    val ca = Ann.ivfAssign(corpus, centroids)
-    val pw = Window.partitionBy(col("qid"))
-      .orderBy(col("pcos").desc, col("cid").asc)
-    val probes = bench.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qvec"), col("cid"),
-        Exprs.roundHalfUp(Vectors.cosine(col("qvec"), col("cvec")), 6).as("pcos"))
-      .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qvec"), col("cid"))
-    probes.join(ca, "cid")
-      .select(col("qid"), col("vid"),
-        Exprs.roundHalfUp(Vectors.cosine(col("qvec"), col("vec")), 6).as("cosine"))
+    Ann.queryProbes(bench, centroids, nprobe).join(Ann.ivfAssign(corpus, centroids), "cid")
+      .select(col("qid"), col("vid"), Vectors.cos6(col("qvec"), col("vec")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .groupBy(col("vid"))
       .agg(max(col("cosine")).as("max_cosine"),

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.PrefixSum
+import graft.core.{PrefixSum, Ranked}
 import graft.text.TextAnalysis
 
 /** Deterministic corpus partitioning for training pipelines: hashed
@@ -119,16 +119,17 @@ object Sampling {
     require(k >= 1, s"stratifiedSample: k=$k must be positive")
     require(fanout >= 1, s"stratifiedSample: fanout=$fanout must be positive")
     val h = hash32(col(idCol))
+    // the salted pre-rank stays a bare int window: ScaleSpec pins its
+    // `_salt_rank` bound in the optimized plan, which Ranked.topK's
+    // long cast would rename
     val pre = Window.partitionBy(col(domainCol), pmod(h, lit(fanout.toLong)))
       .orderBy(h, col(idCol))
-    val w = Window.partitionBy(col(domainCol)).orderBy(h, col(idCol))
-    df.filter(col(idCol).isNotNull)
-      .filter(coalesce(assert_true(col(idCol) >= 0,
-        lit(s"stratifiedSample: negative $idCol unsupported (hash32)")), lit(true)))
-      .withColumn("_salt_rank", row_number().over(pre))
-      .filter(col("_salt_rank") <= k).drop("_salt_rank")
-      .withColumn("stratum_rank", row_number().over(w).cast("long"))
-      .filter(col("stratum_rank") <= k)
+    Ranked.topK(df.filter(col(idCol).isNotNull)
+        .filter(coalesce(assert_true(col(idCol) >= 0,
+          lit(s"stratifiedSample: negative $idCol unsupported (hash32)")), lit(true)))
+        .withColumn("_salt_rank", row_number().over(pre))
+        .filter(col("_salt_rank") <= k).drop("_salt_rank"),
+      Seq(col(domainCol)), Seq(h, col(idCol)), k, "stratum_rank")
   }
 
   /** Priority sampling (Duffield, Lund & Thorup, JACM 54(6), 2007): the

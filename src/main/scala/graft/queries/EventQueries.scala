@@ -574,17 +574,14 @@ object EventQueries extends QuerySet {
     // never sees it.
     Q("e08_trending",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val byUser = evts(s, dir)
           .filter(col("user_id").isNotNull)
           .select(floor(col("ts_ms") / 86400000).cast("long").as("day"),
             col("event_type"), col("user_id"))
           .groupBy(col("day"), col("event_type"), col("user_id"))
           .agg(count(lit(1)).as("n_events"))
-        val w = Window.partitionBy(col("day"), col("event_type"))
-          .orderBy(col("n_events").desc, col("user_id").asc)
-        byUser.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 3)
+        graft.core.Ranked.topK(byUser, Seq(col("day"), col("event_type")),
+          Seq(col("n_events").desc, col("user_id").asc), 3)
       },
       Some(s"""WITH $eCte,
               |u AS (SELECT ts_ms//86400000 AS day, event_type, user_id,

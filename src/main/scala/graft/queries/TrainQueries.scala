@@ -1298,16 +1298,13 @@ object TrainQueries extends QuerySet {
     // sees the verified pair set, never the corpus.
     Q("d19_similar_topk",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val pairs = lshPairs(s, dir)
         val sym = pairs
           .select(col("id_a").as("doc_id"), col("id_b").as("sim_id"), col("jaccard"))
           .unionByName(pairs
             .select(col("id_b").as("doc_id"), col("id_a").as("sim_id"), col("jaccard")))
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("jaccard").desc, col("sim_id").asc)
-        sym.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 3)
+        graft.core.Ranked.topK(sym, Seq(col("doc_id")),
+          Seq(col("jaccard").desc, col("sim_id").asc), 3)
       },
       Some(s"""WITH $jaccard3PlantedCtes,
              |sym AS (SELECT id_a AS doc_id, id_b AS sim_id, jaccard FROM jp
@@ -3186,8 +3183,8 @@ object TrainQueries extends QuerySet {
     // the base index (all but the last 50 vectors) is LANDED once as a
     // cid-partitioned parquet lake (Ann.indexLakeWrite, the s18 hive
     // layout applied to ANN artifacts); the 50-vector batch derives
-    // its probed bucket set (Ann.probedCids — ≤ batch·nprobe ints,
-    // driver-side by design), reads ONLY those partitions
+    // its probed bucket set (Ann.cidsOf its probes — ≤ batch·nprobe
+    // ints, driver-side by design), reads ONLY those partitions
     // (PartitionFilters binding + files-read ∝ probed, both pinned in
     // ScaleSpec), and runs graphInsert on the SLICE. Output equals the
     // full-index repair restricted to the probed buckets — forward

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Materialize
 
+import graft.core.Ranked
+
 /** Text-analysis operators for large-scale training-data pipelines
   * (builder mandate; not present in the reference, which is tabular
   * only). All are pure Catalyst expression trees over a text column —
@@ -161,7 +163,6 @@ object TextAnalysis {
     * corpus count is a broadcast). */
   def tfIdfTopK(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // tf feeds BOTH the doc-frequency aggregate and the score join —
     // unmaterialized, the corpus tokenize+aggregate (the dominant cost)
     // runs twice (plan-verified). Lazy localCheckpoint computes it once
@@ -172,11 +173,9 @@ object TextAnalysis {
       eager = false)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val total = docs.agg(count(lit(1)).as("n_total"))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("score").desc, col("term").asc)
-    tf.join(dfreq, "term").crossJoin(broadcast(total))
-      .withColumn("score", col("tf") * expr("(n_total * 10000) div df"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranked.topK(tf.join(dfreq, "term").crossJoin(broadcast(total))
+        .withColumn("score", col("tf") * expr("(n_total * 10000) div df")),
+        Seq(col(idCol)), Seq(col("score").desc, col("term").asc), k)
       .select(col(idCol), col("term"), col("tf"), col("df"), col("score"), col("rank"))
   }
 
@@ -334,7 +333,6 @@ object TextAnalysis {
     * posting list never funnels through one partition's full sort. */
   def keywordSearch(docs: DataFrame, idCol: String, textCol: String,
       queries: Seq[(String, Seq[String])], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     import spark.implicits._
     val tf = Materialize.checkpoint( // feeds df-agg AND the score join
@@ -349,13 +347,10 @@ object TextAnalysis {
       .crossJoin(broadcast(total))
       .groupBy(col("query_id"), col(idCol))
       .agg(sum(col("tf") * expr("(n_total * 10000) div df")).as("score"))
-    val pre = Window.partitionBy(col("query_id"), spark_partition_id())
-      .orderBy(col("score").desc, col(idCol).asc)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol).asc)
-    cand.withColumn("_p", row_number().over(pre)).filter(col("_p") <= k).drop("_p")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    val order = Seq(col("score").desc, col(idCol).asc)
+    val pre = Ranked.topK(cand, Seq(col("query_id"), spark_partition_id()), order, k, "_p")
+      .drop("_p")
+    Ranked.topK(pre, Seq(col("query_id")), order, k)
       .select(col("query_id"), col(idCol), col("score"), col("rank"))
   }
 

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * second builder chain is how the confs drifted apart before. Every
   * checkpoint and every AQE / shuffle-partition scope goes through
   * `org.apache.spark.sql.graft.Materialize`, every memo and scratch
-  * root through [[GraftSession]]'s state, and every driver artifact
-  * through the one JSON writer, for the same reason. */
+  * root through [[GraftSession]]'s state, every ANN top-k through
+  * `Ranked.topK`, and every driver artifact through the one JSON
+  * writer, for the same reason. */
 class GraftSessionSpec extends AnyFunSuite {
 
   private def scalaSources(root: String): Seq[Path] =
@@ -57,6 +58,17 @@ class GraftSessionSpec extends AnyFunSuite {
     val found = strays("Materialize.scala", Seq(".persist(", ".cache()"),
       (file, code) => file == "Tables.scala" && code.contains(".cache()"))
     assert(found.isEmpty, s"raw caches outside Materialize:\n${found.mkString("\n")}")
+  }
+
+  test("top-k windows in graft/ann and Decontam only through Ranked.topK") {
+    val scope = scalaSources("src/main/scala/graft/ann") :+
+      Paths.get("src/main/scala/graft/pipeline/Decontam.scala")
+    val found = for {
+      p <- scope
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if line.contains("row_number(")
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(found.isEmpty, s"top-k windows outside Ranked.topK:\n${found.mkString("\n")}")
   }
 
   test("driver artifacts under src/main only through the Jackson writer in Json.scala") {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.graft.ArgBest
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Ranked
 import graft.sdv.SdvAgg
 
 /** Randomized property tests (fixed seed) mirroring the
@@ -96,6 +97,13 @@ class PropertySpec extends AnyFunSuite {
       Seq("p1" -> col("p1"), "p2" -> col("p2")))
     def show(d: org.apache.spark.sql.DataFrame): Seq[String] =
       d.collect().map(_.toString).toSeq.sorted
+    // and Ranked.topK equals a driver-side sort-and-take: by g over k2
+    // desc (many ties, nulls last) and the unique id asc
+    val topOrder = Seq(col("k2").desc, col("id").asc)
+    val topTaken = rows.groupBy(_.getInt(0)).toSeq.flatMap { case (g, rs) =>
+      rs.sortBy(r => (r.isNullAt(2), if (r.isNullAt(2)) 0L else -r.getLong(2), r.getLong(3)))
+        .take(3).zipWithIndex.map { case (r, i) => Row(g, r.getLong(3), i + 1L).toString }
+    }.sorted
     val answers = Seq(1, 3, 8).map { parts =>
       val d = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
       val g = d.groupBy(col("g"))
@@ -113,7 +121,10 @@ class PropertySpec extends AnyFunSuite {
       }
       val all = picks :+ (show(flatExtremes) -> show(structExtremes))
       all.foreach { case (flat, viaStruct) => assert(flat === viaStruct, s"at $parts partitions") }
-      all.map(_._1)
+      val top = show(Ranked.topK(d, Seq(col("g")), topOrder, 3)
+        .select(col("g"), col("id"), col("rank")))
+      assert(top === topTaken, s"topK at $parts partitions")
+      all.map(_._1) :+ top
     }
     assert(answers.distinct.size === 1, "answers depend on the partition count")
   }

@@ -1109,7 +1109,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(pcidDirs("assigned").size <= K && pcidDirs("assigned").nonEmpty,
       s"directory count must be bounded by K=$K: ${pcidDirs("assigned")}")
     val batch = corpus.filter(col("vid") >= 55)
-    val probed = Ann.probedCids(batch, cents, nprobe = 2)
+    val probed = Ann.cidsOf(Ann.probes(batch, cents, nprobe = 2))
     assert(probed.nonEmpty && probed.size <= 10,
       s"probed set must be batch-bounded: $probed")
     val allCids = spark.read.parquet(s"$tmp/assigned")
@@ -1146,7 +1146,7 @@ class ScaleSpec extends AnyFunSuite {
     // the n25 untouched-level claim: an EMPTY batch (a tower level
     // whose stride sliver no batch vid qualifies for) derives an
     // empty probed set and the pruned read touches ZERO files
-    val emptyProbe = Ann.probedCids(batch.filter(col("vid") < 0), cents, 2)
+    val emptyProbe = Ann.cidsOf(Ann.probes(batch.filter(col("vid") < 0), cents, 2))
     assert(emptyProbe.isEmpty)
     val (aE, gE) = Ann.indexLakeProbedSlice(spark, tmp, emptyProbe, buckets = K)
     assert(aE.count() === 0L && gE.count() === 0L)

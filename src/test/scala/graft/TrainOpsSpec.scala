@@ -686,6 +686,36 @@ class TrainOpsSpec extends AnyFunSuite {
     assert(graph.size === 10) // 5 vectors x top-2
   }
 
+  test("the pr=1 probe is ivfAssign's argmax, and knnGraph is the nprobe=1 multiprobe graph") {
+    import graft.ann.Ann
+    val s = StructType(Seq(StructField("vid", LongType),
+      StructField("vec", ArrayType(DoubleType))))
+    val corpus = df(s, (1L to 12L).map { i =>
+      val e = (i % 5).toDouble / 10
+      Row(i, (i % 3) match {
+        case 0 => Seq(1.0, e, 0.0)
+        case 1 => Seq(e, 1.0, 0.0)
+        case _ => Seq(0.0, e, 1.0)
+      })
+    })
+    // duplicated centroid vectors, the larger cid listed first: every
+    // vector nearest to a duplicated pair ties on cos6, and only the
+    // cid-asc tiebreak picks the bucket
+    val cS = StructType(Seq(StructField("cid", LongType),
+      StructField("cvec", ArrayType(DoubleType))))
+    val cents = df(cS, Seq(
+      Row(4L, Seq(0.0, 0.0, 1.0)), Row(3L, Seq(0.0, 0.0, 1.0)),
+      Row(1L, Seq(1.0, 0.0, 0.0)), Row(0L, Seq(1.0, 0.0, 0.0)),
+      Row(2L, Seq(0.0, 1.0, 0.0))))
+    val assigned = rowsOf(Ann.ivfAssign(corpus, cents).select(col("vid"), col("cid")))
+    val probed = rowsOf(Ann.probes(corpus, cents, 1).select(col("vid"), col("cid")))
+    assert(probed === assigned)
+    assert(assigned.map(_(1)).toSet === Set(0L, 2L, 3L), "fixture has no cos6 tie")
+    val graph = rowsOf(Ann.knnGraph(corpus, cents, k = 2))
+    assert(graph.nonEmpty)
+    assert(graph === rowsOf(Ann.knnGraphMultiProbe(corpus, cents, k = 2, nprobe = 1)))
+  }
+
   test("graphSearch crosses a bucket boundary single-bucket IVF cannot") {
     import graft.ann.Ann
     val s = StructType(Seq(StructField("vid", LongType),
